@@ -49,33 +49,7 @@ object Bench {
     // never sets it, so driver runs always time the full surface.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE size reduce stages by bytes instead of flooring them at
-      // defaultParallelism: at small SF a 32-task reduce over a few MB is
-      // pure per-task overhead (measured 2-4x per-stage inflation), and on
-      // a real cluster data-sized reduce stages are what you want anyway.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // 71 queries × ~10 codegen units far exceeds the default 100-entry
-      // compiled-class cache; once it thrashes, janino recompiles inside
-      // EVERY task (jstack showed 32 tasks serialized on CodeGenerator
-      // .compile). One compile is ~100 ms of driver CPU; recompiling per
-      // task per stage dominated small-SF stage time.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Tungsten page size is derived from heap/cores (~10-20 MB here);
-      // every small hash-aggregate task then allocates (and zeroes) a
-      // multi-MB long[] page it barely fills — profiled as
-      // BytesToBytesMap.allocate hot frames + young-gen churn. 2 MB pages
-      // fit this profile; a cluster job with big partitions would keep
-      // the default.
-      .config("spark.buffer.pageSize", "2m")
-      // Pin the tz so events epoch arithmetic can't drift with the host
-      // (Verify and the specs already pin it; the bench should measure
-      // the same plans they verify).
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session(cpus, "ERROR")
     // r16 post-mortem: the driver's 2000-char combined tail was 100%
     // per-execution `ResolveWriteToStream` WARN spam from the streaming
     // queries — stderr passes through sbt in real time, so minutes of
@@ -83,7 +57,6 @@ object Bench {
     // attempt. The bench prints nothing it needs at WARN: run the whole
     // session at ERROR, and pin the two known spammers explicitly in
     // case anything resets the root level mid-run.
-    spark.sparkContext.setLogLevel("ERROR")
     try {
       import org.apache.logging.log4j.{Level, LogManager}
       import org.apache.logging.log4j.core.config.Configurator

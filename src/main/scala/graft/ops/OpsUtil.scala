@@ -54,32 +54,21 @@ object OpsUtil {
       .orderBy(col("h"), tie)
       .limit(k)
 
-  /** Multiset equality of two frames as ONE Spark action. The fixture
-    * audits used to run `a.exceptAll(b).isEmpty && b.exceptAll(a)
-    * .isEmpty` — two sequential jobs per audit, each paying its own
-    * scheduling + AQE round trips, which at the bench's tiny SF is
-    * most of the audit's wall time. The union form is the same
-    * multiset test (both directions empty ⟺ their union is empty)
-    * planned as one job; at cluster scale it is also better — one
-    * pass over each input instead of two. */
-  def sameRows(a: DataFrame, b: DataFrame): Boolean =
-    a.exceptAll(b).unionAll(b.exceptAll(a)).isEmpty
-
   /** Multiset equality of two BOUNDED frames, decided on the driver.
     *
     * For the lakehouse/MV fixture audits both sides are tiny BY
     * CONSTRUCTION at any data scale — view-grain aggregates (≤ the
     * group count, 6–12 rows) or constant-size fixture tables (≤ ~50
     * rows from GraftDocsSource): the frames never grow with the input
-    * dir, so two collects are scale-safe, while the distributed
-    * [[sameRows]] plan (two exceptAll aggregates, each shuffling both
-    * inputs, unioned under AQE) paid ~6 query-stage jobs of pure
+    * dir, so two collects are scale-safe, while a distributed
+    * multiset test (`a.exceptAll(b)` and `b.exceptAll(a)`, each
+    * shuffling both inputs) paid ~6 query-stage jobs of pure
     * scheduling per audit at bench SF (guide §1.2). Row.equals handles
     * NaN and compares decimals by value, matching exceptAll's
     * null-safe semantics for these schemas; both sides share a schema
-    * at identical types, so map-key hashing is consistent. Keep
-    * [[sameRows]] for any comparison whose inputs scale with the
-    * corpus. */
+    * at identical types, so map-key hashing is consistent. A
+    * comparison whose inputs scale with the corpus must use exceptAll
+    * instead. */
   def sameRowsLocal(a: DataFrame, b: DataFrame): Boolean = {
     val ca = a.collect(); val cb = b.collect()
     ca.length == cb.length && {

@@ -106,13 +106,9 @@ object Round12 {
     * [[OpsUtil.driverLiteral]] so the scratch warehouse and its two
     * catalog confs can be torn down before returning — repeated calls
     * leak neither /tmp dirs nor session-conf entries. */
-  val q214RowLevelMerge: Q = (spark, dir) => {
-    import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_rl_q214")
-    val cat = "rl_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q214RowLevelMerge: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "rl_q214") { (cat, wh) =>
+      import spark.implicits._
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .writeTo(s"$cat.corpus").create()
@@ -122,24 +118,19 @@ object Round12 {
         .withColumn("title", concat(lit("upd-"), $"doc_id"))
         .withColumn("n_words", ($"n_words" + 100).cast("int"))
         .createOrReplaceTempView("q214_updates")
-      spark.sql(
+      try spark.sql(
         s"""MERGE INTO $cat.corpus t USING q214_updates s ON t.doc_id = s.doc_id
            |WHEN MATCHED AND s.doc_id % 5 = 0 THEN DELETE
            |WHEN MATCHED THEN UPDATE SET title = s.title, n_words = s.n_words
            |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      finally spark.catalog.dropTempView("q214_updates")
       spark.sql(s"UPDATE $cat.corpus SET n_words = 0 WHERE doc_id < 5")
       spark.sql(s"DELETE FROM $cat.corpus WHERE doc_id >= 35")
       OpsUtil.driverLiteral(
         spark.table(s"$cat.corpus")
           .select($"doc_id", $"title", $"fp", $"n_words")
           .orderBy($"doc_id"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.catalog.dropTempView("q214_updates")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   val queries: Map[String, Q] = Map(
     "q213_model_scoring" -> q213ModelScoring,

@@ -29,19 +29,11 @@ import graft.sources.{GraftTableMeta, GraftVersions}
 object Round13 {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Build the round's shared version history in a fresh scratch
-    * warehouse: v0 empty (CREATE versioned), v1 = rows [0,30) (CTAS
-    * append), v2 = UPDATE (n_words=0 where doc_id<5), v3 = DELETE
-    * (doc_id>=20), v4 = INSERT of generative rows [40,45). Returns the
-    * catalog name; the caller reads and must clean up via [[teardown]].
-    */
-  private def buildHistory(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_ver_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  /** Build the round's shared version history as `$cat.t`: v0 empty
+    * (CREATE versioned), v1 = rows [0,30) (CTAS append), v2 = UPDATE
+    * (n_words=0 where doc_id<5), v3 = DELETE (doc_id>=20), v4 = INSERT
+    * of generative rows [40,45). */
+  private def buildHistory(spark: SparkSession, cat: String): Unit = {
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", "30").load()
       .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -50,17 +42,9 @@ object Round13 {
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", "45").load()
       .filter(col("doc_id") >= 40)
-      .createOrReplaceTempView(s"${tag}_inserts")
-    spark.sql(s"INSERT INTO $cat.t SELECT * FROM ${tag}_inserts")
-    spark.catalog.dropTempView(s"${tag}_inserts")
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
+      .createOrReplaceTempView(s"${cat}_inserts")
+    spark.sql(s"INSERT INTO $cat.t SELECT * FROM ${cat}_inserts")
+    spark.catalog.dropTempView(s"${cat}_inserts")
   }
 
   // ---------------------------------------------------------------------
@@ -74,9 +58,9 @@ object Round13 {
     * agree with the closed-form history. Scale shape: each snapshot
     * read is a manifest-scoped file scan + one map-side-combined global
     * aggregate; nothing shuffles wider than one row per version. */
-  val q216TimeTravel: Q = (spark, dir) => {
-    val (cat, wh) = buildHistory(spark, "q216")
-    try {
+  val q216TimeTravel: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q216") { (cat, wh) =>
+      buildHistory(spark, cat)
       val log = GraftVersions.listVersions(wh.resolve("t"))
       val perVersion = log.map { v =>
         spark.sql(
@@ -87,8 +71,7 @@ object Round13 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(perVersion.orderBy("version"))
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q217: version-diff CDC — what changed between consecutive snapshots
@@ -104,9 +87,9 @@ object Round13 {
     * file-diff prunes it — only files ADDED or REMOVED between the two
     * manifests can contain changed rows, so each EXCEPT scans the
     * changed files, not the corpus. */
-  val q217VersionChanges: Q = (spark, dir) => {
-    val (cat, wh) = buildHistory(spark, "q217")
-    try {
+  val q217VersionChanges: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q217") { (cat, wh) =>
+      buildHistory(spark, cat)
       val log = GraftVersions.listVersions(wh.resolve("t"))
       val transitions = log.sliding(2).map { case Seq(a, b) =>
         def snap(v: Long) = spark.sql(
@@ -124,8 +107,7 @@ object Round13 {
       OpsUtil.driverLiteral(
         transitions.toDF("to_version", "op", "rows_added", "rows_removed",
           "words_delta").orderBy("to_version"))
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q218: snapshot retention — vacuum expires history, live data intact
@@ -139,9 +121,9 @@ object Round13 {
     * deleted. Cleanup work is proportional to #files (manifest set
     * difference), never a data rewrite — the property that makes
     * retention affordable on a 100 TB corpus. */
-  val q218SnapshotRetention: Q = (spark, dir) => {
-    val (cat, wh) = buildHistory(spark, "q218")
-    try {
+  val q218SnapshotRetention: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q218") { (cat, wh) =>
+      buildHistory(spark, cat)
       val tdir = wh.resolve("t")
       val before = GraftVersions.listVersionNumbers(tdir)
       val stats = GraftVersions.vacuum(tdir, keepLast = 2)
@@ -170,8 +152,7 @@ object Round13 {
         "oldest_retained", "newest_retained", "expired_read_fails",
         "disk_matches_manifests", "oldest_rows", "oldest_sum_words",
         "live_rows", "live_sum_words"))
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q219: the version feed, oracle-checked — streaming on the verify bar
@@ -189,14 +170,11 @@ object Round13 {
     * missed commit would deflate them). Both drains are hard-bounded:
     * a feed that fails to terminate is stopped and thrown, never hung.
     */
-  val q219VersionFeed: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q219")
-    val sink = Files.createTempDirectory("graft_feed_q219")
-    val cat = "q219_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-      def insertRange(lo: Int, hi: Int): Unit = {
+  val q219VersionFeed: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q219") { (cat, wh) =>
+      val sink = Scratch.dir(wh, "feed")
+      // unlike Scratch.insertRange: one file per source partition
+      def appendRange(lo: Int, hi: Int): Unit = {
         spark.read.format("graft.sources.GraftDocsSource")
           .option("rows", hi.toString).load()
           .filter(col("doc_id") >= lo)
@@ -207,7 +185,7 @@ object Round13 {
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
-      insertRange(10, 12)                                   // v2
+      appendRange(10, 12)                                   // v2
       def drain(): Unit = {
         val q = spark.readStream.table(s"$cat.t")
           .writeStream.format("parquet")
@@ -215,10 +193,7 @@ object Round13 {
           .option("checkpointLocation", s"$sink/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        val done = q.awaitTermination(180000)
-        if (!done) { q.stop(); throw new IllegalStateException(
-          "q219: version-feed drain did not terminate under AvailableNow") }
-        q.exception.foreach(throw _)
+        Scratch.drain(q, "q219: version-feed")
       }
       def sinkState(phase: String): DataFrame =
         spark.read.parquet(s"$sink/data")
@@ -228,17 +203,11 @@ object Round13 {
             col("sum_words"))
       drain()
       val initial = OpsUtil.driverLiteral(sinkState("a_initial"))
-      insertRange(12, 15)                                   // v3
+      appendRange(12, 15)                                   // v3
       drain()
       val incr = OpsUtil.driverLiteral(sinkState("b_incremental"))
       initial.unionByName(incr).orderBy("phase")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q220: OPTIMIZE-style compaction as a dataChange=false commit
@@ -254,13 +223,9 @@ object Round13 {
     * Delta dataChange=false contract, caught by arithmetic). At
     * 100 TB this is the nightly OPTIMIZE: one read + one write of
     * live data, commit work proportional to #files, no log rewrite. */
-  val q220Compaction: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q220")
-    val sink = Files.createTempDirectory("graft_feed_q220")
-    val cat = "q220_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q220Compaction: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q220") { (cat, wh) =>
+      val sink = Scratch.dir(wh, "feed")
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -283,10 +248,7 @@ object Round13 {
         .option("checkpointLocation", s"$sink/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      val done = q.awaitTermination(180000)
-      if (!done) { q.stop(); throw new IllegalStateException(
-        "q220: version-feed drain did not terminate under AvailableNow") }
-      q.exception.foreach(throw _)
+      Scratch.drain(q, "q220: version-feed")
       val feed = spark.read.parquet(s"$sink/data")
         .agg(count(lit(1)).as("n"),
           coalesce(sum("n_words"), lit(0L)).as("w")).head()
@@ -297,13 +259,7 @@ object Round13 {
         feed.getLong(0), feed.getLong(1)
       )).toDF("files_before", "files_after", "live_rows", "live_sum_words",
         "precompact_rows", "feed_rows", "feed_sum_words"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q221: RESTORE — rewind a curated table, keeping the bad history
@@ -318,12 +274,8 @@ object Round13 {
     * (sharing its files), and the bad commits stay auditable in place.
     * The incident-recovery path every curated corpus eventually needs:
     * rewind is O(1) in data, and nothing is lost until vacuum. */
-  val q221Restore: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q221")
-    val cat = "q221_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q221Restore: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q221") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -344,12 +296,7 @@ object Round13 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(perVersion.orderBy("version"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q222: the history metadata table — the commit log from SQL
@@ -363,12 +310,8 @@ object Round13 {
     * partitions, the clamped insert min(8, 2)=2, compaction lands 1,
     * and restore re-references v1's 8. Audit-sized scan: one partition
     * over #versions manifest lines, never data. */
-  val q222History: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q222")
-    val cat = "q222_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q222History: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q222") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -383,12 +326,7 @@ object Round13 {
       OpsUtil.driverLiteral(spark.sql(
         s"""SELECT version, op, data_change, n_files
            |FROM $cat.t.history ORDER BY version""".stripMargin))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q223: file skipping — manifest min/max stats prune the scan
@@ -407,12 +345,8 @@ object Round13 {
     * counts are IN the output row: a pruning regression breaks the
     * oracle hash, not just a perf trend. At 100 TB this is the
     * difference between touching 3 files and 30,000. */
-  val q223FileSkipping: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q223")
-    val cat = "q223_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q223FileSkipping: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q223") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").option("partitions", "2").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -446,12 +380,7 @@ object Round13 {
       )).toDF("total_files", "planned_files_range", "rows_range",
         "sum_words_range", "files_after_compact", "planned_after_compact",
         "rows_after_compact", "sum_words_after_compact"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q224: OPTIMIZE ZORDER BY — multi-dimensional clustering for skipping
@@ -473,12 +402,8 @@ object Round13 {
     * MULTIPLE filter axes is the point of Z-order at 100 TB: a
     * single-column sort would make one axis perfect and leave the
     * other unprunable. */
-  val q224ZOrder: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q224")
-    val cat = "q224_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q224ZOrder: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q224") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "256").load()
         .repartition(8, col("fp"))
@@ -512,12 +437,7 @@ object Round13 {
       )).toDF("files_before", "planned_id_before", "planned_fp_before",
         "files_after", "planned_id_after", "planned_fp_after",
         "rows_id", "sum_words_id", "rows_fp", "sum_words_fp"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q225: streaming sink — exactly-once writes INTO a versioned table
@@ -538,14 +458,11 @@ object Round13 {
     * At 100 TB this is how a corpus ingests a firehose: commit work
     * per batch proportional to that batch's files, replay-safe with
     * no reconciliation job. */
-  val q225StreamSink: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q225")
-    val cp = Files.createTempDirectory("graft_ckpt_q225")
-    val cat = "q225_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-      def insertRange(lo: Int, hi: Int): Unit = {
+  val q225StreamSink: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q225") { (cat, wh) =>
+      val cp = Scratch.dir(wh, "ckpt")
+      // unlike Scratch.insertRange: one file per source partition
+      def appendRange(lo: Int, hi: Int): Unit = {
         spark.read.format("graft.sources.GraftDocsSource")
           .option("rows", hi.toString).load()
           .filter(col("doc_id") >= lo)
@@ -556,7 +473,7 @@ object Round13 {
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "20").load()
         .writeTo(s"$cat.src").tableProperty("versioned", "true").create()
-      insertRange(20, 30)
+      appendRange(20, 30)
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "0").option("partitions", "1").load()
         .writeTo(s"$cat.dst").tableProperty("versioned", "true").create()
@@ -566,13 +483,10 @@ object Round13 {
           .option("checkpointLocation", cp.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable(s"$cat.dst")
-        val done = q.awaitTermination(180000)
-        if (!done) { q.stop(); throw new IllegalStateException(
-          "q225: stream-sink drain did not terminate under AvailableNow") }
-        q.exception.foreach(throw _)
+        Scratch.drain(q, "q225: stream-sink")
       }
       drain()                       // consumes src v0(enable), v1, v2
-      insertRange(30, 35)           // src v3
+      appendRange(30, 35)           // src v3
       drain()                       // same checkpoint: v3 only
       val dstDir = wh.resolve("dst")
       val txns = GraftVersions.listVersions(dstDir).flatMap(_.txn)
@@ -585,13 +499,7 @@ object Round13 {
           lit(txns.map(_._1).distinct.length.toLong))
         .withColumn("max_epoch", lit(txns.map(_._2).max))
       OpsUtil.driverLiteral(stats)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q226: Bloom-filter file skipping — point lookups min/max can't prune
@@ -609,12 +517,8 @@ object Round13 {
     * point lookup opening 3 files and 30,000 — on exactly the columns
     * the layout was NOT sorted by. Planned counts ride in the hashed
     * row (q223 pattern). */
-  val q226BloomSkipping: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q226")
-    val cat = "q226_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q226BloomSkipping: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q226") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "256").option("partitions", "8").load()
         .writeTo(s"$cat.t")
@@ -641,12 +545,7 @@ object Round13 {
       )).toDF("total_files", "planned_fp_point", "rows_fp_point",
         "words_fp_point", "planned_title_point", "rows_title_point",
         "words_title_point", "planned_fp_missing", "rows_fp_missing"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q227: CHECK constraints — write-time data quality gates
@@ -663,12 +562,8 @@ object Round13 {
     * is Delta's constraint contract, and for a training corpus it is
     * the cheapest possible quality gate: bad rows are rejected at the
     * door instead of quarantined by a later audit pass over 100 TB. */
-  val q227CheckConstraints: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q227")
-    val cat = "q227_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q227CheckConstraints: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q227") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .writeTo(s"$cat.t")
@@ -701,12 +596,7 @@ object Round13 {
         state.getLong(0), state.getLong(1), state.getLong(2)
       )).toDF("bad_insert_rejected", "bad_update_rejected", "n_versions",
         "rows_live", "sum_words_live", "sum_ids_live"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q228: merge-on-read DELETE — deletion vectors instead of rewrites
@@ -728,12 +618,8 @@ object Round13 {
     * unchanged. At 100 TB: a delete touching 3 rows in each of 10⁵
     * gigabyte-files commits a few KB of masks instead of rewriting
     * 100 TB; the read-side cost is a sorted-mask skip per file. */
-  val q228MorDelete: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q228")
-    val cat = "q228_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q228MorDelete: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q228") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "40").load()
         .repartitionByRange(4, col("doc_id"))
@@ -766,12 +652,7 @@ object Round13 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(perVersion.orderBy("version"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q229: metadata-only DELETE — stats-provable deletes never touch data
@@ -794,12 +675,8 @@ object Round13 {
     * regression in either tier breaks the hash. Tier (3), masks, is
     * q228. At 100 TB, tier 1 is how `DELETE WHERE date < retention`
     * on a date-clustered corpus finishes in milliseconds. */
-  val q229MetadataDelete: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q229")
-    val cat = "q229_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q229MetadataDelete: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q229") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "40").load()
         .repartitionByRange(4, col("doc_id"))
@@ -831,12 +708,7 @@ object Round13 {
       val disk = diskFiles
       OpsUtil.driverLiteral(perVersion
         .withColumn("disk_files", lit(disk)).orderBy("version"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q230: manifest statistics drive the cost-based optimizer
@@ -855,12 +727,8 @@ object Round13 {
     * with NO hint — is asserted in DeletionVectorSpec; at 100 TB this
     * is what turns "join the corpus to a curated exclusion list" from
     * an accidental full shuffle into a broadcast hash join. */
-  val q230StatsCbo: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q230")
-    val cat = "q230_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q230StatsCbo: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q230") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "500").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -884,12 +752,7 @@ object Round13 {
         statsBefore, statsAfter, joined.getLong(0), joined.getLong(1)
       )).toDF("stats_rows_before", "stats_rows_after",
         "n_joined", "sum_words_joined"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q231: ALTER TABLE SET/UNSET TBLPROPERTIES — mutable table behavior
@@ -906,12 +769,8 @@ object Round13 {
     * execution path — same SQL, masks instead of rewrite — pinned by
     * `masked_rows` > 0 and `final_op`. Behavior, not just storage, is
     * what ALTER mutates; every count is closed-form over range(30). */
-  val q231AlterProperties: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q231")
-    val cat = "q231_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q231AlterProperties: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q231") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -954,12 +813,7 @@ object Round13 {
       )).toDF("alter_ok", "alter_rejected", "bad_insert_rejected",
         "versions_unmoved", "final_op", "masked_rows",
         "rows_live", "sum_ids_live", "sum_words_live"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q232: merge-on-read UPDATE — masks for old rows, tiny files for new
@@ -982,12 +836,8 @@ object Round13 {
     * to clean files. At 100 TB a scattered UPDATE commits masks plus
     * only the changed rows' bytes — vs copy-on-write's rewrite of
     * every touched gigabyte. */
-  val q232MorUpdate: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q232")
-    val cat = "q232_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q232MorUpdate: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q232") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "40").load()
         .repartitionByRange(4, col("doc_id"))
@@ -1016,12 +866,7 @@ object Round13 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(perVersion.orderBy("version"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q233: bucketed warehouse tables — storage-partitioned join on
@@ -1044,54 +889,48 @@ object Round13 {
     * that keeps corpus⋈corpus joins — dedup-pair resolution, split
     * assignment, CDC reconciliation — entirely off the wire, even as
     * the tables keep absorbing deletes and compactions. */
-  val q233BucketedSpj: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q233")
-    val cat = "q233_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    val confKeys = Seq("spark.sql.sources.v2.bucketing.enabled")
-    val prev = confKeys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      def mkTable(name: String, rows: Int): Unit =
-        spark.read.format("graft.sources.GraftDocsSource")
-          .option("rows", rows.toString).load()
-          .writeTo(s"$cat.$name")
-          .partitionedBy(bucket(8, col("doc_id")))
-          .tableProperty("versioned", "true")
-          .tableProperty("delete.mode", "merge-on-read").create()
-      mkTable("a", 400)
-      mkTable("b", 300)
-      spark.sql(s"DELETE FROM $cat.a WHERE doc_id % 11 = 4")
-      GraftVersions.compact(spark, wh.resolve("b"), targetFiles = 2)
-      def layout(t: String): (Boolean, Long) = {
-        val es = GraftVersions.latest(wh.resolve(t)).get.entries
-        (es.nonEmpty && es.forall(_.bucket.isDefined),
-          es.flatMap(_.bucket).distinct.length.toLong)
+  val q233BucketedSpj: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q233") { (cat, wh) =>
+      val confKeys = Seq("spark.sql.sources.v2.bucketing.enabled")
+      val prev = confKeys.map(k => k -> spark.conf.getOption(k))
+      try {
+        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+        def mkTable(name: String, rows: Int): Unit =
+          spark.read.format("graft.sources.GraftDocsSource")
+            .option("rows", rows.toString).load()
+            .writeTo(s"$cat.$name")
+            .partitionedBy(bucket(8, col("doc_id")))
+            .tableProperty("versioned", "true")
+            .tableProperty("delete.mode", "merge-on-read").create()
+        mkTable("a", 400)
+        mkTable("b", 300)
+        spark.sql(s"DELETE FROM $cat.a WHERE doc_id % 11 = 4")
+        GraftVersions.compact(spark, wh.resolve("b"), targetFiles = 2)
+        def layout(t: String): (Boolean, Long) = {
+          val es = GraftVersions.latest(wh.resolve(t)).get.entries
+          (es.nonEmpty && es.forall(_.bucket.isDefined),
+            es.flatMap(_.bucket).distinct.length.toLong)
+        }
+        val (aOk, aBuckets) = layout("a")
+        val (bOk, bBuckets) = layout("b")
+        val j = spark.table(s"$cat.a").select("doc_id", "n_words")
+          .join(spark.table(s"$cat.b").select("doc_id", "fp"), "doc_id")
+          .agg(count(lit(1)).as("n"), sum("n_words").as("w"),
+            sum(col("fp") % 1000).as("f"))
+          .head()
+        import spark.implicits._
+        OpsUtil.driverLiteral(Seq((
+          aOk && bOk, aBuckets, bBuckets,
+          j.getLong(0), j.getLong(1), j.getLong(2)
+        )).toDF("all_bucketed", "buckets_a", "buckets_b",
+          "n_joined", "sum_words_joined", "sum_fp_mod"))
+      } finally {
+        prev.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None)    => spark.conf.unset(k)
+        }
       }
-      val (aOk, aBuckets) = layout("a")
-      val (bOk, bBuckets) = layout("b")
-      val j = spark.table(s"$cat.a").select("doc_id", "n_words")
-        .join(spark.table(s"$cat.b").select("doc_id", "fp"), "doc_id")
-        .agg(count(lit(1)).as("n"), sum("n_words").as("w"),
-          sum(col("fp") % 1000).as("f"))
-        .head()
-      import spark.implicits._
-      OpsUtil.driverLiteral(Seq((
-        aOk && bOk, aBuckets, bBuckets,
-        j.getLong(0), j.getLong(1), j.getLong(2)
-      )).toDF("all_bucketed", "buckets_a", "buckets_b",
-        "n_joined", "sum_words_joined", "sum_fp_mod"))
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q234: merge-on-read MERGE — the full three-action matrix on masks
@@ -1110,12 +949,8 @@ object Round13 {
     * all closed-form. At 100 TB this is the CDC-upsert shape: a MERGE
     * touching 0.1% of rows commits masks + the changed rows' bytes,
     * not a rewrite of every touched file. */
-  val q234MorMerge: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q234")
-    val cat = "q234_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q234MorMerge: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q234") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .repartitionByRange(3, col("doc_id"))
@@ -1147,12 +982,7 @@ object Round13 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(perVersion.orderBy("version"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q235: the `files` metadata table — manifest health from SQL
@@ -1168,12 +998,8 @@ object Round13 {
     * grouping the metadata relation by bucket pins physical rows (10),
     * masks (2), and the residue-class doc_id envelope (min=b,
     * max=36+b) — every cell closed-form. */
-  val q235FilesTable: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q235")
-    val cat = "q235_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q235FilesTable: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q235") { (cat, wh) =>
       // 2 input partitions × 4 buckets → 8 files of 5 rows: the
       // scattered delete masks 1 row per file, never a whole file (a
       // fully-masked file would drop and shrink the physical counters
@@ -1191,12 +1017,7 @@ object Round13 {
            |  MIN(min_doc_id) AS min_id, MAX(max_doc_id) AS max_id,
            |  SUM(rows) - SUM(masked) AS rows_live
            |FROM $cat.t.files GROUP BY bucket ORDER BY bucket""".stripMargin))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q236: SQL-callable maintenance — CALL system.optimize/restore/vacuum
@@ -1214,12 +1035,8 @@ object Round13 {
     * the output — retention/compaction regressions break the hash, not
     * a trend. At 100 TB: maintenance runs from the same SQL gateway as
     * queries, no driver-side tooling required. */
-  val q236Procedures: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q236")
-    val cat = "q236_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q236Procedures: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q236") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "40").load()
         .repartitionByRange(4, col("doc_id"))
@@ -1241,12 +1058,7 @@ object Round13 {
         "restored_version", "restore_new_version", "restore_n_files",
         "vacuum_expired", "vacuum_deleted", "oldest_retained",
         "rows_live", "sum_ids_live"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q237: manifest aggregate pushdown — COUNT(*) without opening a file
@@ -1265,12 +1077,8 @@ object Round13 {
     * correct); a WHERE keeps the ordinary path; a time-travel read
     * folds the PINNED manifest. The pushed/declined flags come off
     * the executed plans, so a pushdown regression breaks the hash. */
-  val q237ManifestAgg: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q237")
-    val cat = "q237_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  val q237ManifestAgg: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "ver_q237") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "40").load()
         .repartitionByRange(4, col("doc_id"))
@@ -1301,12 +1109,7 @@ object Round13 {
       )).toDF("count_pushed", "n_before", "minmax_pushed", "min_id",
         "max_words", "where_pushed", "count_pushed_after", "n_after",
         "minmax_pushed_after", "min_id_after", "n_asof_v1"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-  }
 
   val queries: Map[String, Q] = Map(
     "q216_time_travel" -> q216TimeTravel,

@@ -22,23 +22,6 @@ import graft.sources.GraftVersions
 object Round14 {
   type Q = (SparkSession, String) => DataFrame
 
-  private def freshCatalog(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r14_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
-
   // ---------------------------------------------------------------------
   // q238: ADD COLUMN schema evolution, audited through time travel
   // ---------------------------------------------------------------------
@@ -62,9 +45,8 @@ object Round14 {
     * that makes ADD COLUMN on a 100 TB table instant — and every
     * phase read is a manifest-scoped scan + one map-side-combined
     * global aggregate. */
-  val q238SchemaEvolution: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q238")
-    try {
+  val q238SchemaEvolution: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q238") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "20").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -109,8 +91,7 @@ object Round14 {
       require(ops == Seq("enable", "append", "add-column", "append",
         "update"), s"unexpected version log: $ops")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q239: a decision-tree FIT on the oracle bar — exact Gini, no RNG
@@ -240,10 +221,9 @@ object Round14 {
     * counts and integer sums per (change type, commit). At 100 TB this
     * is the incremental-materialization feed: a downstream aggregate
     * consumes exact row deltas instead of re-reading snapshots. */
-  val q240ChangeFeedImages: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q240")
-    val sink = Files.createTempDirectory("graft_cdf_q240")
-    try {
+  val q240ChangeFeedImages: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q240") { (cat, wh) =>
+      val sink = Scratch.dir(wh, "cdf")
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "12").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -260,10 +240,7 @@ object Round14 {
           .option("checkpointLocation", s"$sink/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        if (!q.awaitTermination(180000)) { q.stop()
-          throw new IllegalStateException(
-            "q240: change-feed drain did not terminate under AvailableNow") }
-        q.exception.foreach(throw _)
+        Scratch.drain(q, "q240: change-feed")
       }
       def sinkState(phase: String): DataFrame =
         spark.read.parquet(s"$sink/data")
@@ -285,11 +262,7 @@ object Round14 {
       val second = OpsUtil.driverLiteral(sinkState("b_second"))
       first.unionByName(second)
         .orderBy("phase", "commit_version", "change_type")
-    } finally {
-      teardown(spark, cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q241: column RENAME/DROP by field id, audited through time travel
@@ -319,9 +292,8 @@ object Round14 {
     * one property write + one manifest line regardless of table size,
     * and every phase read is a manifest-scoped scan + one
     * map-side-combined aggregate. */
-  val q241SchemaMutation: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q241")
-    try {
+  val q241SchemaMutation: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q241") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "12").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -383,8 +355,7 @@ object Round14 {
         "append", "rename-column", "append", "drop-column", "add-column",
         "append"), s"unexpected version log: $ops")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q242: INT -> BIGINT type widening, audited through time travel
@@ -407,9 +378,8 @@ object Round14 {
     * because out-of-int-range cells only exist in files the widen
     * postdates. Scale shape: like every mutation, cost is one property
     * write + one manifest line regardless of table size. */
-  val q242TypeWidening: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q242")
-    try {
+  val q242TypeWidening: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q242") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "8").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -447,8 +417,7 @@ object Round14 {
       require(ops == Seq("enable", "append", "add-column", "append",
         "widen-column", "append"), s"unexpected version log: $ops")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q243: column DEFAULT values, audited through time travel
@@ -475,9 +444,8 @@ object Round14 {
     * any size — it is a read-side constant, which is why ADD COLUMN
     * DEFAULT on a 100 TB table is instant where a COW backfill would
     * rewrite the world. */
-  val q243ColumnDefaults: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q243")
-    try {
+  val q243ColumnDefaults: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q243") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -531,8 +499,7 @@ object Round14 {
       require(ops == Seq("enable", "append", "add-column", "add-column",
         "append", "append", "append"), s"unexpected version log: $ops")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q244: zero-copy shallow clone
@@ -552,9 +519,8 @@ object Round14 {
     * Scale shape: cloning a 100 TB table is ONE manifest write (#files
     * lines, no data IO) — the dev/staging-fork and experiment-branch
     * workflow Delta ships as SHALLOW CLONE. */
-  val q244ShallowClone: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q244")
-    try {
+  val q244ShallowClone: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q244") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.s").tableProperty("versioned", "true")
@@ -604,8 +570,7 @@ object Round14 {
           lit(if (vacuumSafe) 1L else 0L).as("ok")))
         .orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q245: named snapshot tags
@@ -619,9 +584,8 @@ object Round14 {
     * reproducibility contract a training pipeline needs: "the exact
     * corpus run X trained on" stays addressable by name, immune to
     * nightly retention, for as long as the tag lives. */
-  val q245TableTags: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q245")
-    try {
+  val q245TableTags: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q245") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -667,8 +631,7 @@ object Round14 {
           lit(cVers).as("n_versions"), lit(cOk).as("ok")))
         .orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q246: MERGE WITH SCHEMA EVOLUTION
@@ -685,9 +648,8 @@ object Round14 {
     * source value; time travel below the evolution presents the
     * 4-column shape. The registry's append-only rules still gate every
     * change — a boolean source column fails the merge loudly. */
-  val q246MergeEvolution: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q246")
-    try {
+  val q246MergeEvolution: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q246") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -726,8 +688,7 @@ object Round14 {
           .unionByName(snap("b_post_merge", spark.table(s"$cat.t")))
           .orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q247: writable branches — write-audit-publish
@@ -748,9 +709,8 @@ object Round14 {
     * publish atomically iff they pass — costs one manifest write to
     * fork and one rename-per-file to publish, regardless of table
     * size. */
-  val q247BranchWap: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q247")
-    try {
+  val q247BranchWap: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q247") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -798,8 +758,7 @@ object Round14 {
           lit(-1L).as("branch_rows"), lit(cOk).as("ok")))
         .orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q248: age-based snapshot expiration
@@ -814,9 +773,8 @@ object Round14 {
     * travel, whatever the commit rate, but run-tagged corpora live
     * forever". Cutoffs here are taken FROM the commit log's own
     * strictly-increasing timestamps, so the audit is deterministic. */
-  val q248ExpireSnapshots: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q248")
-    try {
+  val q248ExpireSnapshots: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q248") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -864,8 +822,7 @@ object Round14 {
           lit(bTag).as("tag_rows"), lit(bOk).as("ok")))
         .orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q249: row lineage — stable row ids across delete / OPTIMIZE / update
@@ -897,9 +854,8 @@ object Round14 {
     * allocation is one manifest-header read per commit, lookup is a
     * monotone per-file segment walk in the reader — nothing global,
     * nothing per-row on disk. */
-  val q249RowLineage: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q249")
-    try {
+  val q249RowLineage: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q249") { (cat, wh) =>
       val docs = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "18").load()
       // one sorted file per commit: ids are then doc_id-aligned, which
@@ -946,8 +902,7 @@ object Round14 {
           col("_row_commit_version").as("row_cv"))
         .orderBy("doc_id")
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q250: remove_orphan_files — the debris vacuum cannot see
@@ -967,9 +922,8 @@ object Round14 {
     * the version log, and every referenced file stay untouched.
     * Scale shape: one directory listing + one log read under the table
     * lock; never a data scan. */
-  val q250RemoveOrphans: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q250")
-    try {
+  val q250RemoveOrphans: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q250") { (cat, wh) =>
       val docs = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "12").load()
       docs.filter(col("doc_id") < 8).coalesce(1).sortWithinPartitions("doc_id")
@@ -1005,8 +959,7 @@ object Round14 {
         "planted debris must be gone after the permissive sweep")
       val audit = a.unionByName(b).orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q251: BATCH change-feed reads — Delta's table_changes shape
@@ -1031,9 +984,8 @@ object Round14 {
     * file per commit — cost proportional to the CHANGES in the range,
     * never to table size; this is the primitive incremental pipelines
     * are built from at 100 TB. */
-  val q251BatchCdf: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q251")
-    try {
+  val q251BatchCdf: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q251") { (cat, wh) =>
       val docs = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "14").load()
       docs.filter(col("doc_id") < 8).coalesce(1).sortWithinPartitions("doc_id")
@@ -1068,8 +1020,7 @@ object Round14 {
           "n_words")
         .orderBy("scope", "commit_version", "change_type", "doc_id")
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q252: incremental materialized-aggregate refresh from the batch CDF
@@ -1093,9 +1044,8 @@ object Round14 {
     * rescan of a 100 TB source. This is Delta Live Tables /
     * materialized-view incremental maintenance, expressed in plain
     * DataFrame algebra over the connector's CDF. */
-  val q252IncrementalAgg: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q252")
-    try {
+  val q252IncrementalAgg: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q252") { (cat, wh) =>
       val docs = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "18").load()
       docs.filter(col("doc_id") < 10).coalesce(1).sortWithinPartitions("doc_id")
@@ -1153,8 +1103,7 @@ object Round14 {
       require(OpsUtil.sameRowsLocal(refreshed, full),
         "incremental refresh must equal the full recompute")
       OpsUtil.driverLiteral(refreshed)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q253: partition-spec evolution — re-bucket without rewriting a byte
@@ -1178,9 +1127,8 @@ object Round14 {
     * lets the rewrite happen opportunistically (the nightly OPTIMIZE),
     * exactly Iceberg's model. The audit tracks rows / file count /
     * distinct spec count through create → evolve+append → optimize. */
-  val q253PartitionEvolution: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q253")
-    try {
+  val q253PartitionEvolution: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q253") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (doc_id BIGINT, title STRING, fp BIGINT,
            |  n_words INT) PARTITIONED BY (bucket(2, doc_id))
@@ -1216,8 +1164,7 @@ object Round14 {
         "compact"), s"unexpected version log: $ops")
       OpsUtil.driverLiteral(
         a.unionByName(b).unionByName(c).orderBy("phase"))
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q254: the `partitions` metadata table — layout health per (spec, bucket)
@@ -1237,9 +1184,8 @@ object Round14 {
     * files; a scattered merge-on-read DELETE masks one row in three
     * of the six files. The rollup pins all of it closed-form —
     * per-group physical rows, DV masks, and live rows. */
-  val q254PartitionsTable: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q254")
-    try {
+  val q254PartitionsTable: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q254") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (doc_id BIGINT, title STRING, fp BIGINT,
            |  n_words INT) PARTITIONED BY (bucket(2, doc_id))
@@ -1257,8 +1203,7 @@ object Round14 {
       OpsUtil.driverLiteral(spark.sql(
         s"""SELECT spec, bucket, files, rows, masked, live_rows
            |FROM $cat.t.partitions ORDER BY spec, bucket""".stripMargin))
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q255: the FULL five-branch MERGE matrix, COW ≡ MOR on the hash bar
@@ -1288,9 +1233,8 @@ object Round14 {
     * retention/backfill shape (`DELETE target rows absent from
     * today's feed`) and MOR turns that full-table verb into masks +
     * changed bytes instead of a table rewrite. */
-  val q255MergeMatrix: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q255")
-    try {
+  val q255MergeMatrix: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q255") { (cat, wh) =>
       val base = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .repartitionByRange(3, col("doc_id"))
@@ -1328,8 +1272,7 @@ object Round14 {
             col("sum_doc_id"), lit(masks(t)).as("masked_rows"))
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(audit.orderBy("mode"))
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q256: the `refs` metadata table — every named ref as a relation
@@ -1351,9 +1294,8 @@ object Round14 {
     * branch face advances dev to v1 while main stays at v2 — the refs
     * relation must show all three with exactly those versions and
     * dev's base_version = 2 (the main version fast_forward needs). */
-  val q256RefsTable: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q256")
-    try {
+  val q256RefsTable: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q256") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -1364,8 +1306,7 @@ object Round14 {
       OpsUtil.driverLiteral(spark.sql(
         s"""SELECT name, type, version, base_version
            |FROM $cat.t.refs ORDER BY name""".stripMargin))
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q257: CDC replication — a replica maintained purely from the CDF
@@ -1388,9 +1329,8 @@ object Round14 {
     * CDF-to-downstream pattern (`table_changes` → `MERGE`), composed
     * entirely from this repo's own verified primitives (q251's batch
     * feed, q255's merge matrix). */
-  val q257CdcReplication: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q257")
-    try {
+  val q257CdcReplication: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q257") { (cat, wh) =>
       val docs = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "25").load()
       docs.filter(col("doc_id") < 20).orderBy("doc_id").coalesce(2)
@@ -1439,8 +1379,7 @@ object Round14 {
               col("sum_doc_id"), lit(applied).as("changes_applied"))
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(audit.orderBy("mode"))
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q258: equality deletes — the fourth delete tier, zero data IO
@@ -1469,9 +1408,8 @@ object Round14 {
     * than deletion vectors (which must read to find positions). The
     * read-side cost is a per-row binary search against the file's value
     * set, only on files the delete actually touched. */
-  val q258EqualityDelete: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q258")
-    try {
+  val q258EqualityDelete: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q258") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .repartitionByRange(3, col("doc_id"))
@@ -1498,8 +1436,7 @@ object Round14 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(audit.orderBy("version"))
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q259: STREAMING CDC replication — the always-on face of q257
@@ -1521,10 +1458,9 @@ object Round14 {
     * merge shuffle on the key — the 100 TB source is never rescanned
     * after the bootstrap; this is the Delta streaming-CDF-to-replica
     * pattern composed from this repo's own verified feed and merge. */
-  val q259StreamingReplication: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q259")
-    val ckpt = Files.createTempDirectory("graft_rep_q259")
-    try {
+  val q259StreamingReplication: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q259") { (cat, wh) =>
+      val ckpt = Scratch.dir(wh, "rep")
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "15").load().coalesce(1)
         .writeTo(s"$cat.s").tableProperty("versioned", "true")
@@ -1558,10 +1494,7 @@ object Round14 {
           .option("checkpointLocation", ckpt.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        if (!q.awaitTermination(180000)) { q.stop()
-          throw new IllegalStateException(
-            "q259: replication drain did not terminate under AvailableNow") }
-        q.exception.foreach(throw _)
+        Scratch.drain(q, "q259: replication")
       }
       def audit(phase: String): DataFrame = {
         val src = spark.table(s"$cat.s")
@@ -1590,11 +1523,7 @@ object Round14 {
       drain() // resumes from the checkpointed commit — no re-reads
       val b = audit("b_second_drain")
       a.unionByName(b).orderBy("phase")
-    } finally {
-      teardown(spark, cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q260: subquery predicates through the row-level DML paths
@@ -1615,9 +1544,8 @@ object Round14 {
     * Scale shape: the subquery side is an ordinary broadcast/shuffle
     * semi-join against the candidate files — manifest stats still
     * prune the scan side, and the commit stays one manifest advance. */
-  val q260SubqueryDml: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q260")
-    try {
+  val q260SubqueryDml: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r14_q260") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "20").load().coalesce(2)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -1647,8 +1575,7 @@ object Round14 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(audit.orderBy("version"))
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   val queries: Map[String, Q] = Map(
     "q238_schema_evolution" -> q238SchemaEvolution,

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.GraftVersions
@@ -34,23 +32,6 @@ import graft.sources.GraftVersions
 object Round15 {
   type Q = (SparkSession, String) => DataFrame
 
-  private def freshCatalog(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r15_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
-
   // ---------------------------------------------------------------------
   // q261: generated columns — declared derivation, write-path enforced
   // ---------------------------------------------------------------------
@@ -76,9 +57,8 @@ object Round15 {
     * state from the generative closed forms and applies the generation
     * expressions itself — the engine's declared derivation must equal
     * the oracle's inline one. */
-  val q261GeneratedColumns: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q261")
-    try {
+  val q261GeneratedColumns: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r15_q261") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -108,8 +88,7 @@ object Round15 {
            |  COUNT(DISTINCT title_tag) AS n_tags
            |FROM $cat.t GROUP BY wc_bucket ORDER BY wc_bucket""".stripMargin)
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q262: identity columns — surrogate keys from a commit-locked hwm
@@ -133,9 +112,8 @@ object Round15 {
     * Both inserts are forced to one ordered partition so the mapping
     * row → id is deterministic; the oracle computes the same ids from
     * `row_number()` and the block constant. */
-  val q262IdentityColumns: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q262")
-    try {
+  val q262IdentityColumns: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r15_q262") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -162,8 +140,7 @@ object Round15 {
         s"""SELECT doc_id, rid, CAST(n_words AS BIGINT) AS n_words
            |FROM $cat.t ORDER BY doc_id""".stripMargin)
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q263: the files table's partition-value face — layout health in SQL
@@ -178,9 +155,8 @@ object Round15 {
     * file per (insert, distinct n_words%4) pair; grouping the metadata
     * relation by partition value pins file counts and row sums to
     * their closed forms. */
-  val q263FilesPartitionFace: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q263")
-    try {
+  val q263FilesPartitionFace: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r15_q263") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -203,8 +179,7 @@ object Round15 {
            |  SUM(rows) AS n_rows
            |FROM $cat.t.files
            |GROUP BY partition_value ORDER BY partition_value""".stripMargin))
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q264: mixture execution — apply a per-source sampling plan exactly

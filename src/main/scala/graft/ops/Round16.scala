@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Scratch.{insertRange, planFacts}
 
 /** Round-16 operators: the self-maintaining-table quartet on the
   * versioned warehouse —
@@ -40,37 +41,6 @@ import org.apache.spark.sql.functions._
 object Round16 {
   type Q = (SparkSession, String) => DataFrame
 
-  private def freshCatalog(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r16_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
-
-  /** Insert rows [lo, hi) of the generative corpus as ONE ordered file. */
-  private def insertRange(spark: SparkSession, cat: String, lo: Int,
-      hi: Int): Unit = {
-    spark.read.format("graft.sources.GraftDocsSource")
-      .option("rows", hi.toString).load()
-      .filter(col("doc_id") >= lo)
-      .coalesce(1).sortWithinPartitions("doc_id")
-      .createOrReplaceTempView(s"${cat}_b")
-    spark.sql(
-      s"""INSERT INTO $cat.t (doc_id, title, fp, n_words)
-         |SELECT doc_id, title, fp, n_words FROM ${cat}_b""".stripMargin)
-    spark.catalog.dropTempView(s"${cat}_b")
-  }
-
   // ---------------------------------------------------------------------
   // q265: auto-compaction — compact.threshold keeps file counts bounded
   // ---------------------------------------------------------------------
@@ -92,16 +62,15 @@ object Round16 {
     * the row-lineage ids 0..23 surviving the splice: min/max/distinct
     * of `_row_id` — concat splices its members' segments, so ids ride
     * through compaction byte-identically). */
-  val q265AutoCompact: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q265")
-    try {
+  val q265AutoCompact: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q265") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true', 'row.tracking' = 'true',
            |  'compact.threshold' = '4')""".stripMargin)
-      (0 until 6).foreach(b => insertRange(spark, cat, 4 * b, 4 * b + 4))
+      (0 until 6).foreach(b => insertRange(spark, cat, "t", 4 * b, 4 * b + 4))
       val hist = spark.sql(
         s"""SELECT
            |  SUM(CASE WHEN op = 'compact' THEN 1 ELSE 0 END) AS n_compacts,
@@ -120,8 +89,7 @@ object Round16 {
         .withColumn("n_compacts", lit(hist.getLong(0)))
         .withColumn("max_live_files", lit(hist.getInt(1).toLong))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q266: column NDV statistics — manifest sketches feed the CBO
@@ -145,17 +113,16 @@ object Round16 {
     * (`plan.stats.attributeStats`) — the numbers the planner actually
     * sees, not a side channel. (The HLL degrade past the cap and the
     * build-side flip it buys the CBO are pinned in Round16Spec.) */
-  val q266NdvStats: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q266")
-    try {
+  val q266NdvStats: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q266") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'ndv.columns' = 'doc_id,fp,n_words')""".stripMargin)
-      insertRange(spark, cat, 0, 100)
-      insertRange(spark, cat, 100, 200)
+      insertRange(spark, cat, "t", 0, 100)
+      insertRange(spark, cat, "t", 100, 200)
       val rel = spark.read.format("graft.sources.GraftDocsSource")
         .option("path", wh.resolve("t").toString).load()
         .select("doc_id", "fp", "n_words")
@@ -175,8 +142,7 @@ object Round16 {
         (c, byName.getOrElse(c, None).getOrElse(-1L))
       } :+ (("_rows", stats.rowCount.map(_.toLong).getOrElse(-1L)))
       rows.toDF("col_name", "ndv").orderBy("col_name")
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q267: CDF across a schema-evolution boundary
@@ -198,16 +164,15 @@ object Round16 {
     * and the two evolution commits appear as NO rows (dataChange=false
     * metadata events — asserted by the absent commit_versions 2 and
     * 5). The audit groups the feed by (commit, change type). */
-  val q267CdfEvolution: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q267")
-    try {
+  val q267CdfEvolution: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q267") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 12)                             // v1
+      insertRange(spark, cat, "t", 0, 12)                             // v1
       spark.sql(s"ALTER TABLE $cat.t ADD COLUMN tag BIGINT")     // v2
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "18").load().filter(col("doc_id") >= 12)
@@ -238,8 +203,7 @@ object Round16 {
           sum(col("label")).as("sum_label"))
         .orderBy("commit_version", "change_type")
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q268: branch merge-back onto a moved main
@@ -260,18 +224,17 @@ object Round16 {
     * The audit reads the merged table plus the history face: final
     * rows = [0,10) \ {3} ∪ [10,14) ∪ [20,24), with the merge commit
     * present and labeled. */
-  val q268MergeBranch: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q268")
-    try {
+  val q268MergeBranch: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q268") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 10)                             // v1
+      insertRange(spark, cat, "t", 0, 10)                             // v1
       spark.sql(s"CALL $cat.system.branch('t', 'b', -1)")
-      insertRange(spark, cat, 20, 24)                            // v2 (main)
+      insertRange(spark, cat, "t", 20, 24)                          // v2 (main)
       // branch-side DML in full isolation
       spark.sql(s"DELETE FROM $cat.t.branch_b WHERE doc_id = 3")
       spark.read.format("graft.sources.GraftDocsSource")
@@ -295,8 +258,7 @@ object Round16 {
              |WHERE op = 'merge-branch'""".stripMargin)
           .head().getLong(0)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q269: ANALYZE — statistics backfill for files that predate them
@@ -311,16 +273,15 @@ object Round16 {
     * optimizer's own attribute statistics (as q266) and pins the
     * procedure's contract: first call analyzes 2 files, second call is
     * the idempotent no-op (0 files, no commit). */
-  val q269Analyze: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q269")
-    try {
+  val q269Analyze: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q269") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(spark, cat, 0, 60)
-      insertRange(spark, cat, 60, 120)
+      insertRange(spark, cat, "t", 0, 60)
+      insertRange(spark, cat, "t", 60, 120)
       spark.sql(s"ALTER TABLE $cat.t SET TBLPROPERTIES " +
         "('ndv.columns' = 'doc_id,n_words')")
       val first = spark.sql(s"CALL $cat.system.analyze('t')").head()
@@ -344,8 +305,7 @@ object Round16 {
         ("doc_id", byName.getOrElse("doc_id", None).getOrElse(-1L)),
         ("n_words", byName.getOrElse("n_words", None).getOrElse(-1L)))
       rows.toDF("col_name", "ndv").orderBy("col_name")
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q270: retention.versions — self-expiring snapshot history
@@ -359,16 +319,15 @@ object Round16 {
     * exactly versions {4, 5, 6} retained; every append's files are
     * still referenced by the surviving snapshots, so the LIVE rows are
     * untouched — which the audit pins alongside the history window. */
-  val q270Retention: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q270")
-    try {
+  val q270Retention: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q270") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'retention.versions' = '3')""".stripMargin)
-      (0 until 6).foreach(b => insertRange(spark, cat, 4 * b, 4 * b + 4))
+      (0 until 6).foreach(b => insertRange(spark, cat, "t", 4 * b, 4 * b + 4))
       val hist = spark.sql(
         s"""SELECT COUNT(*) AS n, MIN(version) AS lo, MAX(version) AS hi
            |FROM $cat.t.history""".stripMargin).head()
@@ -380,8 +339,7 @@ object Round16 {
         .withColumn("min_version", lit(hist.getLong(1)))
         .withColumn("max_version", lit(hist.getLong(2)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q271: dynamic partition pruning on the value layout
@@ -397,9 +355,8 @@ object Round16 {
     * before a fact byte is read. The classic star-join pruning, at
     * manifest cost with no directory tree. (The file-count proof lives
     * in Round16Spec; this audit pins the joined result.) */
-  val q271ValueDpp: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q271")
-    try {
+  val q271ValueDpp: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q271") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -408,8 +365,8 @@ object Round16 {
            |    (CAST(n_words AS BIGINT) % 6))
            |PARTITIONED BY (wb)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(spark, cat, 0, 48)
-      insertRange(spark, cat, 48, 96)
+      insertRange(spark, cat, "t", 0, 48)
+      insertRange(spark, cat, "t", 48, 96)
       // the dim is a FILE-BACKED table (manifest statistics make it
       // the broadcast build side — DPP only reuses a broadcast) with a
       // SURVIVING selective filter (a driver-local frame's filter
@@ -432,8 +389,7 @@ object Round16 {
            |WHERE d.doc_id IN (1, 3)
            |GROUP BY d.title, f.wb ORDER BY f.wb""".stripMargin)
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q272: streaming sinks under the self-maintenance policies
@@ -450,10 +406,9 @@ object Round16 {
     * closed-form outcome: 24 rows exactly once, the epoch-by-epoch
     * file-count trace ending at 3 (1·2·3·4→concat→1·2·3), and a full
     * re-drain from the same checkpoint adding nothing. */
-  val q272StreamMaintenance: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q272")
-    val cp = Files.createTempDirectory("graft_q272_cp")
-    try {
+  val q272StreamMaintenance: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q272") { (cat, wh) =>
+      val cp = Scratch.dir(wh, "cp")
       spark.sql(
         s"""CREATE TABLE $cat.src (doc_id BIGINT, title STRING,
            |  fp BIGINT, n_words INT)
@@ -478,7 +433,7 @@ object Round16 {
           .writeStream.option("checkpointLocation", cp.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable(s"$cat.sink")
-        require(q.awaitTermination(120000), "drain did not terminate")
+        Scratch.drain(q, "q272: stream-maintenance")
       }
       drain()
       val nFiles = spark.sql(
@@ -493,11 +448,7 @@ object Round16 {
         .withColumn("n_files", lit(nFiles))
         .withColumn("n_files_after_replay", lit(replayFiles))
       OpsUtil.driverLiteral(out)
-    } finally {
-      teardown(spark, cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q273: incrementally-maintained materialized view (CDF-fed)
@@ -517,9 +468,8 @@ object Round16 {
     * lands nothing). The audit pins the final view rows AND the
     * lifecycle numbers (seed watermark/groups, refreshed-to version,
     * applied image count, the no-op's zero). */
-  val q273MaterializedView: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q273")
-    try {
+  val q273MaterializedView: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q273") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -527,14 +477,14 @@ object Round16 {
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read',
            |  'update.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 12)                                // v1
-      insertRange(spark, cat, 12, 24)                               // v2
+      insertRange(spark, cat, "t", 0, 12)                                // v1
+      insertRange(spark, cat, "t", 12, 24)                               // v2
       val created = spark.sql(s"CALL $cat.system.create_mv(" +
         "'t_by_k', 't', 'doc_id % 5', 'n_words', false)").head()
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id IN (5, 17)")      // v3
       spark.sql(
         s"UPDATE $cat.t SET n_words = n_words + 100 WHERE doc_id < 4") // v4
-      insertRange(spark, cat, 24, 30)                               // v5
+      insertRange(spark, cat, "t", 24, 30)                               // v5
       val r1 = spark.sql(s"CALL $cat.system.refresh_mv('t_by_k')").head()
       val r2 = spark.sql(s"CALL $cat.system.refresh_mv('t_by_k')").head()
       val out = spark.sql(
@@ -547,8 +497,7 @@ object Round16 {
         .withColumn("applied", lit(r1.getLong(1)))
         .withColumn("noop_applied", lit(r2.getLong(1)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q274: auto-maintained materialized view (refresh on source commit)
@@ -564,19 +513,18 @@ object Round16 {
     * reads the view cold and pins exactly two `mv-refresh` commits on
     * its history face — one per source data commit, each folding only
     * that commit's change slice. */
-  val q274MvAuto: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q274")
-    try {
+  val q274MvAuto: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q274") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 12)                                 // v1
+      insertRange(spark, cat, "t", 0, 12)                                 // v1
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 4', 'n_words', true)")
-      insertRange(spark, cat, 12, 20)                                // v2
+      insertRange(spark, cat, "t", 12, 20)                                // v2
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id IN (3, 13)")       // v3
       val refreshes = spark.sql(
         s"SELECT COUNT(*) FROM $cat.v.history WHERE op = 'mv-refresh'")
@@ -587,8 +535,7 @@ object Round16 {
            |FROM $cat.v ORDER BY k""".stripMargin)
         .withColumn("n_auto_refreshes", lit(refreshes))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q275: column MIN/MAX statistics — filter estimation for the CBO
@@ -609,16 +556,15 @@ object Round16 {
     * optimizer's own statistics, never the manifest, so it pins the
     * whole pipeline: writer envelope → manifest token → DSv2 fold →
     * Catalyst ColumnStat. */
-  val q275MinMaxStats: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q275")
-    try {
+  val q275MinMaxStats: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q275") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(spark, cat, 0, 80)
-      insertRange(spark, cat, 80, 160)
+      insertRange(spark, cat, "t", 0, 80)
+      insertRange(spark, cat, "t", 80, 160)
       val rel = spark.read.format("graft.sources.GraftDocsSource")
         .option("path", wh.resolve("t").toString).load()
         .select("doc_id", "fp", "n_words")
@@ -636,8 +582,7 @@ object Round16 {
         val (lo, hi) = byName.getOrElse(c, (None, None))
         (c, lo.getOrElse(-1L), hi.getOrElse(-1L))
       }.toDF("col_name", "lo", "hi").orderBy("col_name")
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q276: streaming ingest with an always-fresh materialized view
@@ -654,10 +599,9 @@ object Round16 {
     * idempotence), so the view takes no extra refresh either. The
     * audit reads the view cold and pins the refresh count off the
     * view's history face: one `mv-refresh` per sink data epoch. */
-  val q276StreamMv: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q276")
-    val cp = Files.createTempDirectory("graft_q276_cp")
-    try {
+  val q276StreamMv: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q276") { (cat, wh) =>
+      val cp = Scratch.dir(wh, "cp")
       spark.sql(
         s"""CREATE TABLE $cat.src (doc_id BIGINT, title STRING,
            |  fp BIGINT, n_words INT)
@@ -682,7 +626,7 @@ object Round16 {
           .writeStream.option("checkpointLocation", cp.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable(s"$cat.sink")
-        require(q.awaitTermination(120000), "drain did not terminate")
+        Scratch.drain(q, "q276: stream-mv")
       }
       drain()
       val refreshes = spark.sql(
@@ -699,11 +643,7 @@ object Round16 {
         .withColumn("n_refreshes", lit(refreshes))
         .withColumn("n_refreshes_after_replay", lit(refreshesAfterReplay))
       OpsUtil.driverLiteral(out)
-    } finally {
-      teardown(spark, cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q277: materialized-view query rewrite — answer from the view
@@ -720,16 +660,15 @@ object Round16 {
     * (the rewrite's soundness contract), and pins the plan facts: the
     * enabled run scans the view and carries no aggregate, the disabled
     * run aggregates the source. */
-  val q277MvRewrite: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q277")
-    try {
+  val q277MvRewrite: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q277") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 30)                                 // v1
+      insertRange(spark, cat, "t", 0, 30)                                 // v1
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', true)")
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id IN (4, 11)")       // v2
@@ -740,34 +679,25 @@ object Round16 {
            |  COUNT(*) AS n_docs
            |FROM $cat.t GROUP BY doc_id % 5""".stripMargin)
       def facts(df: DataFrame): (Boolean, Boolean) = {
-        val plan = df.queryExecution.optimizedPlan
-        val scansMv = plan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2
-              .DataSourceV2ScanRelation
-              if s.scan.description.contains(wh.resolve("v").toString) => s
-        }.nonEmpty
-        val aggregates = plan.collect {
-          case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-        }.nonEmpty
-        (scansMv, aggregates)
+        val (scans, aggregates) = planFacts(df)
+        (scans(wh.resolve("v")), aggregates)
       }
       val viaMv = run()
       val (mvScanned, mvAggregated) = facts(viaMv)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val viaSource = run()
-      val (offScanned, offAggregated) = facts(viaSource)
-      spark.conf.unset("spark.graft.mv.rewrite")
-      // soundness: the rewrite must be invisible in the RESULT
-      require(OpsUtil.sameRowsLocal(viaMv, viaSource),
-        "mv rewrite changed the query result")
+      val (offScanned, offAggregated) = Scratch.withoutMvRewrite(spark) {
+        val viaSource = run()
+        // soundness: the rewrite must be invisible in the RESULT
+        require(OpsUtil.sameRowsLocal(viaMv, viaSource),
+          "mv rewrite changed the query result")
+        facts(viaSource)
+      }
       val out = viaMv.orderBy("k")
         .withColumn("rewrite_scans_view", lit(mvScanned))
         .withColumn("rewrite_keeps_aggregate", lit(mvAggregated))
         .withColumn("fallback_scans_view", lit(offScanned))
         .withColumn("fallback_keeps_aggregate", lit(offAggregated))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q278: write distribution — the table demands clustered input
@@ -785,9 +715,8 @@ object Round16 {
     * between `buckets` files per write and a small-file explosion the
     * compactor must clean up after every job. Two inserts → exactly
     * 2×buckets files, rows intact, and the audit pins both faces. */
-  val q278WriteDistribution: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q278")
-    try {
+  val q278WriteDistribution: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q278") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -818,8 +747,7 @@ object Round16 {
         .withColumn("files_after_first", lit(filesFirst))
         .withColumn("files_total", lit(filesTotal))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q279: sorted scans — exchange-free AND sort-free merge joins
@@ -836,65 +764,63 @@ object Round16 {
     * bytes, zero sort memory, spill-proof by construction. The audit
     * runs the join with broadcast disabled and pins the three plan
     * facts alongside the joined aggregate. */
-  val q279SortedScan: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q279")
-    val oldThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      Seq(("a", 48), ("b", 32)).foreach { case (t, n) =>
-        spark.sql(
-          s"""CREATE TABLE $cat.$t (
-             |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
-             |  fp BIGINT NOT NULL, n_words INT NOT NULL)
-             |PARTITIONED BY (bucket(4, doc_id))
-             |TBLPROPERTIES ('versioned' = 'true',
-             |  'write.distribution' = 'hash')""".stripMargin)
-        spark.read.format("graft.sources.GraftDocsSource")
-          .option("rows", n.toString).option("partitions", "8").load()
-          .createOrReplaceTempView(s"${cat}_src")
-        spark.sql(s"INSERT INTO $cat.$t SELECT * FROM ${cat}_src")
-        spark.catalog.dropTempView(s"${cat}_src")
-      }
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.sql(
-        s"""SELECT a.doc_id,
-           |  CAST(a.n_words AS BIGINT) + b.n_words AS words2
-           |FROM $cat.a a JOIN $cat.b b ON a.doc_id = b.doc_id""".stripMargin)
-      // sweep THROUGH the AQE wrapper — its subtree hides from a plain
-      // collect until unwrapped
-      def sweep[A](p: org.apache.spark.sql.execution.SparkPlan)(
-          f: PartialFunction[org.apache.spark.sql.execution.SparkPlan, A])
-          : Seq[A] = {
-        import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-        p.collect {
-          case a: AdaptiveSparkPlanExec => sweep(a.executedPlan)(f)
-          case q: QueryStageExec => sweep(q.plan)(f)
-          case n if f.isDefinedAt(n) => Seq(f(n))
-        }.flatten
-      }
-      val plan = joined.queryExecution.executedPlan
-      val smj = sweep(plan) {
-        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
-      }.nonEmpty
-      val exchanges = sweep(plan) {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-          e
-      }.nonEmpty
-      val sorts = sweep(plan) {
-        case s: org.apache.spark.sql.execution.SortExec => s
-      }.nonEmpty
-      val out = joined
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("doc_id")).as("sum_doc_id"),
-          sum(col("words2")).as("sum_words2"))
-        .withColumn("merge_join", lit(smj))
-        .withColumn("shuffles", lit(exchanges))
-        .withColumn("sorts", lit(sorts))
-      OpsUtil.driverLiteral(out)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      teardown(spark, cat, wh)
+  val q279SortedScan: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q279") { (cat, wh) =>
+      val oldThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        Seq(("a", 48), ("b", 32)).foreach { case (t, n) =>
+          spark.sql(
+            s"""CREATE TABLE $cat.$t (
+               |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
+               |  fp BIGINT NOT NULL, n_words INT NOT NULL)
+               |PARTITIONED BY (bucket(4, doc_id))
+               |TBLPROPERTIES ('versioned' = 'true',
+               |  'write.distribution' = 'hash')""".stripMargin)
+          spark.read.format("graft.sources.GraftDocsSource")
+            .option("rows", n.toString).option("partitions", "8").load()
+            .createOrReplaceTempView(s"${cat}_src")
+          spark.sql(s"INSERT INTO $cat.$t SELECT * FROM ${cat}_src")
+          spark.catalog.dropTempView(s"${cat}_src")
+        }
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val joined = spark.sql(
+          s"""SELECT a.doc_id,
+             |  CAST(a.n_words AS BIGINT) + b.n_words AS words2
+             |FROM $cat.a a JOIN $cat.b b ON a.doc_id = b.doc_id""".stripMargin)
+        // sweep THROUGH the AQE wrapper — its subtree hides from a plain
+        // collect until unwrapped
+        def sweep[A](p: org.apache.spark.sql.execution.SparkPlan)(
+            f: PartialFunction[org.apache.spark.sql.execution.SparkPlan, A])
+            : Seq[A] = {
+          import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+          p.collect {
+            case a: AdaptiveSparkPlanExec => sweep(a.executedPlan)(f)
+            case q: QueryStageExec => sweep(q.plan)(f)
+            case n if f.isDefinedAt(n) => Seq(f(n))
+          }.flatten
+        }
+        val plan = joined.queryExecution.executedPlan
+        val smj = sweep(plan) {
+          case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
+        }.nonEmpty
+        val exchanges = sweep(plan) {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+            e
+        }.nonEmpty
+        val sorts = sweep(plan) {
+          case s: org.apache.spark.sql.execution.SortExec => s
+        }.nonEmpty
+        val out = joined
+          .agg(count(lit(1)).as("n_rows"),
+            sum(col("doc_id")).as("sum_doc_id"),
+            sum(col("words2")).as("sum_words2"))
+          .withColumn("merge_join", lit(smj))
+          .withColumn("shuffles", lit(exchanges))
+          .withColumn("sorts", lit(sorts))
+        OpsUtil.driverLiteral(out)
+      } finally
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
     }
-  }
 
   // ---------------------------------------------------------------------
   // q280: vacuum dry run — preflight the destructive command
@@ -913,15 +839,14 @@ object Round16 {
     * file). The audit pins the dry run's numbers, that it changed
     * nothing (history length, files on disk), the real run's EQUALITY
     * with the preflight, and the live rows surviving untouched. */
-  val q280VacuumDryRun: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q280")
-    try {
+  val q280VacuumDryRun: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q280") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      (0 until 6).foreach(b => insertRange(spark, cat, 4 * b, 4 * b + 4))
+      (0 until 6).foreach(b => insertRange(spark, cat, "t", 4 * b, 4 * b + 4))
       spark.sql(s"CALL $cat.system.tag('t', 'pin', 3)")
       spark.sql(s"CALL $cat.system.optimize('t', 1, '')")       // v7
       def diskParts: Long = {
@@ -950,8 +875,7 @@ object Round16 {
         .withColumn("real_deleted", lit(real.getLong(1)))
         .withColumn("disk_files_after_real", lit(diskParts))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q281: scoped OPTIMIZE — partition-granular compaction
@@ -968,9 +892,8 @@ object Round16 {
     * value; scoping value 3 to one file compacts exactly those 2 and
     * provably touches none of the other 10. The audit pins the scoped
     * counts, the untouched count, and the rows surviving bit-intact. */
-  val q281OptimizeWhere: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q281")
-    try {
+  val q281OptimizeWhere: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q281") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -979,8 +902,8 @@ object Round16 {
            |    (CAST(n_words AS BIGINT) % 6))
            |PARTITIONED BY (wb)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(spark, cat, 0, 48)
-      insertRange(spark, cat, 48, 96)
+      insertRange(spark, cat, "t", 0, 48)
+      insertRange(spark, cat, "t", 48, 96)
       val r = spark.sql(
         s"CALL $cat.system.optimize_where('t', 'wb', 3, 1)").head()
       val entries = graft.sources.GraftVersions
@@ -996,8 +919,7 @@ object Round16 {
         .withColumn("value3_files", lit(entries.count(
           _.stats.get("wb").contains((3L, 3L))).toLong))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q282: materialized-view ROLL-UP rewrite — coarser grain, view-only
@@ -1017,16 +939,15 @@ object Round16 {
     * rewritten plans scan the VIEW and never the source, and — unlike
     * q277's exact match, which drops the Aggregate entirely — the
     * roll-up KEEPS one (re-aggregation over view rows is the point). */
-  val q282MvRollup: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q282")
-    try {
+  val q282MvRollup: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q282") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 36)                                 // v1
+      insertRange(spark, cat, "t", 0, 36)                                 // v1
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 6', 'n_words', true)")
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id IN (7, 22)")       // v2
@@ -1040,31 +961,22 @@ object Round16 {
         s"SELECT SUM(n_words) AS sum_words, COUNT(*) AS n_docs " +
           s"FROM $cat.t")
       def facts(df: DataFrame): (Boolean, Boolean, Boolean) = {
-        val plan = df.queryExecution.optimizedPlan
-        def scans(dir: java.nio.file.Path) = plan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2
-              .DataSourceV2ScanRelation
-              if s.scan.description.contains(dir.toString) => s
-        }.nonEmpty
-        val aggregates = plan.collect {
-          case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-        }.nonEmpty
+        val (scans, aggregates) = planFacts(df)
         (scans(wh.resolve("v")), scans(wh.resolve("t")), aggregates)
       }
       val viaMv = rollup()
       val (mvScansView, mvScansSrc, mvAggregated) = facts(viaMv)
       val globalViaMv = global()
       val (gScansView, gScansSrc, _) = facts(globalViaMv)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val viaSource = rollup()
-      val (offScansView, offScansSrc, _) = facts(viaSource)
-      val globalViaSource = global()
-      spark.conf.unset("spark.graft.mv.rewrite")
-      // soundness: the roll-up must be invisible in the RESULT
-      require(OpsUtil.sameRowsLocal(viaMv, viaSource),
-        "mv roll-up rewrite changed the grouped query result")
-      require(OpsUtil.sameRowsLocal(globalViaMv, globalViaSource),
-        "mv roll-up rewrite changed the global aggregate result")
+      val (offScansView, offScansSrc, _) = Scratch.withoutMvRewrite(spark) {
+        val viaSource = rollup()
+        // soundness: the roll-up must be invisible in the RESULT
+        require(OpsUtil.sameRowsLocal(viaMv, viaSource),
+          "mv roll-up rewrite changed the grouped query result")
+        require(OpsUtil.sameRowsLocal(globalViaMv, global()),
+          "mv roll-up rewrite changed the global aggregate result")
+        facts(viaSource)
+      }
       val g = globalViaMv.head()
       val out = viaMv.orderBy("k2")
         .withColumn("rollup_scans_view", lit(mvScansView))
@@ -1077,8 +989,7 @@ object Round16 {
         .withColumn("global_sum_words", lit(g.getLong(0)))
         .withColumn("global_n_docs", lit(g.getLong(1)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q283: DPP × partition-spec evolution — mixed-generation pruning
@@ -1099,9 +1010,8 @@ object Round16 {
     * this is how layout changes actually roll out: declare the new
     * spec instantly, let DPP benefits arrive write-by-write, migrate
     * stragglers with OPTIMIZE later. */
-  val q283MixedSpecDpp: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q283")
-    try {
+  val q283MixedSpecDpp: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q283") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -1109,10 +1019,10 @@ object Round16 {
            |  wb BIGINT GENERATED ALWAYS AS
            |    (CAST(n_words AS BIGINT) % 6))
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(spark, cat, 0, 48)                          // v1: 1 file
+      insertRange(spark, cat, "t", 0, 48)                          // v1: 1 file
       spark.sql(s"ALTER TABLE $cat.t SET TBLPROPERTIES(" +
         "'layout.values'='wb')")                              // v2: DDL
-      insertRange(spark, cat, 48, 96)                         // v3: 6 files
+      insertRange(spark, cat, "t", 48, 96)                        // v3: 6 files
       val t = wh.resolve("t")
       val ops = graft.sources.GraftVersions.listVersions(t).map(_.op)
       require(ops == Seq("enable", "append", "set-layout", "append"),
@@ -1163,8 +1073,7 @@ object Round16 {
         .withColumn("scan_emitted_rows", lit(emitted))
         .orderBy("wb")
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q284: MV rewrite of AVG and COUNT(DISTINCT key) — derived aggregates
@@ -1181,16 +1090,15 @@ object Round16 {
     * distinct-shuffle, the most expensive aggregate Spark plans. The
     * audit pins plan facts (view-only scan both grains) and rule-off
     * row equality inside the query, then hash-checks the values. */
-  val q284MvDerivedAggs: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q284")
-    try {
+  val q284MvDerivedAggs: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q284") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 36)                                 // v1
+      insertRange(spark, cat, "t", 0, 36)                                 // v1
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 6', 'n_words', true)")
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id IN (9, 28)")       // v2
@@ -1206,26 +1114,19 @@ object Round16 {
         s"SELECT AVG(n_words) AS avg_words, " +
           s"COUNT(DISTINCT doc_id % 6) AS n_keys FROM $cat.t")
       def facts(df: DataFrame): (Boolean, Boolean) = {
-        val plan = df.queryExecution.optimizedPlan
-        def scans(p: java.nio.file.Path) = plan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2
-              .DataSourceV2ScanRelation
-              if s.scan.description.contains(p.toString) => s
-        }.nonEmpty
+        val (scans, _) = planFacts(df)
         (scans(wh.resolve("v")), scans(wh.resolve("t")))
       }
       val viaMv = grouped()
       val (gScansView, gScansSrc) = facts(viaMv)
       val globalViaMv = global()
       val (ggScansView, ggScansSrc) = facts(globalViaMv)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val viaSource = grouped()
-      val globalViaSource = global()
-      spark.conf.unset("spark.graft.mv.rewrite")
-      require(OpsUtil.sameRowsLocal(viaMv, viaSource),
-        "derived-aggregate rewrite changed the grouped result")
-      require(OpsUtil.sameRowsLocal(globalViaMv, globalViaSource),
-        "derived-aggregate rewrite changed the global result")
+      Scratch.withoutMvRewrite(spark) {
+        require(OpsUtil.sameRowsLocal(viaMv, grouped()),
+          "derived-aggregate rewrite changed the grouped result")
+        require(OpsUtil.sameRowsLocal(globalViaMv, global()),
+          "derived-aggregate rewrite changed the global result")
+      }
       val g = globalViaMv.head()
       val out = viaMv.orderBy("k3")
         .withColumn("grouped_scans_view", lit(gScansView))
@@ -1235,8 +1136,7 @@ object Round16 {
         .withColumn("global_avg_words", lit(g.getDouble(0)))
         .withColumn("global_n_keys", lit(g.getLong(1)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q285: historical MV rewrite — time travel answered from view history
@@ -1254,20 +1154,19 @@ object Round16 {
     * exists for. Pinned at v2 (post-delete) at the view's grain and
     * at v1 (pre-delete) as a global roll-up; both plans are asserted
     * view-only, and both match the rule-off time-travel scan. */
-  val q285MvTimeTravel: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q285")
-    try {
+  val q285MvTimeTravel: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r16_q285") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 30)                                 // v1
+      insertRange(spark, cat, "t", 0, 30)                                 // v1
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', true)")   // watermark 1
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id IN (4, 17)")       // v2
-      insertRange(spark, cat, 30, 40)                                // v3
+      insertRange(spark, cat, "t", 30, 40)                                // v3
       org.apache.spark.sql.GraftBridge.addOptimization(spark,
         graft.plans.MvRewriteRule(spark))
       def pinned() = spark.sql(
@@ -1278,26 +1177,19 @@ object Round16 {
         s"SELECT SUM(n_words) AS sum_words, COUNT(*) AS n_docs " +
           s"FROM $cat.t VERSION AS OF 1")
       def facts(df: DataFrame): (Boolean, Boolean) = {
-        val plan = df.queryExecution.optimizedPlan
-        def scans(p: java.nio.file.Path) = plan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2
-              .DataSourceV2ScanRelation
-              if s.scan.description.contains(p.toString) => s
-        }.nonEmpty
+        val (scans, _) = planFacts(df)
         (scans(wh.resolve("v")), scans(wh.resolve("t")))
       }
       val viaMv = pinned()
       val (pScansView, pScansSrc) = facts(viaMv)
       val globalViaMv = pinnedGlobal()
       val (gScansView, gScansSrc) = facts(globalViaMv)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val viaSource = pinned()
-      val globalViaSource = pinnedGlobal()
-      spark.conf.unset("spark.graft.mv.rewrite")
-      require(OpsUtil.sameRowsLocal(viaMv, viaSource),
-        "historical rewrite changed the pinned grouped result")
-      require(OpsUtil.sameRowsLocal(globalViaMv, globalViaSource),
-        "historical rewrite changed the pinned global result")
+      Scratch.withoutMvRewrite(spark) {
+        require(OpsUtil.sameRowsLocal(viaMv, pinned()),
+          "historical rewrite changed the pinned grouped result")
+        require(OpsUtil.sameRowsLocal(globalViaMv, pinnedGlobal()),
+          "historical rewrite changed the pinned global result")
+      }
       val g = globalViaMv.head()
       val out = viaMv.orderBy("k")
         .withColumn("pinned_scans_view", lit(pScansView))
@@ -1307,8 +1199,7 @@ object Round16 {
         .withColumn("v1_sum_words", lit(g.getLong(0)))
         .withColumn("v1_n_docs", lit(g.getLong(1)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   val queries: Map[String, Q] = Map(
     "q285_mv_time_travel" -> q285MvTimeTravel,

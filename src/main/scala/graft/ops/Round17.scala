@@ -1,9 +1,8 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Scratch.{insertRange, planFacts}
 
 /** Round-17 operators: widening the materialized-view OPTIMIZER
   * family —
@@ -29,53 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object Round17 {
   type Q = (SparkSession, String) => DataFrame
-
-  private def freshCatalog(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r17_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
-
-  /** Insert rows [lo, hi) of the generative corpus as ONE ordered file. */
-  private def insertRange(spark: SparkSession, cat: String, lo: Int,
-      hi: Int): Unit = {
-    spark.read.format("graft.sources.GraftDocsSource")
-      .option("rows", hi.toString).load()
-      .filter(col("doc_id") >= lo)
-      .coalesce(1).sortWithinPartitions("doc_id")
-      .createOrReplaceTempView(s"${cat}_b")
-    spark.sql(
-      s"""INSERT INTO $cat.t (doc_id, title, fp, n_words)
-         |SELECT doc_id, title, fp, n_words FROM ${cat}_b""".stripMargin)
-    spark.catalog.dropTempView(s"${cat}_b")
-  }
-
-  /** (scans `dir`?, holds a logical Aggregate?) for a frame's
-    * optimized plan. */
-  private def planFacts(df: DataFrame)
-      : (java.nio.file.Path => Boolean, Boolean) = {
-    val plan = df.queryExecution.optimizedPlan
-    val scans = (dir: java.nio.file.Path) => plan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2
-          .DataSourceV2ScanRelation
-          if s.scan.description.contains(dir.toString) => s
-    }.nonEmpty
-    val aggregates = plan.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-    }.nonEmpty
-    (scans, aggregates)
-  }
 
   private def requireSameResult(a: DataFrame, b: DataFrame, what: String)
       : Unit =
@@ -110,16 +62,15 @@ object Round17 {
     * Every rewritten shape is require-checked against its rule-off
     * twin IN the query, and the plan facts ride in the hashed row —
     * a rewrite regression breaks a hash, not a trend. */
-  val q286MvFilteredRewrite: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q286")
-    try {
+  val q286MvFilteredRewrite: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r17_q286") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 36)                                 // v1
+      insertRange(spark, cat, "t", 0, 36)                                 // v1
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 6', 'n_words', true)")
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id IN (8, 21)")       // v2
@@ -153,11 +104,11 @@ object Round17 {
       val tkTakeOrdered = topk.queryExecution.executedPlan.collect {
         case e: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => e
       }.nonEmpty
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      requireSameResult(eq, eqQ(), "filtered equality")
-      requireSameResult(coarse, coarseQ(), "filtered coarse global")
-      requireSameResult(topk, topkQ(), "filtered top-k")
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        requireSameResult(eq, eqQ(), "filtered equality")
+        requireSameResult(coarse, coarseQ(), "filtered coarse global")
+        requireSameResult(topk, topkQ(), "filtered top-k")
+      }
       val c = coarse.head()
       val out = eq
         .withColumn("eq_scans_view", lit(eqScans(v)))
@@ -174,8 +125,7 @@ object Round17 {
         .withColumn("topk_scans_source", lit(tkScans(t)))
         .withColumn("topk_take_ordered", lit(tkTakeOrdered))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q287: MIN/MAX materialized views — insert fast path, delete fallback
@@ -196,16 +146,15 @@ object Round17 {
     * (extremum-of-extrema), while SUM correctly refuses to read an
     * extremum view (the negative control). All plan facts and both
     * refresh audits ride in the hashed row. */
-  val q287MvMinMax: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q287")
-    try {
+  val q287MvMinMax: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r17_q287") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 36)                                 // v1
+      insertRange(spark, cat, "t", 0, 36)                                 // v1
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'vmin', 't', 'doc_id % 6', 'n_words', false, 'min')")
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -214,7 +163,7 @@ object Round17 {
       def refresh(view: String) = spark.sql(
         s"CALL $cat.system.refresh_mv('$view')")
         .select("applied_changes", "recomputed_groups").head()
-      insertRange(spark, cat, 36, 48)                                // v2
+      insertRange(spark, cat, "t", 36, 48)                                // v2
       val fast = refresh("vmin"); refresh("vmax")
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id IN (0, 7)")        // v3
       val del = refresh("vmin"); refresh("vmax")
@@ -247,11 +196,11 @@ object Round17 {
       val (mxScans, mxAgg) = planFacts(mx)
       val sm = sumQ()
       val (smScans, _) = planFacts(sm)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      requireSameResult(mn, minQ(), "min exact")
-      requireSameResult(gm, globalMinQ(), "min global roll-up")
-      requireSameResult(mx, maxQ(), "max roll-up")
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        requireSameResult(mn, minQ(), "min exact")
+        requireSameResult(gm, globalMinQ(), "min global roll-up")
+        requireSameResult(mx, maxQ(), "max roll-up")
+      }
       val maxRows = mx.orderBy("k2").collect()
       val out = mn.orderBy("k")
         .withColumn("min_scans_view", lit(mnScans(vmin)))
@@ -271,8 +220,7 @@ object Round17 {
         .withColumn("del_applied", lit(del.getLong(0)))
         .withColumn("del_recomputed", lit(del.getLong(1)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q288: JOIN (SPJG) materialized view — aggregate-over-join rewrite
@@ -303,9 +251,8 @@ object Round17 {
     *
     * All plan facts (view-only, no Join node, stale fallback) and
     * both refresh audits ride in the hashed row. */
-  val q288MvJoinView: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q288")
-    try {
+  val q288MvJoinView: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r17_q288") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -318,7 +265,7 @@ object Round17 {
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 36)                            // t v1
+      insertRange(spark, cat, "t", 0, 36)                            // t v1
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "6").load()
         .coalesce(1).sortWithinPartitions("doc_id")
@@ -330,7 +277,7 @@ object Round17 {
       spark.catalog.dropTempView(s"${cat}_dim")
       spark.sql(s"CALL $cat.system.create_join_mv('vj', 't', 'd', " +
         "'f.doc_id % 6', 'd.doc_id', 'd.doc_id', 'f.n_words', true)")
-      insertRange(spark, cat, 36, 48)                  // t v2 → delta
+      insertRange(spark, cat, "t", 36, 48)                  // t v2 → delta
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id IN (3, 10)")
                                                        // t v3 → signed
       org.apache.spark.sql.GraftBridge.addOptimization(spark,
@@ -376,10 +323,10 @@ object Round17 {
       val (postScans, postAgg) = planFacts(post)
       val g = globalQ()
       val (gScans, _) = planFacts(g)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      requireSameResult(post, joinQ(), "join-view aggregate")
-      requireSameResult(g, globalQ(), "join-view global roll-up")
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        requireSameResult(post, joinQ(), "join-view aggregate")
+        requireSameResult(g, globalQ(), "join-view global roll-up")
+      }
       val gr = g.head()
       val out = post.orderBy("k")
         .withColumn("pre_scans_view", lit(preScansView))
@@ -405,8 +352,7 @@ object Round17 {
         .withColumn("reseed_recomputed", lit(rs.getLong(1)))
         .withColumn("reseed_refreshed", lit(rs.getBoolean(2)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q290: filtered JOIN-view rewrite — key predicates over the join
@@ -422,9 +368,8 @@ object Round17 {
     * a Filter. The same equivalence lets `GROUP BY <fact-side join
     * key>` hit the view exactly. A non-key predicate refuses — the
     * real join plans. */
-  val q290MvJoinFiltered: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q290")
-    try {
+  val q290MvJoinFiltered: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r17_q290") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -435,7 +380,7 @@ object Round17 {
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(spark, cat, 0, 48)                            // t v1
+      insertRange(spark, cat, "t", 0, 48)                            // t v1
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "6").load()
         .coalesce(1).sortWithinPartitions("doc_id")
@@ -480,11 +425,11 @@ object Round17 {
       val (fkScans, fkAgg) = planFacts(fk)
       val nk = nonkeyQ()
       val (nkScans, _) = planFacts(nk)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      requireSameResult(eq, eqQ(), "filtered join-view equality")
-      requireSameResult(coarse, coarseQ(), "filtered join-view coarse")
-      requireSameResult(fk, factKeyQ(), "fact-side-key grouping")
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        requireSameResult(eq, eqQ(), "filtered join-view equality")
+        requireSameResult(coarse, coarseQ(), "filtered join-view coarse")
+        requireSameResult(fk, factKeyQ(), "fact-side-key grouping")
+      }
       val c = coarse.head()
       val fkSum = fk.agg(sum("s")).head().getLong(0)
       val out = eq.orderBy("k")
@@ -503,8 +448,7 @@ object Round17 {
         .withColumn("nonkey_scans_view", lit(nkScans(vj)))
         .withColumn("nonkey_scans_fact", lit(nkScans(t)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q289: multi-view cost choice — cheapest satisfying view wins
@@ -526,15 +470,14 @@ object Round17 {
     * same numbers SupportsReportStatistics serves the CBO) — zero
     * data files opened to decide. Plan facts (scans va / not vb /
     * not t) ride in the hashed row; rule-off parity is require-d. */
-  val q289MvCostChoice: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q289")
-    try {
+  val q289MvCostChoice: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r17_q289") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(spark, cat, 0, 48)                                 // v1
+      insertRange(spark, cat, "t", 0, 48)                                 // v1
       // fine view FIRST: naive first-match would pick it
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'vb', 't', 'doc_id', 'n_words', true)")
@@ -555,10 +498,10 @@ object Round17 {
       val (ruScans, ruAgg) = planFacts(ru)
       val ex = exact()
       val (exScans, exAgg) = planFacts(ex)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      requireSameResult(ru, rollup(), "cost-chosen roll-up")
-      requireSameResult(ex, exact(), "cost-chosen exact")
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        requireSameResult(ru, rollup(), "cost-chosen roll-up")
+        requireSameResult(ex, exact(), "cost-chosen exact")
+      }
       val exSum = ex.agg(sum("sum_words")).head().getLong(0)
       val out = ru.orderBy("k3")
         .withColumn("rollup_scans_va", lit(ruScans(va)))
@@ -571,8 +514,7 @@ object Round17 {
         .withColumn("exact_no_aggregate", lit(!exAgg))
         .withColumn("exact_total_words", lit(exSum))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   val queries: Map[String, Q] = Map(
     "q286_mv_filtered_rewrite" -> q286MvFilteredRewrite,

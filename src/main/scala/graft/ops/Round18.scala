@@ -1,9 +1,8 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Scratch.{insertRange, planFacts}
 
 /** Round-18 operators: closing the materialized-view optimizer's
   * highest-traffic gaps —
@@ -32,53 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Round18 {
   type Q = (SparkSession, String) => DataFrame
-
-  private def freshCatalog(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r18_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
-
-  /** Insert rows [lo, hi) of the generative corpus as ONE ordered file. */
-  private def insertRange(spark: SparkSession, cat: String, lo: Int,
-      hi: Int): Unit = {
-    spark.read.format("graft.sources.GraftDocsSource")
-      .option("rows", hi.toString).load()
-      .filter(col("doc_id") >= lo)
-      .coalesce(1).sortWithinPartitions("doc_id")
-      .createOrReplaceTempView(s"${cat}_b")
-    spark.sql(
-      s"""INSERT INTO $cat.t (doc_id, title, fp, n_words)
-         |SELECT doc_id, title, fp, n_words FROM ${cat}_b""".stripMargin)
-    spark.catalog.dropTempView(s"${cat}_b")
-  }
-
-  /** (scans `dir`?, holds a logical Aggregate?) for a frame's
-    * optimized plan. */
-  private def planFacts(df: DataFrame)
-      : (java.nio.file.Path => Boolean, Boolean) = {
-    val plan = df.queryExecution.optimizedPlan
-    val scans = (dir: java.nio.file.Path) => plan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2
-          .DataSourceV2ScanRelation
-          if s.scan.description.contains(dir.toString) => s
-    }.nonEmpty
-    val aggregates = plan.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-    }.nonEmpty
-    (scans, aggregates)
-  }
 
   private def requireSameResult(a: DataFrame, b: DataFrame, what: String)
       : Unit =
@@ -116,16 +68,15 @@ object Round18 {
     *
     * Every rewritten shape is require-checked against its rule-off
     * twin IN the query, and the plan facts ride in the hashed row. */
-  val q291MvCompositeKey: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q291")
-    try {
+  val q291MvCompositeKey: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r18_q291") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 48)                             // v1
+      insertRange(spark, cat, "t", 0, 48)                             // v1
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'vc', 't', 'doc_id % 6', 'n_words', true, 'sum', 'doc_id % 4')")
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id IN (7, 20)")   // v2
@@ -168,12 +119,12 @@ object Round18 {
       val (nkScans, _) = planFacts(nk)
       val fg = finerQ()
       val (fgScans, _) = planFacts(fg)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      requireSameResult(ex, exactQ(), "composite exact")
-      requireSameResult(ru, rollQ(), "composite key-drop roll-up")
-      requireSameResult(mx, mixQ(), "composite mixed roll-up")
-      requireSameResult(fl, filtQ(), "composite filtered exact")
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        requireSameResult(ex, exactQ(), "composite exact")
+        requireSameResult(ru, rollQ(), "composite key-drop roll-up")
+        requireSameResult(mx, mixQ(), "composite mixed roll-up")
+        requireSameResult(fl, filtQ(), "composite filtered exact")
+      }
       val ruSum = ru.agg(sum("s")).head().getLong(0)
       val flSum = fl.agg(sum("s")).head().getLong(0)
       val mxN = mx.agg(sum("n")).head().getLong(0)
@@ -197,8 +148,7 @@ object Round18 {
         .withColumn("finer_scans_view", lit(fgScans(v)))
         .withColumn("finer_scans_source", lit(fgScans(t)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q293: DECIMAL sums — exact unscaled maintenance + exact rewrite
@@ -222,16 +172,15 @@ object Round18 {
     * The hashed row carries the decimal totals as canonical strings
     * (both engines render full scale) plus the unscaled integers —
     * exactness checked with zero float formatting slack. */
-  val q293MvDecimalSum: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q293")
-    try {
+  val q293MvDecimalSum: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r18_q293") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(spark, cat, 0, 48)                             // v1
+      insertRange(spark, cat, "t", 0, 48)                             // v1
       val sumExpr = "CAST(n_words AS DECIMAL(10,2)) * 1.01"
       spark.sql(s"CALL $cat.system.create_mv(" +
         s"'vd', 't', 'doc_id % 6', '$sumExpr', true)")
@@ -267,11 +216,11 @@ object Round18 {
       val (gScans, _) = planFacts(g)
       val av = avgQ()
       val (avScans, _) = planFacts(av)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      // bit-identical: exceptAll compares the DECIMAL values exactly
-      requireSameResult(ex, exactQ(), "decimal exact")
-      requireSameResult(g, globalQ(), "decimal global roll-up")
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        // bit-identical: exceptAll compares the DECIMAL values exactly
+        requireSameResult(ex, exactQ(), "decimal exact")
+        requireSameResult(g, globalQ(), "decimal global roll-up")
+      }
       val gRow = g.head()
       val gStr = gRow.getDecimal(0).toPlainString
       val gUnscaled = gRow.getDecimal(0).unscaledValue.longValueExact
@@ -289,8 +238,7 @@ object Round18 {
         .withColumn("avg_scans_source", lit(avScans(t)))
         .withColumn("precision_refused", lit(precisionRefused))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   // ---------------------------------------------------------------------
   // q292: 3-way CHAIN join view — fact ⋈ dim ⋈ dim (snowflake)
@@ -319,9 +267,8 @@ object Round18 {
     * All plan facts and the reseed audit ride in the hashed row;
     * every rewritten shape is require-checked against its rule-off
     * twin. */
-  val q292MvChainJoin: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q292")
-    try {
+  val q292MvChainJoin: Q = (spark, dir) =>
+    Scratch.withCatalog(spark, "r18_q292") { (cat, wh) =>
       Seq("t", "c", "n").foreach { tbl =>
         spark.sql(
           s"""CREATE TABLE $cat.$tbl (
@@ -330,7 +277,7 @@ object Round18 {
              |TBLPROPERTIES ('versioned' = 'true',
              |  'delete.mode' = 'merge-on-read')""".stripMargin)
       }
-      insertRange(spark, cat, 0, 36)                            // t v1
+      insertRange(spark, cat, "t", 0, 36)                            // t v1
       def seedDim(tbl: String, rows: Int): Unit = {
         spark.read.format("graft.sources.GraftDocsSource")
           .option("rows", rows.toString).load()
@@ -346,7 +293,7 @@ object Round18 {
       spark.sql(s"CALL $cat.system.create_chain_mv('v3', 't', 'c', " +
         "'n', 'f.doc_id % 8', 'd1.doc_id', 'd1.doc_id % 4', " +
         "'d2.doc_id', 'd2.doc_id', 'f.n_words', true)")
-      insertRange(spark, cat, 36, 48)                  // t v2 → delta
+      insertRange(spark, cat, "t", 36, 48)                  // t v2 → delta
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id = 6")
                                                        // t v3 → signed
       org.apache.spark.sql.GraftBridge.addOptimization(spark,
@@ -393,11 +340,11 @@ object Round18 {
       val (eqScans, eqAgg) = planFacts(eq)
       val g = globalQ()
       val (gScans, _) = planFacts(g)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      requireSameResult(post, chainQ(), "chain-view aggregate")
-      requireSameResult(eq, equivQ(), "chain-view equivalent grouping")
-      requireSameResult(g, globalQ(), "chain-view global roll-up")
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        requireSameResult(post, chainQ(), "chain-view aggregate")
+        requireSameResult(eq, equivQ(), "chain-view equivalent grouping")
+        requireSameResult(g, globalQ(), "chain-view global roll-up")
+      }
       val gr = g.head()
       val eqSum = eq.agg(sum("s")).head().getLong(0)
       val out = post.orderBy("k")
@@ -423,8 +370,7 @@ object Round18 {
         .withColumn("reseed_recomputed", lit(rs.getLong(1)))
         .withColumn("reseed_refreshed", lit(rs.getBoolean(2)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
-  }
+    }
 
   val queries: Map[String, Q] = Map(
     "q291_mv_composite_key" -> q291MvCompositeKey,

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.{GraftTableMeta, GraftVersions}
+import graft.ops.Scratch
 
 /** Round-13 wave 8: bucketed WAREHOUSE tables — `PARTITIONED BY
   * (bucket(n, doc_id))` persists a physical layout; every write path
@@ -14,26 +15,13 @@ import graft.sources.{GraftTableMeta, GraftVersions}
   */
 class BucketedWarehouseSpec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_bkt_$tag")
-    val cat = s"bkt_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
   private def docsRange(rows: Int) =
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", rows.toString).load()
 
   test("bucketed CREATE persists the layout; every file carries its bucket " +
       "and holds only its residue class") {
-    val (cat, wh) = freshCatalog("lay")
-    try {
+    Scratch.withCatalog(spark, "bkt_lay") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (doc_id BIGINT, title STRING, fp BIGINT,
            |  n_words INT) PARTITIONED BY (bucket(4, doc_id))
@@ -60,81 +48,80 @@ class BucketedWarehouseSpec extends SparkSpec {
         spark.sql(s"CREATE TABLE $cat.bad (doc_id BIGINT, title STRING, " +
           "fp BIGINT, n_words INT) PARTITIONED BY (n_words)")
       }
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("two bucketed warehouse tables storage-partition-join with no " +
       "exchange; MOR deletes and compaction keep the layout") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val (cat, wh) = freshCatalog("spj")
-    val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      def mkTable(name: String, rows: Int): Unit = {
-        docsRange(rows)
-          .writeTo(s"$cat.$name")
-          .partitionedBy(org.apache.spark.sql.functions.bucket(8,
-            org.apache.spark.sql.functions.col("doc_id")))
-          .tableProperty("versioned", "true")
-          .tableProperty("delete.mode", "merge-on-read")
-          .create()
-      }
-      mkTable("a", 400)
-      mkTable("b", 300)
-      // mutate both: a MOR delete (masks; layout untouched) and an
-      // OPTIMIZE on the other (rewrite; fan-out keeps files bucketed)
-      spark.sql(s"DELETE FROM $cat.a WHERE doc_id % 11 = 4")
-      GraftVersions.compact(spark, wh.resolve("b"), targetFiles = 2)
-      assert(GraftVersions.latest(wh.resolve("b")).get.entries
-        .forall(_.bucket.isDefined), "compaction must keep bucket ids")
+    Scratch.withCatalog(spark, "bkt_spj") { (cat, wh) =>
+      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
+        "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
+      val prev = keys.map(k => k -> spark.conf.getOption(k))
+      try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+        def mkTable(name: String, rows: Int): Unit = {
+          docsRange(rows)
+            .writeTo(s"$cat.$name")
+            .partitionedBy(org.apache.spark.sql.functions.bucket(8,
+              org.apache.spark.sql.functions.col("doc_id")))
+            .tableProperty("versioned", "true")
+            .tableProperty("delete.mode", "merge-on-read")
+            .create()
+        }
+        mkTable("a", 400)
+        mkTable("b", 300)
+        // mutate both: a MOR delete (masks; layout untouched) and an
+        // OPTIMIZE on the other (rewrite; fan-out keeps files bucketed)
+        spark.sql(s"DELETE FROM $cat.a WHERE doc_id % 11 = 4")
+        GraftVersions.compact(spark, wh.resolve("b"), targetFiles = 2)
+        assert(GraftVersions.latest(wh.resolve("b")).get.entries
+          .forall(_.bucket.isDefined), "compaction must keep bucket ids")
 
-      def spjQuery = spark.table(s"$cat.a").select("doc_id", "n_words")
-        .join(spark.table(s"$cat.b").select("doc_id", "fp"), "doc_id")
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"),
-          org.apache.spark.sql.functions.sum("n_words").as("w"))
-      val df = spjQuery
-      val row = df.head()
-      // expected: ids in [0,300) surviving the %11=4 delete
-      val expected = (0L until 300L).filterNot(_ % 11 == 4)
-      assert(row.getLong(0) == expected.length)
-      assert(row.getLong(1) == expected.map(i => (i % 91 + 9)).sum)
-      val join = df.queryExecution.executedPlan.collectFirst {
-        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
-        case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
-      }.getOrElse(fail("no shuffle-family join in plan"))
-      assert(join.collect { case s: ShuffleExchangeExec => s }.isEmpty,
-        s"bucketed warehouse tables must join storage-partitioned:\n$join")
+        def spjQuery = spark.table(s"$cat.a").select("doc_id", "n_words")
+          .join(spark.table(s"$cat.b").select("doc_id", "fp"), "doc_id")
+          .agg(org.apache.spark.sql.functions.count(
+            org.apache.spark.sql.functions.lit(1)).as("n"),
+            org.apache.spark.sql.functions.sum("n_words").as("w"))
+        val df = spjQuery
+        val row = df.head()
+        // expected: ids in [0,300) surviving the %11=4 delete
+        val expected = (0L until 300L).filterNot(_ % 11 == 4)
+        assert(row.getLong(0) == expected.length)
+        assert(row.getLong(1) == expected.map(i => (i % 91 + 9)).sum)
+        val join = df.queryExecution.executedPlan.collectFirst {
+          case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
+          case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
+        }.getOrElse(fail("no shuffle-family join in plan"))
+        assert(join.collect { case s: ShuffleExchangeExec => s }.isEmpty,
+          s"bucketed warehouse tables must join storage-partitioned:\n$join")
 
-      // control: bucketing off → both sides exchange, same answer
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-      val off = spjQuery
-      val offRow = off.head()
-      assert(offRow.getLong(0) == row.getLong(0) &&
-        offRow.getLong(1) == row.getLong(1))
-      val offJoin = off.queryExecution.executedPlan.collectFirst {
-        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
-        case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
-      }.get
-      assert(offJoin.collect { case s: ShuffleExchangeExec => s }.size == 2,
-        "without v2 bucketing both join inputs must exchange")
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
+        // control: bucketing off → both sides exchange, same answer
+        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
+        val off = spjQuery
+        val offRow = off.head()
+        assert(offRow.getLong(0) == row.getLong(0) &&
+          offRow.getLong(1) == row.getLong(1))
+        val offJoin = off.queryExecution.executedPlan.collectFirst {
+          case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
+          case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
+        }.get
+        assert(offJoin.collect { case s: ShuffleExchangeExec => s }.size == 2,
+          "without v2 bucketing both join inputs must exchange")
+      } finally {
+        prev.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None)    => spark.conf.unset(k)
+        }
       }
-      dropCatalog(cat, wh)
     }
   }
 
   test("the files metadata table exposes the live manifest: buckets, " +
       "counters, masks, stats envelope — and only for versioned parents") {
-    val (cat, wh) = freshCatalog("fmeta")
-    try {
+    Scratch.withCatalog(spark, "bkt_fmeta") { (cat, wh) =>
       // 2 input partitions × 4 buckets → 8 files of 5 rows each: no
       // mask below can fully cover a file (a 1-row bucket file whose
       // row is deleted would drop from the manifest and shrink the
@@ -168,14 +155,13 @@ class BucketedWarehouseSpec extends SparkSpec {
       intercept[Exception] {
         spark.sql(s"SELECT * FROM $cat.plain.files").collect()
       }
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("streaming epochs into a bucketed table keep the layout: every " +
       "sink-committed file carries its bucket and residue class") {
-    val (cat, wh) = freshCatalog("stream")
-    val cp = Files.createTempDirectory("graft_bkt_stream_cp")
-    try {
+    Scratch.withCatalog(spark, "bkt_stream") { (cat, wh) =>
+      val cp = Scratch.dir(wh, "cp")
       spark.sql(
         s"""CREATE TABLE $cat.sink (doc_id BIGINT, title STRING, fp BIGINT,
            |  n_words INT) PARTITIONED BY (bucket(4, doc_id))
@@ -187,7 +173,7 @@ class BucketedWarehouseSpec extends SparkSpec {
         .writeStream.option("checkpointLocation", cp.toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .toTable(s"$cat.sink")
-      assert(q.awaitTermination(120000), "drain did not terminate")
+      Scratch.drain(q, "bkt_stream")
       val dir = wh.resolve("sink")
       val entries = GraftVersions.latest(dir).get.entries
       assert(entries.nonEmpty && entries.forall(_.bucket.isDefined),
@@ -199,16 +185,12 @@ class BucketedWarehouseSpec extends SparkSpec {
       }
       assert(spark.sql(s"SELECT COUNT(*) FROM $cat.sink")
         .head().getLong(0) == 24)
-    } finally {
-      dropCatalog(cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
     }
   }
 
   test("a scan without the bucket column, and a table with pre-layout " +
       "files, degrade to unknown partitioning — never a wrong grouping") {
-    val (cat, wh) = freshCatalog("deg")
-    try {
+    Scratch.withCatalog(spark, "bkt_deg") { (cat, wh) =>
       docsRange(40)
         .writeTo(s"$cat.t")
         .partitionedBy(org.apache.spark.sql.functions.bucket(4,
@@ -227,6 +209,6 @@ class BucketedWarehouseSpec extends SparkSpec {
           GraftVersions.FileEntry.NoStats)))
       val n = spark.sql(s"SELECT COUNT(*) FROM $cat.t").head().getLong(0)
       assert(n == 41)
-    } finally dropCatalog(cat, wh)
+    }
   }
 }

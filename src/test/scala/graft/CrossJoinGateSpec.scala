@@ -21,11 +21,10 @@ import scala.collection.mutable
   * reason its sides are bounded, and stale entries are deleted, not
   * kept as loopholes.
   *
-  * Coverage matches WindowGateSpec: executed plans of the returned
-  * DataFrame plus every INTERNAL eager action (driverLiteral collects),
-  * captured via QueryExecutionListener with a synchronous flush per
-  * query; per-query failures are recorded and reported after the full
-  * sweep so one broken query can't mask the rest.
+  * Coverage matches WindowGateSpec, from the same [[PlanSweep]]:
+  * executed plans of the returned DataFrame plus every INTERNAL eager
+  * action (driverLiteral collects); per-query failures are reported
+  * after the full sweep so one broken query can't mask the rest.
   */
 class CrossJoinGateSpec extends SparkSpec {
 
@@ -64,50 +63,20 @@ class CrossJoinGateSpec extends SparkSpec {
     "q50_cosine_topk" -> "BROADCAST-PROBE: single query vector × corpus scan",
     "q51_ann_ivf" -> "BROADCAST-PROBE: query vector × centroids, then × probed-cell candidates")
 
-  private def nlNodes(p: SparkPlan): Seq[String] = p.collect {
-    case c: CartesianProductExec => Seq("cartesian")
-    case b: BroadcastNestedLoopJoinExec => Seq(s"bnlj(${b.joinType})")
-    case a: AdaptiveSparkPlanExec => nlNodes(a.executedPlan)
-    case s: QueryStageExec => nlNodes(s.plan)
-  }.flatten
+  private def nlNodes(p: SparkPlan): Seq[String] =
+    PlanSweep.nodes(p).collect {
+      case _: CartesianProductExec => "cartesian"
+      case b: BroadcastNestedLoopJoinExec => s"bnlj(${b.joinType})"
+    }
 
   test("every cartesian/nested-loop join in every query's plan is a whitelisted bounded audit") {
-    val offenders = mutable.LinkedHashMap[String, String]()
-    val usedWhitelist = mutable.Set[String]()
-    @volatile var current = "<init>"
-    def record(name: String, plan: SparkPlan): Unit = {
-      val bad = nlNodes(plan)
-      if (bad.nonEmpty) {
-        if (whitelist.contains(name)) usedWhitelist += name
-        else if (!offenders.contains(name))
-          offenders += name -> bad.mkString(",")
-      }
+    val PlanSweep.Sweep(plans, failed) = PlanSweep(sf)
+    val flagged = plans.collect {
+      case (name, ps) if ps.all.exists(nlNodes(_).nonEmpty) =>
+        name -> ps.all.map(nlNodes).find(_.nonEmpty).get.mkString(",")
     }
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = record(current, qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val failed = mutable.LinkedHashMap[String, String]()
-    try {
-      for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-        current = name
-        try {
-          val df = fn(spark, sf)
-          record(name, df.queryExecution.executedPlan)
-          GraftTestBridge.flushListeners(spark.sparkContext)
-        } catch {
-          case e: Throwable =>
-            failed += name -> e.toString.linesIterator.next().take(160)
-        }
-        spark.catalog.clearCache()
-      }
-    } finally {
-      GraftTestBridge.flushListeners(spark.sparkContext)
-      spark.listenerManager.unregister(listener)
-    }
+    val offenders = flagged.filterNot { case (n, _) => whitelist.contains(n) }
+    val usedWhitelist = flagged.map(_._1).filter(whitelist.contains).toSet
     assert(offenders.isEmpty,
       s"cartesian/nested-loop join outside the whitelist:\n" +
         offenders.map { case (n, w) => s"  $n: $w" }.mkString("\n"))

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.{GraftDV, GraftTableMeta, GraftVersions}
+import graft.ops.Scratch
+import graft.ops.Scratch.insertRange
 
 /** Round-13 wave 6: the three-tier DELETE story (metadata-only,
   * merge-on-read deletion vectors, copy-on-write fallback), manifest
@@ -11,18 +13,6 @@ import graft.sources.{GraftDV, GraftTableMeta, GraftVersions}
   */
 class DeletionVectorSpec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_dv_$tag")
-    val cat = s"dv_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
   private def docsRange(rows: Int) =
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", rows.toString).load()
@@ -46,8 +36,7 @@ class DeletionVectorSpec extends SparkSpec {
 
   test("MOR delete masks rows without touching data bytes; masks compose; " +
       "a fully-deleted file leaves the live set") {
-    val (cat, wh) = freshCatalog("mor")
-    try {
+    Scratch.withCatalog(spark, "dv_mor") { (cat, wh) =>
       docsRange(40)
         .repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -103,12 +92,11 @@ class DeletionVectorSpec extends SparkSpec {
       assert(vc.entries.forall(_.dv.isEmpty))
       assert(spark.sql(s"SELECT COUNT(*) FROM $cat.t").head().getLong(0) ==
         (10L until 40L).count(i => i % 7 != 3 && i % 7 != 5))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("two CONCURRENT MOR deletes union their masks (neither is lost)") {
-    val (cat, wh) = freshCatalog("race")
-    try {
+    Scratch.withCatalog(spark, "dv_race") { (cat, wh) =>
       docsRange(60)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("delete.mode", "merge-on-read").create()
@@ -125,13 +113,12 @@ class DeletionVectorSpec extends SparkSpec {
         "both deletes' masks must survive the race")
       val log = GraftVersions.listVersions(wh.resolve("t"))
       assert(log.count(_.op == "delete") == 2, "two serialized delete commits")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("metadata delete: provable predicates drop files with NO scan job; " +
       "partial predicates fall back to the row-level path") {
-    val (cat, wh) = freshCatalog("meta")
-    try {
+    Scratch.withCatalog(spark, "dv_meta") { (cat, wh) =>
       docsRange(40)
         .repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -183,13 +170,12 @@ class DeletionVectorSpec extends SparkSpec {
       }
       assert(remaining == GraftVersions.latest(dir).get.files.toSet,
         "vacuum keeps exactly the live files")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("manifest statistics: CBO auto-broadcasts the small versioned side; " +
       "reported rowCount tracks deletion vectors") {
-    val (cat, wh) = freshCatalog("stats")
-    try {
+    Scratch.withCatalog(spark, "dv_stats") { (cat, wh) =>
       docsRange(500)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("delete.mode", "merge-on-read").create()
@@ -215,13 +201,12 @@ class DeletionVectorSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin"),
         s"stats must drive an auto-broadcast:\n${plan.take(800)}")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("ALTER TABLE properties: CHECK validation on existing rows, UNSET, " +
       "delete.mode flip changes the delete path, bloom config post-create") {
-    val (cat, wh) = freshCatalog("alter")
-    try {
+    Scratch.withCatalog(spark, "dv_alter") { (cat, wh) =>
       docsRange(30).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       val dir = wh.resolve("t")
@@ -273,13 +258,12 @@ class DeletionVectorSpec extends SparkSpec {
       val last = GraftVersions.latest(dir).get
       assert(last.entries.exists(_.bloom.isDefined),
         "the post-ALTER insert's file must carry a bloom")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("MOR update: old rows masked in place, new rows in fresh files, " +
       "original bytes untouched; masks compose across generations") {
-    val (cat, wh) = freshCatalog("upd")
-    try {
+    Scratch.withCatalog(spark, "dv_upd") { (cat, wh) =>
       docsRange(40)
         .repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -318,13 +302,12 @@ class DeletionVectorSpec extends SparkSpec {
       assert(spark.sql(
         s"SELECT n_words FROM $cat.t VERSION AS OF 2 WHERE doc_id = 3")
         .head().getInt(0) == 0)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("MOR update atomicity: a CHECK-violating update lands NEITHER its " +
       "masks nor its rows") {
-    val (cat, wh) = freshCatalog("updatom")
-    try {
+    Scratch.withCatalog(spark, "dv_updatom") { (cat, wh) =>
       docsRange(20).writeTo(s"$cat.t")
         .tableProperty("versioned", "true")
         .tableProperty("update.mode", "merge-on-read")
@@ -343,13 +326,12 @@ class DeletionVectorSpec extends SparkSpec {
       spark.sql(s"UPDATE $cat.t SET n_words = 99 WHERE doc_id = 2")
       assert(spark.sql(s"SELECT n_words FROM $cat.t WHERE doc_id = 2")
         .head().getInt(0) == 99)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("MOR MERGE: update/delete/insert actions in one statement — masks, " +
       "a dropped fully-matched file, fresh insert files, one commit") {
-    val (cat, wh) = freshCatalog("merge")
-    try {
+    Scratch.withCatalog(spark, "dv_merge") { (cat, wh) =>
       docsRange(30)
         .repartitionByRange(3, org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -384,13 +366,12 @@ class DeletionVectorSpec extends SparkSpec {
         (15L until 30L).filter(_ % 2 == 0).map(i => (i, 0)) ++
         (30L until 40L).map(i => (i, (i % 91 + 9).toInt))
       assert(rows == expected.sortBy(_._1))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("manifest aggregate pushdown: unfiltered COUNT/MIN/MAX answer from " +
       "the manifest (DV-exact for COUNT, DV-declined for MIN/MAX)") {
-    val (cat, wh) = freshCatalog("agg")
-    try {
+    Scratch.withCatalog(spark, "dv_agg") { (cat, wh) =>
       docsRange(40)
         .repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -424,26 +405,18 @@ class DeletionVectorSpec extends SparkSpec {
       assert(one(s"SELECT COUNT(*) FROM $cat.t VERSION AS OF 1") == 40)
       assert(planOf(s"SELECT COUNT(*) FROM $cat.t VERSION AS OF 1")
         .contains("manifest-agg"))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("change feed startingVersion: a fresh stream tails from the named " +
       "commit instead of the initial snapshot; vacuumed starts reject") {
-    val (cat, wh) = freshCatalog("sv")
-    val sink = Files.createTempDirectory("graft_sv_sink")
-    val cp = Files.createTempDirectory("graft_sv_cp")
-    try {
+    Scratch.withCatalog(spark, "dv_sv") { (cat, wh) =>
+      val sink = Scratch.dir(wh, "sink")
+      val cp = Scratch.dir(wh, "cp")
       docsRange(20).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create() // v0 enable, v1 CTAS
-      def insertRange(lo: Int, hi: Int): Unit = {
-        docsRange(hi).filter(
-          org.apache.spark.sql.functions.col("doc_id") >= lo)
-          .createOrReplaceTempView(s"${cat}_ins")
-        spark.sql(s"INSERT INTO $cat.t SELECT * FROM ${cat}_ins")
-        spark.catalog.dropTempView(s"${cat}_ins")
-      }
-      insertRange(20, 25) // v2
-      insertRange(25, 30) // v3
+      insertRange(spark, cat, "t", 20, 25) // v2
+      insertRange(spark, cat, "t", 25, 30) // v3
       val q = spark.readStream.option("startingVersion", "2")
         .table(s"$cat.t")
         .writeStream.format("parquet")
@@ -451,7 +424,7 @@ class DeletionVectorSpec extends SparkSpec {
         .option("checkpointLocation", cp.toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      assert(q.awaitTermination(120000))
+      Scratch.drain(q, "dv_sv")
       val ids = spark.read.parquet(sink.toString)
         .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
       assert(ids == (20L until 30L),
@@ -459,32 +432,24 @@ class DeletionVectorSpec extends SparkSpec {
 
       // a start whose diff base was vacuumed rejects loudly
       GraftVersions.vacuum(wh.resolve("t"), keepLast = 2) // keeps v2,v3
-      val cp2 = Files.createTempDirectory("graft_sv_cp2")
-      try {
-        val e = intercept[Exception] {
-          val q2 = spark.readStream.option("startingVersion", "2")
-            .table(s"$cat.t")
-            .writeStream.format("parquet")
-            .option("path", sink.toString)
-            .option("checkpointLocation", cp2.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q2.awaitTermination(120000)
-          q2.exception.foreach(throw _)
-        }
-        assert(e.getMessage != null &&
-          e.getMessage.contains("startingVersion"), e.getMessage)
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(cp2.toFile)
-    } finally {
-      dropCatalog(cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
+      val cp2 = Scratch.dir(wh, "cp2")
+      val e = intercept[Exception] {
+        val q2 = spark.readStream.option("startingVersion", "2")
+          .table(s"$cat.t")
+          .writeStream.format("parquet")
+          .option("path", sink.toString)
+          .option("checkpointLocation", cp2.toString)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        Scratch.drain(q2, "dv_sv")
+      }
+      assert(e.getMessage != null &&
+        e.getMessage.contains("startingVersion"), e.getMessage)
     }
   }
 
   test("SHOW TBLPROPERTIES exposes the persisted store and versioning state") {
-    val (cat, wh) = freshCatalog("props")
-    try {
+    Scratch.withCatalog(spark, "dv_props") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true")
         .tableProperty("delete.mode", "merge-on-read")
@@ -499,17 +464,16 @@ class DeletionVectorSpec extends SparkSpec {
       val after = spark.sql(s"SHOW TBLPROPERTIES $cat.t").collect()
         .map(_.getString(0)).toSet
       assert(!after.contains("check.pos"))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("change feed: a deletion-vector commit fails the stream unless " +
       "ignoreDeletes, which skips it and keeps tailing") {
-    val (cat, wh) = freshCatalog("feed")
-    val sink1 = Files.createTempDirectory("graft_dv_feed_sink1")
-    val sink2 = Files.createTempDirectory("graft_dv_feed_sink2")
-    val cp1 = Files.createTempDirectory("graft_dv_feed_cp1")
-    val cp2 = Files.createTempDirectory("graft_dv_feed_cp2")
-    try {
+    Scratch.withCatalog(spark, "dv_feed") { (cat, wh) =>
+      val sink1 = Scratch.dir(wh, "sink1")
+      val sink2 = Scratch.dir(wh, "sink2")
+      val cp1 = Scratch.dir(wh, "cp1")
+      val cp2 = Scratch.dir(wh, "cp2")
       docsRange(20).writeTo(s"$cat.t")
         .tableProperty("versioned", "true")
         .tableProperty("delete.mode", "merge-on-read").create()
@@ -525,7 +489,7 @@ class DeletionVectorSpec extends SparkSpec {
           .option("checkpointLocation", cp.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        assert(q.awaitTermination(120000), "drain did not terminate")
+        Scratch.drain(q, "dv_feed")
       }
 
       // default: the delete commit poisons the feed (its pre-delete
@@ -547,12 +511,6 @@ class DeletionVectorSpec extends SparkSpec {
       // already-emitted appends), skips the delete, tails the insert
       assert(ids == ((0L until 20L) :+ 500L),
         s"feed must emit v1's files once and the late append: $ids")
-    } finally {
-      dropCatalog(cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(sink1.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(sink2.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp1.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp2.toFile)
     }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.GraftVersions
+import graft.ops.Scratch
 
 /** Round-14: equality deletes (`delete.mode=equality`) — Iceberg v2's
   * second delete format as the FOURTH delete tier. Key-equality
@@ -17,26 +18,13 @@ import graft.sources.GraftVersions
   */
 class EqualityDeleteSpec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_eq_$tag")
-    val cat = s"eq_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
   private def docsRange(rows: Int) =
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", rows.toString).load()
 
   test("equality delete: zero data IO, values route by stats, " +
       "re-insert of a deleted key is alive, time travel intact") {
-    val (cat, wh) = freshCatalog("basic")
-    try {
+    Scratch.withCatalog(spark, "eq_basic") { (cat, wh) =>
       docsRange(20).repartitionByRange(2,
           org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -66,13 +54,12 @@ class EqualityDeleteSpec extends SparkSpec {
       assert(spark.sql(
         s"SELECT SUM(eq_deletes) FROM $cat.t.files").head().getLong(0)
         == 2L)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("tier routing: provable whole-file scope still wins (metadata " +
       "delete); non-equality predicates fall back to copy-on-write") {
-    val (cat, wh) = freshCatalog("tiers")
-    try {
+    Scratch.withCatalog(spark, "eq_tiers") { (cat, wh) =>
       docsRange(20).repartitionByRange(2,
           org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -87,13 +74,12 @@ class EqualityDeleteSpec extends SparkSpec {
       val v = GraftVersions.latest(tdir).get
       assert(v.op == "delete", v.op)
       assert(spark.table(s"$cat.t").count() == 7L)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("change feed: an equality-delete commit emits row-exact delete " +
       "images (only rows live before the commit, only matching values)") {
-    val (cat, wh) = freshCatalog("cdf")
-    try {
+    Scratch.withCatalog(spark, "eq_cdf") { (cat, wh) =>
       docsRange(10).coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("delete.mode", "equality").create()
@@ -111,13 +97,12 @@ class EqualityDeleteSpec extends SparkSpec {
       assert(changes == Set(
         (1L, "delete", 2L), (4L, "delete", 2L), (7L, "delete", 3L)),
         changes.toString)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("manifest aggregate pushdown declines under a value mask; the " +
       "ordinary path still counts correctly") {
-    val (cat, wh) = freshCatalog("agg")
-    try {
+    Scratch.withCatalog(spark, "eq_agg") { (cat, wh) =>
       docsRange(10).coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("delete.mode", "equality").create()
@@ -135,13 +120,12 @@ class EqualityDeleteSpec extends SparkSpec {
       assert(!p.contains("manifest-agg"),
         "a value mask makes COUNT unknowable from the manifest")
       assert(spark.table(s"$cat.t").count() == 9L)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("OPTIMIZE: the rewrite path materializes value masks away; the " +
       "row-tracked concat path carries them without mixing value sets") {
-    val (cat, wh) = freshCatalog("opt")
-    try {
+    Scratch.withCatalog(spark, "eq_opt") { (cat, wh) =>
       // untracked: compaction rewrites through the scan → clean files
       docsRange(10).repartitionByRange(2,
           org.apache.spark.sql.functions.col("doc_id"))
@@ -169,6 +153,6 @@ class EqualityDeleteSpec extends SparkSpec {
       val ids = spark.sql(
         s"SELECT doc_id, _row_id FROM $cat.r ORDER BY doc_id").collect()
       assert(ids.length == 11 && ids.forall(!_.isNullAt(1)))
-    } finally dropCatalog(cat, wh)
+    }
   }
 }

@@ -1,34 +1,20 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.GraftVersions
+import graft.ops.Scratch
 
 /** Round-13 wave 10: SQL-callable maintenance procedures —
   * `CALL cat.system.{optimize,restore,vacuum}` over the versioned
   * warehouse tables, via Spark 4's DSv2 ProcedureCatalog. */
 class ProcedureSpec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_proc_$tag")
-    val cat = s"proc_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
   private def docsRange(rows: Int) =
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", rows.toString).load()
 
   test("CALL system.optimize / system.restore / system.vacuum run the " +
       "maintenance cycle from SQL with audited result rows") {
-    val (cat, wh) = freshCatalog("cycle")
-    try {
+    Scratch.withCatalog(spark, "proc_cycle") { (cat, wh) =>
       docsRange(40).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id >= 30") // v2 (metadata)
@@ -61,6 +47,6 @@ class ProcedureSpec extends SparkSpec {
       // unknown procedure and unknown table fail loudly
       intercept[Exception] { spark.sql(s"CALL $cat.system.frobnicate('t')") }
       intercept[Exception] { spark.sql(s"CALL $cat.system.vacuum('nope', 1)") }
-    } finally dropCatalog(cat, wh)
+    }
   }
 }

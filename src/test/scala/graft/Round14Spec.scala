@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.{GraftBucketFunction, GraftVersions}
+import graft.ops.Scratch
 
 /** Round-14 specs, across the round's waves:
   *
@@ -27,18 +28,6 @@ import graft.sources.{GraftBucketFunction, GraftVersions}
   */
 class Round14Spec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r14_$tag")
-    val cat = s"r14_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
   private def docsRange(rows: Int) =
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", rows.toString).load()
@@ -52,16 +41,14 @@ class Round14Spec extends SparkSpec {
       .option("checkpointLocation", cp.toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    assert(q.awaitTermination(120000), "drain did not terminate")
-    q.exception.foreach(throw _)
+    Scratch.drain(q, s"$cat feed")
   }
 
   test("change feed: a MOR UPDATE commit demands ignoreChanges — " +
       "ignoreDeletes alone must NOT admit it") {
-    val (cat, wh) = freshCatalog("morup")
-    val sinks = Seq.fill(3)(Files.createTempDirectory("graft_r14_sink"))
-    val cps = Seq.fill(3)(Files.createTempDirectory("graft_r14_cp"))
-    try {
+    Scratch.withCatalog(spark, "r14_morup") { (cat, wh) =>
+      val sinks = (0 until 3).map(i => Scratch.dir(wh, s"sinks$i"))
+      val cps = (0 until 3).map(i => Scratch.dir(wh, s"cps$i"))
       docsRange(20).writeTo(s"$cat.t")
         .tableProperty("versioned", "true")
         .tableProperty("update.mode", "merge-on-read").create()
@@ -94,19 +81,14 @@ class Round14Spec extends SparkSpec {
       assert(rows.count(_._1 == 3L) == 2,
         s"doc 3 must appear twice (original + post-update): ${rows.toSeq}")
       assert(rows.contains((3L, 999)))
-    } finally {
-      dropCatalog(cat, wh)
-      (sinks ++ cps).foreach(p =>
-        org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
     }
   }
 
   test("change feed: a removal-only delete commit (whole file dropped) " +
       "skips under ignoreDeletes — it must not demand ignoreChanges") {
-    val (cat, wh) = freshCatalog("filedrop")
-    val sinks = Seq.fill(2)(Files.createTempDirectory("graft_r14_fsink"))
-    val cps = Seq.fill(2)(Files.createTempDirectory("graft_r14_fcp"))
-    try {
+    Scratch.withCatalog(spark, "r14_filedrop") { (cat, wh) =>
+      val sinks = (0 until 2).map(i => Scratch.dir(wh, s"sinks$i"))
+      val cps = (0 until 2).map(i => Scratch.dir(wh, s"cps$i"))
       import org.apache.spark.sql.functions.col
       docsRange(20).repartitionByRange(2, col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -140,10 +122,6 @@ class Round14Spec extends SparkSpec {
       val ids = spark.read.parquet(sinks(1).toString)
         .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
       assert(ids == ((0L until 20L) :+ 500L), s"got $ids")
-    } finally {
-      dropCatalog(cat, wh)
-      (sinks ++ cps).foreach(p =>
-        org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
     }
   }
 
@@ -164,8 +142,7 @@ class Round14Spec extends SparkSpec {
 
   test("ADD COLUMN evolution: NULL backfill, typed round-trip, " +
       "pre-evolution time travel, and rejected unsafe changes") {
-    val (cat, wh) = freshCatalog("evo")
-    try {
+    Scratch.withCatalog(spark, "r14_evo") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
@@ -219,15 +196,14 @@ class Round14Spec extends SparkSpec {
         "already exists")
       rejects(s"ALTER TABLE $cat.t ADD COLUMNS (strict BIGINT NOT NULL)",
         "nullable")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("evolution composes with UPDATE, MOR, OPTIMIZE, and the feed: " +
       "added values survive rewrites, masks, and compaction") {
-    val (cat, wh) = freshCatalog("evoc")
-    val sink = Files.createTempDirectory("graft_r14_evsink")
-    val cp = Files.createTempDirectory("graft_r14_evcp")
-    try {
+    Scratch.withCatalog(spark, "r14_evoc") { (cat, wh) =>
+      val sink = Scratch.dir(wh, "sink")
+      val cp = Scratch.dir(wh, "cp")
       import org.apache.spark.sql.functions._
       docsRange(12).writeTo(s"$cat.t")
         .tableProperty("versioned", "true")
@@ -257,21 +233,16 @@ class Round14Spec extends SparkSpec {
         .option("checkpointLocation", cp.toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      assert(q.awaitTermination(120000), "feed drain did not terminate")
+      Scratch.drain(q, "feed")
       val feed = spark.read.parquet(sink.toString)
       assert(feed.columns.contains("score"))
       assert(feed.filter(col("doc_id") === 3 && col("score") === 30).count() >= 1)
-    } finally {
-      dropCatalog(cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
     }
   }
 
   test("RENAME/DROP by field id: names relabel, slots never move, " +
       "time travel replays the pre-mutation shape") {
-    val (cat, wh) = freshCatalog("mut")
-    try {
+    Scratch.withCatalog(spark, "r14_mut") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       docsRange(6).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()              // v0, v1
@@ -368,13 +339,12 @@ class Round14Spec extends SparkSpec {
       assert(vs.map(_.op).count(_ == "drop-column") == 1)
       assert(vs.filter(v => v.op == "rename-column" ||
         v.op == "drop-column").forall(!_.dataChange))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("INT -> BIGINT widening: metadata-only, time travel keeps the " +
       "old type, non-widening changes refuse") {
-    val (cat, wh) = freshCatalog("widen")
-    try {
+    Scratch.withCatalog(spark, "r14_widen") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.types.{IntegerType, LongType}
       docsRange(4).writeTo(s"$cat.t")
@@ -423,13 +393,12 @@ class Round14Spec extends SparkSpec {
       }
       val ops = GraftVersions.listVersions(wh.resolve("t")).map(_.op)
       assert(ops.count(_ == "widen-column") == 1, ops.toString)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("column DEFAULTs: pre-ADD rows read the exists-default, INSERT " +
       "omissions fill the current default, explicit NULL survives") {
-    val (cat, wh) = freshCatalog("dflt")
-    try {
+    Scratch.withCatalog(spark, "r14_dflt") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       docsRange(6).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()              // v0, v1
@@ -488,13 +457,12 @@ class Round14Spec extends SparkSpec {
       // time travel below the ADD presents the pre-default shape
       assert(!spark.sql(s"SELECT * FROM $cat.t VERSION AS OF 1")
         .columns.contains("tier"))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("concurrent DDL serializes under the table lock: racing ADD " +
       "COLUMNs both land") {
-    val (cat, wh) = freshCatalog("ddlrace")
-    try {
+    Scratch.withCatalog(spark, "r14_ddlrace") { (cat, wh) =>
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -514,13 +482,12 @@ class Round14Spec extends SparkSpec {
       val added = graft.sources.GraftSchemas
         .effectiveAdded(wh.resolve("t"))
       assert(added.map(_.idx).toSeq == (0 until 4), added.toString)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("sidecar blobs: blooms and large DVs leave the manifest lines, " +
       "survive OPTIMIZE/RESTORE/vacuum, and still prune") {
-    val (cat, wh) = freshCatalog("sidecar")
-    try {
+    Scratch.withCatalog(spark, "r14_sidecar") { (cat, wh) =>
       import org.apache.spark.sql.functions.col
       docsRange(600).repartitionByRange(3, col("doc_id"))
         .writeTo(s"$cat.t")
@@ -578,15 +545,14 @@ class Round14Spec extends SparkSpec {
       assert(GraftVersions.latest(t).get.entries
         .exists(_.bloom.exists(_.mightContain(
           graft.sources.GraftBloom.key("title", "doc-1")))))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("change data feed: row-exact images for MOR commits, loud " +
       "rejection for file-granular COW rewrites, evolved columns ride") {
-    val (cat, wh) = freshCatalog("cdf")
-    val sink = Files.createTempDirectory("graft_r14_cdfsink")
-    val cp = Files.createTempDirectory("graft_r14_cdfcp")
-    try {
+    Scratch.withCatalog(spark, "r14_cdf") { (cat, wh) =>
+      val sink = Scratch.dir(wh, "sink")
+      val cp = Scratch.dir(wh, "cp")
       import org.apache.spark.sql.functions._
       docsRange(8).writeTo(s"$cat.t")
         .tableProperty("versioned", "true")
@@ -603,8 +569,7 @@ class Round14Spec extends SparkSpec {
           .option("checkpointLocation", cp.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        assert(q.awaitTermination(120000), "cdf drain did not terminate")
-        q.exception.foreach(throw _)
+        Scratch.drain(q, "cdf")
       }
       cdfDrain()
       val rows = spark.read.parquet(sink.toString)
@@ -626,10 +591,9 @@ class Round14Spec extends SparkSpec {
         post.toSeq.toString)
 
       // a COW update (no MOR mode) is file-granular: CDF refuses it
-      val (cat2, wh2) = freshCatalog("cdfcow")
-      val sink2 = Files.createTempDirectory("graft_r14_cdfsink2")
-      val cp2 = Files.createTempDirectory("graft_r14_cdfcp2")
-      try {
+      Scratch.withCatalog(spark, "r14_cdfcow") { (cat2, wh2) =>
+        val sink2 = Scratch.dir(wh2, "sink2")
+        val cp2 = Scratch.dir(wh2, "cp2")
         docsRange(8).writeTo(s"$cat2.t")
           .tableProperty("versioned", "true").create()
         spark.sql(s"UPDATE $cat2.t SET n_words = 0 WHERE doc_id = 2")
@@ -642,18 +606,13 @@ class Round14Spec extends SparkSpec {
             .option("checkpointLocation", cp2.toString)
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
-          q.awaitTermination(120000)
-          q.exception.foreach(throw _)
+          Scratch.drain(q, "r14_cdf")
         }
         def causes(t: Throwable) =
           Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
             .map(_.getMessage).filter(_ != null).toSeq
         assert(causes(e).exists(_.contains("file-granular")),
           causes(e).mkString(" | "))
-      } finally {
-        dropCatalog(cat2, wh2)
-        org.apache.commons.io.FileUtils.deleteDirectory(sink2.toFile)
-        org.apache.commons.io.FileUtils.deleteDirectory(cp2.toFile)
       }
 
       // batch CDF needs an explicit anchor: without startingVersion
@@ -671,10 +630,6 @@ class Round14Spec extends SparkSpec {
           .map(_.getMessage).filter(_ != null).toSeq
       assert(causes2(eBatch).exists(_.contains("startingVersion")),
         causes2(eBatch).mkString(" | "))
-    } finally {
-      dropCatalog(cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
     }
   }
 
@@ -744,8 +699,7 @@ class Round14Spec extends SparkSpec {
 
   test("table properties: unknown keys and bad mode values fail with " +
       "actionable errors at CREATE and ALTER") {
-    val (cat, wh) = freshCatalog("props")
-    try {
+    Scratch.withCatalog(spark, "r14_props") { (cat, wh) =>
       // CREATE with a typo'd mode value: rejected up front, naming the
       // legal values — not silently falling back to copy-on-write
       val eCreate = intercept[Exception] {
@@ -784,13 +738,12 @@ class Round14Spec extends SparkSpec {
       val props = spark.sql(s"SHOW TBLPROPERTIES $cat.t").collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
       assert(props.get("delete.mode").contains("merge-on-read"))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("shallow clone: zero-copy birth, free divergence, and a vacuum " +
       "that never touches source files") {
-    val (cat, wh) = freshCatalog("clone")
-    try {
+    Scratch.withCatalog(spark, "r14_clone") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       docsRange(10).writeTo(s"$cat.s")
         .tableProperty("versioned", "true")
@@ -842,14 +795,13 @@ class Round14Spec extends SparkSpec {
         Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
           .map(x => Option(x.getMessage).getOrElse("")).toSeq
       assert(causes(e).exists(_.contains("already exists")))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("MERGE WITH SCHEMA EVOLUTION: source-only columns evolve the " +
       "target through the AddColumn registry; unsupported types fail " +
       "loudly") {
-    val (cat, wh) = freshCatalog("mevo")
-    try {
+    Scratch.withCatalog(spark, "r14_mevo") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true")
@@ -899,13 +851,12 @@ class Round14Spec extends SparkSpec {
           .map(x => Option(x.getMessage).getOrElse("")).toSeq
       assert(causes(e).exists(m => m.contains("bigint") ||
         m.contains("boolean")), causes(e).mkString(" | "))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("branches: write-audit-publish — isolated DML on the branch " +
       "face, straight-line fast_forward, diverged publish rejected") {
-    val (cat, wh) = freshCatalog("wap")
-    try {
+    Scratch.withCatalog(spark, "r14_wap") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true")
@@ -961,13 +912,12 @@ class Round14Spec extends SparkSpec {
       spark.sql(s"CALL $cat.system.drop_branch('t', 'b2')").collect()
       assert(GraftVersions.listBranches(wh.resolve("t")).isEmpty)
       assert(spark.table(s"$cat.t").count() == 14)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("tags: named time travel, vacuum pinning, and drop_tag releasing " +
       "the pin") {
-    val (cat, wh) = freshCatalog("tags")
-    try {
+    Scratch.withCatalog(spark, "r14_tags") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()       // v0, v1
@@ -1021,7 +971,7 @@ class Round14Spec extends SparkSpec {
         spark.sql(s"CALL $cat.system.drop_tag('t', 'run-1')").collect()
       }
       assert(causes(eTwice).exists(_.contains("no tag")))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -1036,8 +986,7 @@ class Round14Spec extends SparkSpec {
 
   test("row lineage: ids survive delete + repeated OPTIMIZE (splice of " +
       "splices), and a second OPTIMIZE is what re-packs, not re-ids") {
-    val (cat, wh) = freshCatalog("lin1")
-    try {
+    Scratch.withCatalog(spark, "r14_lin1") { (cat, wh) =>
       docsRange(12).orderBy("doc_id").coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("row.tracking", "true")
@@ -1061,13 +1010,12 @@ class Round14Spec extends SparkSpec {
       val live = GraftVersions.latest(wh.resolve("t")).get
       assert(live.entries.length == 1 &&
         live.entries.head.lineage.nonEmpty, live.entries.toString)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("row lineage: late enablement backfills at the next commit, " +
       "updates retire ids forever, restore keeps them") {
-    val (cat, wh) = freshCatalog("lin2")
-    try {
+    Scratch.withCatalog(spark, "r14_lin2") { (cat, wh) =>
       // born UNTRACKED: ids read NULL, never invented
       docsRange(6).orderBy("doc_id").coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -1103,13 +1051,12 @@ class Round14Spec extends SparkSpec {
         "restore must resurrect the original id")
       assert(GraftVersions.latest(wh.resolve("t")).get.rowHwm.get
         >= id2._1 + 1, "high-water mark must never rewind")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("row lineage: bucketed tables compact WITHIN bucket classes — " +
       "layout and ids both survive") {
-    val (cat, wh) = freshCatalog("lin3")
-    try {
+    Scratch.withCatalog(spark, "r14_lin3") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (doc_id BIGINT, title STRING, fp BIGINT,
            |  n_words INT) PARTITIONED BY (bucket(3, doc_id))
@@ -1128,13 +1075,12 @@ class Round14Spec extends SparkSpec {
       assert(entries.length == 3 &&
         entries.flatMap(_.bucket).sorted == Seq(0, 1, 2),
         s"one compacted file per bucket class, each labeled: $entries")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("batch CDF: the two faces agree commit-for-commit; missing " +
       "startingVersion, bad ranges, and COUNT pushdown are all guarded") {
-    val (cat, wh) = freshCatalog("bcdf")
-    try {
+    Scratch.withCatalog(spark, "r14_bcdf") { (cat, wh) =>
       docsRange(6).orderBy("doc_id").coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("delete.mode", "merge-on-read").create()
@@ -1169,14 +1115,13 @@ class Round14Spec extends SparkSpec {
         cdfRead("startingVersion" -> "9").collect()
       }
       assert(causes(eRange).exists(_.contains("endingVersion")))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("partition-spec evolution: the layout gate degrades mixed-spec " +
       "snapshots and OPTIMIZE restores bucket-aligned planning; bad " +
       "evolutions reject") {
-    val (cat, wh) = freshCatalog("spec")
-    try {
+    Scratch.withCatalog(spark, "r14_spec") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (doc_id BIGINT, title STRING, fp BIGINT,
            |  n_words INT) PARTITIONED BY (bucket(2, doc_id))
@@ -1219,13 +1164,12 @@ class Round14Spec extends SparkSpec {
           "'layout.bucket'='doc_id:4')")
       }
       assert(causes(eUnv).exists(_.contains("versioned")))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("CDF x row lineage: a delete image names the exact row id it " +
       "retires; inserts carry their birth ids") {
-    val (cat, wh) = freshCatalog("cdflin")
-    try {
+    Scratch.withCatalog(spark, "r14_cdflin") { (cat, wh) =>
       docsRange(6).orderBy("doc_id").coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("row.tracking", "true")
@@ -1241,13 +1185,12 @@ class Round14Spec extends SparkSpec {
         (0L to 5L).map(d => d -> d).toMap, ch.mkString(", "))
       assert(ch.filter(_._2 == "delete").toSeq == Seq((4L, "delete", 4L)),
         ch.mkString(", "))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("remove_orphan_files: referenced files are immune at ANY cutoff, " +
       "and unversioned directories reject") {
-    val (cat, wh) = freshCatalog("orph")
-    try {
+    Scratch.withCatalog(spark, "r14_orph") { (cat, wh) =>
       docsRange(10).orderBy("doc_id").coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
       val t = wh.resolve("t")
@@ -1258,18 +1201,16 @@ class Round14Spec extends SparkSpec {
         s"nothing is orphaned here, nothing may go: $stats")
       assert(referenced.forall(f => Files.exists(t.resolve(f))))
       assert(spark.table(s"$cat.t").count() == 10L)
-      val plain = Files.createTempDirectory("graft_unversioned")
-      try intercept[IllegalArgumentException] {
+      val plain = Scratch.dir(wh, "unversioned")
+      intercept[IllegalArgumentException] {
         GraftVersions.removeOrphans(plain, Long.MaxValue)
-      } finally org.apache.commons.io.FileUtils
-        .deleteDirectory(plain.toFile)
-    } finally dropCatalog(cat, wh)
+      }
+    }
   }
 
   test("partitions metadata table: rollup groups by (spec, bucket), " +
       "reports NULL bucket for unbucketed files, and empties post-delete") {
-    val (cat, wh) = freshCatalog("parts")
-    try {
+    Scratch.withCatalog(spark, "r14_parts") { (cat, wh) =>
       // unbucketed table: one group per spec-0/NULL-bucket cohort
       docsRange(10).coalesce(1)
         .writeTo(s"$cat.u").tableProperty("versioned", "true").create()
@@ -1298,13 +1239,12 @@ class Round14Spec extends SparkSpec {
       intercept[Exception] {
         spark.sql(s"SELECT * FROM $cat.nope.partitions").collect()
       }
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("row lineage: clustered OPTIMIZE rejects on tracked tables; " +
       "dropping the property re-enables it") {
-    val (cat, wh) = freshCatalog("lin4")
-    try {
+    Scratch.withCatalog(spark, "r14_lin4") { (cat, wh) =>
       docsRange(10).orderBy("doc_id").coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("row.tracking", "true").create()
@@ -1320,13 +1260,12 @@ class Round14Spec extends SparkSpec {
       GraftVersions.compact(spark, wh.resolve("t"), 1,
         clusterBy = Seq("doc_id"))
       assert(spark.table(s"$cat.t").count() == 10L)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("refs metadata table: main + branches + tags with their heads; " +
       "drops shrink the relation; unversioned parents do not resolve") {
-    val (cat, wh) = freshCatalog("refs")
-    try {
+    Scratch.withCatalog(spark, "r14_refs") { (cat, wh) =>
       docsRange(10).coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
       def refs(): Seq[(String, String, Long, Option[Long])] =
@@ -1351,13 +1290,12 @@ class Round14Spec extends SparkSpec {
       intercept[Exception] {
         spark.sql(s"SELECT * FROM $cat.plain.refs").collect()
       }
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("vacuum is ref-aware: files only a live branch still references " +
       "survive main's retention, and the branch stays readable") {
-    val (cat, wh) = freshCatalog("vacref")
-    try {
+    Scratch.withCatalog(spark, "r14_vacref") { (cat, wh) =>
       docsRange(10).coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
       spark.sql(s"CALL $cat.system.branch('t', 'audit', -1)").collect()
@@ -1381,13 +1319,12 @@ class Round14Spec extends SparkSpec {
       assert(swept.removed.nonEmpty,
         "after the branch drops, the unreferenced original is orphaned")
       assert(spark.table(s"$cat.t").count() == 1L)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("CDF replication: a key inserted AND deleted inside the window " +
       "nets to a no-op on the replica (unmatched delete must not insert)") {
-    val (cat, wh) = freshCatalog("cdcrep")
-    try {
+    Scratch.withCatalog(spark, "r14_cdcrep") { (cat, wh) =>
       docsRange(5).coalesce(1)
         .writeTo(s"$cat.s").tableProperty("versioned", "true")
         .tableProperty("delete.mode", "merge-on-read").create()   // v1
@@ -1423,14 +1360,13 @@ class Round14Spec extends SparkSpec {
       val srcIds = spark.table(s"$cat.s").select("doc_id").collect()
         .map(_.getLong(0)).toSet
       assert(srcIds == repIds, s"source $srcIds vs replica $repIds")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("streaming replication: a drain with no new commits is a no-op " +
       "(checkpoint resume, no re-merge), and new commits still apply") {
-    val (cat, wh) = freshCatalog("srep")
-    val ckpt = Files.createTempDirectory("graft_srep_ckpt")
-    try {
+    Scratch.withCatalog(spark, "r14_srep") { (cat, wh) =>
+      val ckpt = Scratch.dir(wh, "ckpt")
       docsRange(6).coalesce(1)
         .writeTo(s"$cat.s").tableProperty("versioned", "true")
         .tableProperty("delete.mode", "merge-on-read").create()
@@ -1464,7 +1400,7 @@ class Round14Spec extends SparkSpec {
           .option("checkpointLocation", ckpt.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        assert(q.awaitTermination(180000)); q.exception.foreach(throw _)
+        Scratch.drain(q, "r14_srep")
       }
       spark.sql(s"DELETE FROM $cat.s WHERE doc_id = 2")
       drain()
@@ -1477,16 +1413,12 @@ class Round14Spec extends SparkSpec {
       assert(applied == 2L)
       val src = spark.table(s"$cat.s"); val rep = spark.table(s"$cat.r")
       assert(src.exceptAll(rep).isEmpty && rep.exceptAll(src).isEmpty)
-    } finally {
-      dropCatalog(cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }
   }
 
   test("MERGE NOT MATCHED BY SOURCE: unmatched target rows update and " +
       "delete; MOR masks every touched row and preserves the rest") {
-    val (cat, wh) = freshCatalog("nmbs")
-    try {
+    Scratch.withCatalog(spark, "r14_nmbs") { (cat, wh) =>
       // target [0,10); source names only 4..6 — rows 0..3 and 7..9 are
       // NOT MATCHED BY SOURCE
       docsRange(10).coalesce(1)
@@ -1513,6 +1445,6 @@ class Round14Spec extends SparkSpec {
       val v = GraftVersions.latest(wh.resolve("t")).get
       assert(v.entries.flatMap(_.dv).map(_.cardinality.toLong).sum == 4L)
       assert(v.op == "merge", v.op)
-    } finally dropCatalog(cat, wh)
+    }
   }
 }

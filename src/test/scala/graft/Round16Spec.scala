@@ -5,6 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions.col
 
 import graft.sources.{GraftTableMeta, GraftVersions}
+import graft.ops.Scratch
+import graft.ops.Scratch.insertRange
 
 /** Round-16: the self-maintaining-table quartet (auto-compaction, NDV
   * column statistics, CDF across schema evolution, branch merge-back)
@@ -26,40 +28,13 @@ import graft.sources.{GraftTableMeta, GraftVersions}
   */
 class Round16Spec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r16_$tag")
-    val cat = s"r16_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
-
-  private def insertRange(cat: String, table: String, lo: Int,
-      hi: Int): Unit = {
-    spark.read.format("graft.sources.GraftDocsSource")
-      .option("rows", hi.toString).load()
-      .filter(col("doc_id") >= lo)
-      .repartition(1).sortWithinPartitions("doc_id")
-      .createOrReplaceTempView(s"${cat}_ins")
-    spark.sql(
-      s"""INSERT INTO $cat.$table (doc_id, title, fp, n_words)
-         |SELECT doc_id, title, fp, n_words FROM ${cat}_ins""".stripMargin)
-    spark.catalog.dropTempView(s"${cat}_ins")
-  }
-
   // -------------------------------------------------------------------
   // advisor fix: INT identity columns reject at CREATE
   // -------------------------------------------------------------------
 
   test("identity columns must be BIGINT: INT rejects at CREATE with a " +
       "clear message (block allocation overflows INT after one write)") {
-    val (cat, wh) = freshCatalog("intid")
-    try {
+    Scratch.withCatalog(spark, "r16_intid") { (cat, wh) =>
       val e = intercept[Exception] {
         spark.sql(
           s"""CREATE TABLE $cat.t (
@@ -76,9 +51,9 @@ class Round16Spec extends SparkSpec {
            |  fp BIGINT NOT NULL, n_words INT NOT NULL,
            |  rid BIGINT GENERATED ALWAYS AS IDENTITY)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(cat, "t", 0, 3)
+      insertRange(spark, cat, "t", 0, 3)
       assert(spark.table(s"$cat.t").count() == 3)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -87,92 +62,80 @@ class Round16Spec extends SparkSpec {
 
   test("identity allocation is cross-process safe: two drivers (symlink" +
       "-alias lock split) minting concurrently never duplicate a key") {
-    val base = Files.createTempDirectory("graft_r16_xid")
-    val wh = base.resolve("wh")
-    Files.createDirectories(wh)
-    val alias = Files.createSymbolicLink(base.resolve("alias"), wh)
-    val cat1 = "r16_xid1"; val cat2 = "r16_xid2"
-    spark.conf.set(s"spark.sql.catalog.$cat1", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat1.warehouse", wh.toString)
-    spark.conf.set(s"spark.sql.catalog.$cat2", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat2.warehouse", alias.toString)
-    try {
-      spark.sql(
-        s"""CREATE TABLE $cat1.t (
-           |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
-           |  fp BIGINT NOT NULL, n_words INT NOT NULL,
-           |  rid BIGINT GENERATED ALWAYS AS IDENTITY)
-           |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      // the alias path interns a DIFFERENT lock string — the honest
-      // two-driver simulation (same trick as the commit-claim spec)
-      assert(wh.resolve("t").toAbsolutePath.normalize().toString !=
-        alias.resolve("t").toAbsolutePath.normalize().toString)
-      val perWriter = 6
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      try {
-        val futs = Seq(cat1, cat2).zipWithIndex.map { case (c, w) =>
-          pool.submit(new java.util.concurrent.Callable[java.lang.Boolean] {
-            override def call(): java.lang.Boolean = {
-              (0 until perWriter).foreach { i =>
-                val id = w * 100 + i
-                spark.sql(s"INSERT INTO $c.t (doc_id, title, fp, n_words)" +
-                  s" VALUES ($id, 'd$id', $id, 1)")
+    Scratch.withCatalog(spark, "r16_xid1") { (cat1, wh) =>
+      Scratch.withCatalog(spark, "r16_xid2") { (cat2, wh2) =>
+        spark.sql(
+          s"""CREATE TABLE $cat1.t (
+             |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
+             |  fp BIGINT NOT NULL, n_words INT NOT NULL,
+             |  rid BIGINT GENERATED ALWAYS AS IDENTITY)
+             |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
+        // cat2 reaches the same table through a symlink, whose path
+        // interns a DIFFERENT lock string — the honest two-driver
+        // simulation (same trick as the commit-claim spec)
+        Files.createSymbolicLink(wh2.resolve("t"), wh.resolve("t"))
+        assert(wh.resolve("t").toAbsolutePath.normalize().toString !=
+          wh2.resolve("t").toAbsolutePath.normalize().toString)
+        val perWriter = 6
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+        try {
+          val futs = Seq(cat1, cat2).zipWithIndex.map { case (c, w) =>
+            pool.submit(new java.util.concurrent.Callable[java.lang.Boolean] {
+              override def call(): java.lang.Boolean = {
+                (0 until perWriter).foreach { i =>
+                  val id = w * 100 + i
+                  spark.sql(s"INSERT INTO $c.t (doc_id, title, fp, n_words)" +
+                    s" VALUES ($id, 'd$id', $id, 1)")
+                }
+                java.lang.Boolean.TRUE
               }
-              java.lang.Boolean.TRUE
-            }
-          })
+            })
+          }
+          futs.foreach(_.get(180, java.util.concurrent.TimeUnit.SECONDS))
+        } finally pool.shutdown()
+        val rids = spark.sql(s"SELECT rid FROM $cat1.t")
+          .collect().map(_.getLong(0)).toSeq
+        assert(rids.size == 2 * perWriter)
+        assert(rids.distinct.size == 2 * perWriter,
+          s"duplicate surrogate keys minted: ${rids.sorted.mkString(",")}")
+        // the ground truth is the claim-file set: every claim range is
+        // disjoint by construction (names are bases, ends monotone)
+        val idDir = wh.resolve("t").resolve("_identity")
+        assert(Files.isDirectory(idDir), "claim files must exist")
+        import scala.jdk.CollectionConverters._
+        val s = Files.list(idDir)
+        val claims =
+          try s.iterator().asScala.toSeq
+            .filter(!_.getFileName.toString.endsWith(".tmp"))
+            .map { p =>
+              // rid is the first ADDED column → registry idx 0
+              val b = p.getFileName.toString.stripPrefix("c0-").toLong
+              val e = new String(Files.readAllBytes(p), "UTF-8").trim.toLong
+              (b, e)
+            }.sortBy(_._1)
+          finally s.close()
+        assert(claims.nonEmpty)
+        claims.sliding(2).foreach {
+          case Seq((_, e1), (b2, _)) => assert(e1 <= b2,
+            s"overlapping identity claims: $claims")
+          case _ => ()
         }
-        futs.foreach(_.get(180, java.util.concurrent.TimeUnit.SECONDS))
-      } finally pool.shutdown()
-      val rids = spark.sql(s"SELECT rid FROM $cat1.t")
-        .collect().map(_.getLong(0)).toSeq
-      assert(rids.size == 2 * perWriter)
-      assert(rids.distinct.size == 2 * perWriter,
-        s"duplicate surrogate keys minted: ${rids.sorted.mkString(",")}")
-      // the ground truth is the claim-file set: every claim range is
-      // disjoint by construction (names are bases, ends monotone)
-      val idDir = wh.resolve("t").resolve("_identity")
-      assert(Files.isDirectory(idDir), "claim files must exist")
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(idDir)
-      val claims =
-        try s.iterator().asScala.toSeq
-          .filter(!_.getFileName.toString.endsWith(".tmp"))
-          .map { p =>
-            // rid is the first ADDED column → registry idx 0
-            val b = p.getFileName.toString.stripPrefix("c0-").toLong
-            val e = new String(Files.readAllBytes(p), "UTF-8").trim.toLong
-            (b, e)
-          }.sortBy(_._1)
-        finally s.close()
-      assert(claims.nonEmpty)
-      claims.sliding(2).foreach {
-        case Seq((_, e1), (b2, _)) => assert(e1 <= b2,
-          s"overlapping identity claims: $claims")
-        case _ => ()
       }
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat1")
-      spark.conf.unset(s"spark.sql.catalog.$cat1.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat2")
-      spark.conf.unset(s"spark.sql.catalog.$cat2.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
   }
 
   test("vacuum folds old identity claims but always keeps each " +
       "column's frontier claim") {
-    val (cat, wh) = freshCatalog("idfold")
-    try {
+    Scratch.withCatalog(spark, "r16_idfold") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL,
            |  rid BIGINT GENERATED ALWAYS AS IDENTITY)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(cat, "t", 0, 2)
-      insertRange(cat, "t", 2, 4)
-      insertRange(cat, "t", 4, 6)
+      insertRange(spark, cat, "t", 0, 2)
+      insertRange(spark, cat, "t", 2, 4)
+      insertRange(spark, cat, "t", 4, 6)
       val idDir = wh.resolve("t").resolve("_identity")
       import scala.jdk.CollectionConverters._
       def claims(): Seq[java.nio.file.Path] = {
@@ -195,14 +158,14 @@ class Round16Spec extends SparkSpec {
       val beforeMaxEnd = 1000L // placeholder replaced below
       // the kept claim is the furthest end: a fourth insert continues
       // PAST it (no reuse of folded ranges)
-      insertRange(cat, "t", 6, 8)
+      insertRange(spark, cat, "t", 6, 8)
       val rids = spark.sql(s"SELECT rid FROM $cat.t")
         .collect().map(_.getLong(0)).toSeq
       assert(rids.distinct.size == 8, rids.sorted.mkString(","))
       assert(rids.max >= end, "post-fold allocation continues past the " +
         "kept frontier")
       assert(beforeMaxEnd > 0) // silence unused warning
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -211,8 +174,7 @@ class Round16Spec extends SparkSpec {
 
   test("eq-mask materialization and OPTIMIZE on a GENERATED ALWAYS AS " +
       "IDENTITY table preserve ids instead of tripping the guard") {
-    val (cat, wh) = freshCatalog("idrew")
-    try {
+    Scratch.withCatalog(spark, "r16_idrew") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -221,7 +183,7 @@ class Round16Spec extends SparkSpec {
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'equality',
            |  'eq.materialize.threshold' = '1')""".stripMargin)
-      insertRange(cat, "t", 0, 8)
+      insertRange(spark, cat, "t", 0, 8)
       val before = spark.sql(s"SELECT doc_id, rid FROM $cat.t")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // the equality delete's pending mask (1 value) crosses the
@@ -241,7 +203,7 @@ class Round16Spec extends SparkSpec {
       val optimized = spark.sql(s"SELECT doc_id, rid FROM $cat.t")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(optimized == after, "OPTIMIZE must preserve identity cells")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -290,8 +252,7 @@ class Round16Spec extends SparkSpec {
 
   test("auto-compaction respects the commit lock: concurrent appends " +
       "with the policy firing lose no rows and keep the log sane") {
-    val (cat, wh) = freshCatalog("acrace")
-    try {
+    Scratch.withCatalog(spark, "r16_acrace") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -324,13 +285,12 @@ class Round16Spec extends SparkSpec {
         s"threshold must bound the live set: ${head.entries.size}")
       assert(GraftVersions.listVersions(wh.resolve("t"))
         .exists(_.op == "compact"))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("auto-compaction preserves a bucketed table's layout (bins " +
       "never cross bucket classes) and a value layout's partition stats") {
-    val (cat, wh) = freshCatalog("aclay")
-    try {
+    Scratch.withCatalog(spark, "r16_aclay") { (cat, wh) =>
       // bucketed face
       spark.sql(
         s"""CREATE TABLE $cat.b (
@@ -364,7 +324,7 @@ class Round16Spec extends SparkSpec {
            |PARTITIONED BY (wb)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'compact.threshold' = '3')""".stripMargin)
-      (0 until 3).foreach(b => insertRange(cat, "v", 4 * b, 4 * b + 4))
+      (0 until 3).foreach(b => insertRange(spark, cat, "v", 4 * b, 4 * b + 4))
       val vhead = GraftVersions.latest(wh.resolve("v")).get
       assert(GraftVersions.listVersions(wh.resolve("v"))
         .exists(_.op == "compact"))
@@ -373,7 +333,7 @@ class Round16Spec extends SparkSpec {
         assert(lo == hi, s"partition value widened by compaction: $e")
       }
       assert(spark.table(s"$cat.v").count() == 12)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -405,65 +365,64 @@ class Round16Spec extends SparkSpec {
 
   test("NDV column statistics flip the CBO's build side: a grouped " +
       "subquery broadcasts when NDV proves it small") {
-    val (cat, wh) = freshCatalog("ndvcbo")
-    val oldCbo = spark.conf.get("spark.sql.cbo.enabled", "false")
-    val oldThresh =
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.sql(
-        s"""CREATE TABLE $cat.t (
-           |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
-           |  fp BIGINT NOT NULL, n_words INT NOT NULL)
-           |TBLPROPERTIES ('versioned' = 'true',
-           |  'ndv.columns' = 'doc_id,fp,n_words')""".stripMargin)
-      insertRange(cat, "t", 0, 600)
-      val path = wh.resolve("t").toString
-      def table() = spark.read.format("graft.sources.GraftDocsSource")
-        .option("path", path).load()
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      // sanity: the optimized plan carries the NDV the manifest holds
-      val stats = table().select("doc_id", "n_words")
-        .queryExecution.optimizedPlan.stats
-      val ndvByName = stats.attributeStats.toSeq
-        .map { case (attr, cs) => attr.name -> cs.distinctCount }.toMap
-      assert(ndvByName.get("n_words").flatten.map(_.toLong).contains(91L),
-        s"n_words NDV: $ndvByName")
-      assert(ndvByName.get("doc_id").flatten.map(_.toLong).contains(600L))
+    Scratch.withCatalog(spark, "r16_ndvcbo") { (cat, wh) =>
+      val oldCbo = spark.conf.get("spark.sql.cbo.enabled", "false")
+      val oldThresh =
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        spark.sql(
+          s"""CREATE TABLE $cat.t (
+             |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
+             |  fp BIGINT NOT NULL, n_words INT NOT NULL)
+             |TBLPROPERTIES ('versioned' = 'true',
+             |  'ndv.columns' = 'doc_id,fp,n_words')""".stripMargin)
+        insertRange(spark, cat, "t", 0, 600)
+        val path = wh.resolve("t").toString
+        def table() = spark.read.format("graft.sources.GraftDocsSource")
+          .option("path", path).load()
+        spark.conf.set("spark.sql.cbo.enabled", "true")
+        // sanity: the optimized plan carries the NDV the manifest holds
+        val stats = table().select("doc_id", "n_words")
+          .queryExecution.optimizedPlan.stats
+        val ndvByName = stats.attributeStats.toSeq
+          .map { case (attr, cs) => attr.name -> cs.distinctCount }.toMap
+        assert(ndvByName.get("n_words").flatten.map(_.toLong).contains(91L),
+          s"n_words NDV: $ndvByName")
+        assert(ndvByName.get("doc_id").flatten.map(_.toLong).contains(600L))
 
-      // a threshold between the 91-row aggregate's estimated size and
-      // the 600-row base relation's: only NDV-aware estimation can
-      // prove the grouped side broadcastable
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
-      val agg = table().groupBy(col("n_words"))
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("cnt"))
-      val joined = table().join(agg, Seq("n_words"))
-      val plan = joined.queryExecution.sparkPlan
-      val hasBroadcast = plan.collect {
-        case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
-          b
-      }.nonEmpty
-      assert(hasBroadcast,
-        s"NDV-estimated 91-row aggregate must broadcast:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", oldCbo)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      dropCatalog(cat, wh)
+        // a threshold between the 91-row aggregate's estimated size and
+        // the 600-row base relation's: only NDV-aware estimation can
+        // prove the grouped side broadcastable
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
+        val agg = table().groupBy(col("n_words"))
+          .agg(org.apache.spark.sql.functions.count(
+            org.apache.spark.sql.functions.lit(1)).as("cnt"))
+        val joined = table().join(agg, Seq("n_words"))
+        val plan = joined.queryExecution.sparkPlan
+        val hasBroadcast = plan.collect {
+          case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
+            b
+        }.nonEmpty
+        assert(hasBroadcast,
+          s"NDV-estimated 91-row aggregate must broadcast:\n$plan")
+      } finally {
+        spark.conf.set("spark.sql.cbo.enabled", oldCbo)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
+      }
     }
   }
 
   test("NDV sketches fold through OPTIMIZE (union across members) and " +
       "degrade to absent when any member lacks one") {
-    val (cat, wh) = freshCatalog("ndvopt")
-    try {
+    Scratch.withCatalog(spark, "r16_ndvopt") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true', 'row.tracking' = 'true',
            |  'ndv.columns' = 'doc_id')""".stripMargin)
-      insertRange(cat, "t", 0, 50)
-      insertRange(cat, "t", 30, 80) // overlapping ids: union dedupes
+      insertRange(spark, cat, "t", 0, 50)
+      insertRange(spark, cat, "t", 30, 80) // overlapping ids: union dedupes
       spark.sql(s"CALL $cat.system.optimize('t', 1, '')")
       val head = GraftVersions.latest(wh.resolve("t")).get
       assert(head.entries.size == 1)
@@ -471,7 +430,7 @@ class Round16Spec extends SparkSpec {
       assert(ndv.isDefined, "concat must union member sketches")
       assert(ndv.get.cols("doc_id").estimate == 80L,
         s"union of [0,50) and [30,80): ${ndv.get.cols("doc_id").estimate}")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -480,8 +439,7 @@ class Round16Spec extends SparkSpec {
 
   test("merge_branch rejects overlapping-scope divergence, a compacted " +
       "main, and row-tracked tables — loudly, with intact state") {
-    val (cat, wh) = freshCatalog("mbrej")
-    try {
+    Scratch.withCatalog(spark, "r16_mbrej") { (cat, wh) =>
       // overlapping scope: both sides delete from the same fork file
       spark.sql(
         s"""CREATE TABLE $cat.t (
@@ -489,7 +447,7 @@ class Round16Spec extends SparkSpec {
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(cat, "t", 0, 10)
+      insertRange(spark, cat, "t", 0, 10)
       spark.sql(s"CALL $cat.system.branch('t', 'b', -1)")
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id = 5")          // main
       spark.sql(s"DELETE FROM $cat.t.branch_b WHERE doc_id = 7") // branch
@@ -504,7 +462,7 @@ class Round16Spec extends SparkSpec {
       // compacted main: file diffing can't attribute the rewrite
       spark.sql(s"CALL $cat.system.drop_branch('t', 'b')")
       spark.sql(s"CALL $cat.system.branch('t', 'c', -1)")
-      insertRange(cat, "t", 10, 12)
+      insertRange(spark, cat, "t", 10, 12)
       spark.sql(s"CALL $cat.system.optimize('t', 1, '')")
       spark.sql(s"DELETE FROM $cat.t.branch_c WHERE doc_id = 2")
       val e2 = intercept[Exception] {
@@ -519,15 +477,15 @@ class Round16Spec extends SparkSpec {
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'row.tracking' = 'true')""".stripMargin)
-      insertRange(cat, "rt", 0, 4)
+      insertRange(spark, cat, "rt", 0, 4)
       spark.sql(s"CALL $cat.system.branch('rt', 'b', -1)")
-      insertRange(cat, "rt", 4, 6)
+      insertRange(spark, cat, "rt", 4, 6)
       val e3 = intercept[Exception] {
         spark.sql(s"CALL $cat.system.merge_branch('rt', 'b')")
       }
       assert(e3.getMessage.contains("row-tracked") ||
         e3.getMessage.contains("alias row"), e3.getMessage)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -566,14 +524,13 @@ class Round16Spec extends SparkSpec {
 
   test("static _file IN (...) predicates prune at plan time — the " +
       "scoped maintenance pass never opens the rest of the table") {
-    val (cat, wh) = freshCatalog("fstatic")
-    try {
+    Scratch.withCatalog(spark, "r16_fstatic") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      (0 until 4).foreach(b => insertRange(cat, "t", 4 * b, 4 * b + 4))
+      (0 until 4).foreach(b => insertRange(spark, cat, "t", 4 * b, 4 * b + 4))
       val names = GraftVersions.latest(wh.resolve("t")).get
         .entries.map(_.name)
       assert(names.size == 4)
@@ -583,7 +540,7 @@ class Round16Spec extends SparkSpec {
         .filter(col("_file").isin(names.head))
       assert(scanPartitions(one) == 1, "whitelist must prune to 1 file")
       assert(one.count() == 4)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -592,19 +549,18 @@ class Round16Spec extends SparkSpec {
 
   test("retention.versions expires old snapshots on commit, but a tag " +
       "pins its version through the policy") {
-    val (cat, wh) = freshCatalog("reten")
-    try {
+    Scratch.withCatalog(spark, "r16_reten") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'retention.versions' = '2')""".stripMargin)
-      insertRange(cat, "t", 0, 2)  // v1
+      insertRange(spark, cat, "t", 0, 2)  // v1
       spark.sql(s"CALL $cat.system.tag('t', 'keepme', 1)")
-      insertRange(cat, "t", 2, 4)  // v2 → expire to {1, 2}; v1 tagged
-      insertRange(cat, "t", 4, 6)  // v3 → {1 pinned, 2, 3}
-      insertRange(cat, "t", 6, 8)  // v4 → {1 pinned, 3, 4}
+      insertRange(spark, cat, "t", 2, 4)  // v2 → expire to {1, 2}; v1 tagged
+      insertRange(spark, cat, "t", 4, 6)  // v3 → {1 pinned, 2, 3}
+      insertRange(spark, cat, "t", 6, 8)  // v4 → {1 pinned, 3, 4}
       val kept = GraftVersions.listVersionNumbers(wh.resolve("t"))
       assert(kept.contains(1L), s"tagged v1 must survive: $kept")
       assert(kept.takeRight(2) == Seq(3L, 4L), kept.toString)
@@ -616,7 +572,7 @@ class Round16Spec extends SparkSpec {
       assert(spark.sql(s"SELECT * FROM $cat.t VERSION AS OF 1")
         .count() == 2)
       assert(spark.table(s"$cat.t").count() == 8)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -651,8 +607,7 @@ class Round16Spec extends SparkSpec {
 
   test("dynamic partition pruning on the value layout: a broadcast dim " +
       "join plans only the matching partitions' files") {
-    val (cat, wh) = freshCatalog("vdpp")
-    try {
+    Scratch.withCatalog(spark, "r16_vdpp") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -661,8 +616,8 @@ class Round16Spec extends SparkSpec {
            |    (CAST(n_words AS BIGINT) % 6))
            |PARTITIONED BY (wb)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(cat, "t", 0, 48)
-      insertRange(cat, "t", 48, 96)
+      insertRange(spark, cat, "t", 0, 48)
+      insertRange(spark, cat, "t", 48, 96)
       val total = GraftVersions.latest(wh.resolve("t")).get.entries.size
       assert(total == 12, s"6 values x 2 inserts: $total")
       // FILE-BACKED dim (manifest stats → the broadcast build side;
@@ -672,7 +627,7 @@ class Round16Spec extends SparkSpec {
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(cat, "d", 0, 8)
+      insertRange(spark, cat, "d", 0, 8)
       val joined = spark.sql(
         s"""SELECT f.wb, COUNT(*) AS n
            |FROM $cat.t f JOIN $cat.d d ON f.wb = d.doc_id
@@ -708,19 +663,18 @@ class Round16Spec extends SparkSpec {
       val emitted = fact.metrics("numOutputRows").value
       assert(emitted == expect.values.sum,
         s"DPP must read only wb in {1,3}'s files: emitted $emitted of 96")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("streaming sinks run the self-maintenance policies per epoch, " +
       "and retention never expires an appId's last txn record") {
-    val (cat, wh) = freshCatalog("strmnt")
-    val cp = Files.createTempDirectory("graft_r16_strmnt_cp")
-    try {
+    Scratch.withCatalog(spark, "r16_strmnt") { (cat, wh) =>
+      val cp = Scratch.dir(wh, "cp")
       spark.sql(
         s"""CREATE TABLE $cat.src (doc_id BIGINT, title STRING,
            |  fp BIGINT, n_words INT)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      (0 until 6).foreach(b => insertRange(cat, "src", 4 * b, 4 * b + 4))
+      (0 until 6).foreach(b => insertRange(spark, cat, "src", 4 * b, 4 * b + 4))
       spark.sql(
         s"""CREATE TABLE $cat.sink (doc_id BIGINT, title STRING,
            |  fp BIGINT, n_words INT)
@@ -732,7 +686,7 @@ class Round16Spec extends SparkSpec {
           .writeStream.option("checkpointLocation", cp.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable(s"$cat.sink")
-        assert(q.awaitTermination(120000), "drain did not terminate")
+        Scratch.drain(q, "r16_strmnt")
       }
       drain()
       val dir = wh.resolve("sink")
@@ -749,25 +703,21 @@ class Round16Spec extends SparkSpec {
       assert(spark.table(s"$cat.sink").count() == 24,
         "replayed epochs must stay idempotent across retention")
       // new source data still streams through
-      insertRange(cat, "src", 24, 28)
+      insertRange(spark, cat, "src", 24, 28)
       drain()
       assert(spark.table(s"$cat.sink").count() == 28)
       assert(GraftVersions.latest(dir).get.entries.size <= 3)
-    } finally {
-      dropCatalog(cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
     }
   }
 
   test("merge_branch on an unmoved main degrades to fast_forward") {
-    val (cat, wh) = freshCatalog("mbff")
-    try {
+    Scratch.withCatalog(spark, "r16_mbff") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(cat, "t", 0, 4)
+      insertRange(spark, cat, "t", 0, 4)
       spark.sql(s"CALL $cat.system.branch('t', 'b', -1)")
       spark.sql(s"INSERT INTO $cat.t.branch_b VALUES (100, 'x', 1, 2)")
       spark.sql(s"CALL $cat.system.merge_branch('t', 'b')")
@@ -775,7 +725,7 @@ class Round16Spec extends SparkSpec {
       val ops = GraftVersions.listVersions(wh.resolve("t")).map(_.op)
       assert(ops.contains("fast-forward"), ops.mkString(", "))
       assert(GraftVersions.listBranches(wh.resolve("t")).isEmpty)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -784,60 +734,59 @@ class Round16Spec extends SparkSpec {
 
   test("min/max column statistics shrink a range filter's estimate: " +
       "the filtered side proves itself broadcast-small under CBO") {
-    val (cat, wh) = freshCatalog("mmcbo")
-    val oldCbo = spark.conf.get("spark.sql.cbo.enabled", "false")
-    val oldThresh =
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.sql(
-        s"""CREATE TABLE $cat.t (
-           |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
-           |  fp BIGINT NOT NULL, n_words INT NOT NULL)
-           |TBLPROPERTIES ('versioned' = 'true',
-           |  'ndv.columns' = 'doc_id,fp,n_words')""".stripMargin)
-      insertRange(cat, "t", 0, 600)
-      val path = wh.resolve("t").toString
-      def table() = spark.read.format("graft.sources.GraftDocsSource")
-        .option("path", path).load()
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      // the optimizer carries the manifest's fold: doc_id ∈ [0, 599]
-      val stats = table().select("doc_id", "n_words")
-        .queryExecution.optimizedPlan.stats
-      val mm = stats.attributeStats.toSeq.map { case (attr, cs) =>
-        attr.name -> (cs.min.map(_.toString.toLong),
-          cs.max.map(_.toString.toLong))
-      }.toMap
-      assert(mm.get("doc_id").contains((Some(0L), Some(599L))), mm.toString)
-      assert(mm.get("n_words").contains((Some(9L), Some(99L))), mm.toString)
+    Scratch.withCatalog(spark, "r16_mmcbo") { (cat, wh) =>
+      val oldCbo = spark.conf.get("spark.sql.cbo.enabled", "false")
+      val oldThresh =
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        spark.sql(
+          s"""CREATE TABLE $cat.t (
+             |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
+             |  fp BIGINT NOT NULL, n_words INT NOT NULL)
+             |TBLPROPERTIES ('versioned' = 'true',
+             |  'ndv.columns' = 'doc_id,fp,n_words')""".stripMargin)
+        insertRange(spark, cat, "t", 0, 600)
+        val path = wh.resolve("t").toString
+        def table() = spark.read.format("graft.sources.GraftDocsSource")
+          .option("path", path).load()
+        spark.conf.set("spark.sql.cbo.enabled", "true")
+        // the optimizer carries the manifest's fold: doc_id ∈ [0, 599]
+        val stats = table().select("doc_id", "n_words")
+          .queryExecution.optimizedPlan.stats
+        val mm = stats.attributeStats.toSeq.map { case (attr, cs) =>
+          attr.name -> (cs.min.map(_.toString.toLong),
+            cs.max.map(_.toString.toLong))
+        }.toMap
+        assert(mm.get("doc_id").contains((Some(0L), Some(599L))), mm.toString)
+        assert(mm.get("n_words").contains((Some(9L), Some(99L))), mm.toString)
 
-      // a threshold between the 40-row filtered estimate and the
-      // 600-row base relation: only range interpolation over [min,max]
-      // can prove the filtered side broadcastable
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
-      val filtered = table().filter(col("doc_id") < 40)
-        .select(col("doc_id"),
-          col("n_words").as("nw_small"))
-      val joined = table().join(filtered, Seq("doc_id"))
-      val plan = joined.queryExecution.sparkPlan
-      val hasBroadcast = plan.collect {
-        case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
-          b
-      }.nonEmpty
-      assert(hasBroadcast,
-        s"range-estimated 40-row filter must broadcast:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", oldCbo)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      dropCatalog(cat, wh)
+        // a threshold between the 40-row filtered estimate and the
+        // 600-row base relation: only range interpolation over [min,max]
+        // can prove the filtered side broadcastable
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
+        val filtered = table().filter(col("doc_id") < 40)
+          .select(col("doc_id"),
+            col("n_words").as("nw_small"))
+        val joined = table().join(filtered, Seq("doc_id"))
+        val plan = joined.queryExecution.sparkPlan
+        val hasBroadcast = plan.collect {
+          case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
+            b
+        }.nonEmpty
+        assert(hasBroadcast,
+          s"range-estimated 40-row filter must broadcast:\n$plan")
+      } finally {
+        spark.conf.set("spark.sql.cbo.enabled", oldCbo)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
+      }
     }
   }
 
   test("min/max bounds are all-or-nothing per column: a pre-stats live " +
       "file withholds the bound instead of narrowing it wrongly") {
-    val (cat, wh) = freshCatalog("mmpre")
-    try {
+    Scratch.withCatalog(spark, "r16_mmpre") { (cat, wh) =>
       mvFixture(cat)
-      insertRange(cat, "t", 0, 40)
+      insertRange(spark, cat, "t", 0, 40)
       val root = wh.resolve("t")
       // forge a pre-stats manifest line: strip one entry's stats map
       val snap = GraftVersions.latest(root).get
@@ -855,7 +804,7 @@ class Round16Spec extends SparkSpec {
         .map { case (a, cs) => a.name -> cs.min }.toMap
       assert(!mins.get("doc_id").exists(_.isDefined),
         s"stripped stats must withhold the bound: $mins")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -864,8 +813,7 @@ class Round16Spec extends SparkSpec {
 
   test("write.distribution=hash bounds a multi-partition insert to one " +
       "file per bucket; without it the same insert fans per task") {
-    val (cat, wh) = freshCatalog("wdist")
-    try {
+    Scratch.withCatalog(spark, "r16_wdist") { (cat, wh) =>
       Seq(("demand", ", 'write.distribution' = 'hash'"), ("fan", ""))
         .foreach { case (t, prop) =>
           spark.sql(
@@ -917,7 +865,7 @@ class Round16Spec extends SparkSpec {
           s"${e.name}: [$lo,$hi]")
         assert(e.bucket.isDefined, s"${e.name} must carry its bucket id")
       }
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -926,8 +874,7 @@ class Round16Spec extends SparkSpec {
 
   test("sorted-scan ordering is manifest-PROVEN: withheld for unsorted " +
       "writes, multi-file bucket classes, and post-concat files") {
-    val (cat, wh) = freshCatalog("sorder")
-    try {
+    Scratch.withCatalog(spark, "r16_sorder") { (cat, wh) =>
       def ordering(t: String): Int = {
         val df = spark.read.format("graft.sources.GraftDocsSource")
           .option("path", wh.resolve(t).toString).load()
@@ -945,10 +892,10 @@ class Round16Spec extends SparkSpec {
            |PARTITIONED BY (bucket(4, doc_id))
            |TBLPROPERTIES ('versioned' = 'true',
            |  'write.distribution' = 'hash')""".stripMargin)
-      insertRange(cat, "good", 0, 32)
+      insertRange(spark, cat, "good", 0, 32)
       assert(ordering("good") == 1, "demanded layout must report order")
       // second insert → two sorted files per class → withheld
-      insertRange(cat, "good", 32, 64)
+      insertRange(spark, cat, "good", 32, 64)
       assert(ordering("good") == 0,
         "two files per bucket class cannot claim a concatenated order: " +
           GraftVersions.latest(wh.resolve("good")).get.entries
@@ -976,8 +923,8 @@ class Round16Spec extends SparkSpec {
            |PARTITIONED BY (bucket(4, doc_id))
            |TBLPROPERTIES ('versioned' = 'true', 'row.tracking' = 'true',
            |  'write.distribution' = 'hash')""".stripMargin)
-      insertRange(cat, "tracked", 0, 32)
-      insertRange(cat, "tracked", 32, 64)                // disjoint runs
+      insertRange(spark, cat, "tracked", 0, 32)
+      insertRange(spark, cat, "tracked", 32, 64)                // disjoint runs
       spark.sql(s"CALL $cat.system.optimize('tracked', 4, '')")
       val tracked = GraftVersions.latest(wh.resolve("tracked")).get.entries
       assert(tracked.forall(_.sorted),
@@ -1021,7 +968,7 @@ class Round16Spec extends SparkSpec {
       // per-file flags in the manifest match the observation
       val plain = GraftVersions.latest(wh.resolve("plain")).get.entries
       assert(plain.forall(!_.sorted))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -1030,8 +977,7 @@ class Round16Spec extends SparkSpec {
 
   test("optimize_where rewrites exactly the scoped partition's files — " +
       "untouched files keep their names; row-tracked tables reject") {
-    val (cat, wh) = freshCatalog("scopt")
-    try {
+    Scratch.withCatalog(spark, "r16_scopt") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -1040,8 +986,8 @@ class Round16Spec extends SparkSpec {
            |    (CAST(n_words AS BIGINT) % 6))
            |PARTITIONED BY (wb)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(cat, "t", 0, 48)
-      insertRange(cat, "t", 48, 96)
+      insertRange(spark, cat, "t", 0, 48)
+      insertRange(spark, cat, "t", 48, 96)
       val root = wh.resolve("t")
       def byValue(v: Long): Set[String] =
         GraftVersions.latest(root).get.entries
@@ -1075,7 +1021,7 @@ class Round16Spec extends SparkSpec {
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true',
            |  'row.tracking' = 'true')""".stripMargin)
-      insertRange(cat, "rt", 0, 8)
+      insertRange(spark, cat, "rt", 0, 8)
       val e = intercept[Exception] {
         spark.sql(s"CALL $cat.system.optimize_where('rt', 'doc_id', 1, 1)")
       }
@@ -1083,7 +1029,7 @@ class Round16Spec extends SparkSpec {
         Option(t).toSeq.flatMap(x =>
           Option(x.getMessage).toSeq ++ msgs(x.getCause))
       assert(msgs(e).exists(_.contains("row-tracked")), msgs(e).mkString("|"))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -1113,16 +1059,15 @@ class Round16Spec extends SparkSpec {
 
   test("mv: refresh equals a full recompute and is exactly-once — " +
       "a second refresh finds its watermark ledgered and lands nothing") {
-    val (cat, wh) = freshCatalog("mv1")
-    try {
+    Scratch.withCatalog(spark, "r16_mv1") { (cat, wh) =>
       mvFixture(cat)
-      insertRange(cat, "t", 0, 12)
+      insertRange(spark, cat, "t", 0, 12)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', false)")
       assert(mvRows(cat, "v") == fullRecompute(cat))
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id IN (2, 7)")
       spark.sql(s"UPDATE $cat.t SET n_words = n_words + 50 WHERE doc_id = 3")
-      insertRange(cat, "t", 12, 20)
+      insertRange(spark, cat, "t", 12, 20)
       val r1 = spark.sql(s"CALL $cat.system.refresh_mv('v')").head()
       assert(r1.getBoolean(4), "first refresh must apply")
       assert(mvRows(cat, "v") == fullRecompute(cat))
@@ -1136,15 +1081,14 @@ class Round16Spec extends SparkSpec {
         None, Nil, graft.sources.GraftMv.AppId,
         GraftVersions.lastTxnEpoch(wh.resolve("v"),
           graft.sources.GraftMv.AppId).get).isEmpty)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: a group whose live count reaches zero is deleted from the " +
       "view, never tombstoned") {
-    val (cat, wh) = freshCatalog("mv2")
-    try {
+    Scratch.withCatalog(spark, "r16_mv2") { (cat, wh) =>
       mvFixture(cat)
-      insertRange(cat, "t", 0, 10)
+      insertRange(spark, cat, "t", 0, 10)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', false)")
       // kill group 2 entirely (doc_ids 2 and 7)
@@ -1153,15 +1097,14 @@ class Round16Spec extends SparkSpec {
       val keys = mvRows(cat, "v").map(_._1)
       assert(keys == Set(0L, 1L, 3L, 4L), keys.toString)
       assert(mvRows(cat, "v") == fullRecompute(cat))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: create rejects aggregates in the expression slots, " +
       "nondeterminism, and unresolvable columns — each loudly") {
-    val (cat, wh) = freshCatalog("mv3")
-    try {
+    Scratch.withCatalog(spark, "r16_mv3") { (cat, wh) =>
       mvFixture(cat)
-      insertRange(cat, "t", 0, 4)
+      insertRange(spark, cat, "t", 0, 4)
       val agg = intercept[Exception] {
         spark.sql(s"CALL $cat.system.create_mv(" +
           "'v1', 't', 'doc_id % 5', 'min(n_words)', false)")
@@ -1179,35 +1122,33 @@ class Round16Spec extends SparkSpec {
       }
       assert(unres.getMessage.contains("resolve against the base"),
         unres.getMessage)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: auto=true keeps the view fresh on every source data " +
       "commit — the committing writer pays the inline refresh") {
-    val (cat, wh) = freshCatalog("mv4")
-    try {
+    Scratch.withCatalog(spark, "r16_mv4") { (cat, wh) =>
       mvFixture(cat)
-      insertRange(cat, "t", 0, 8)
+      insertRange(spark, cat, "t", 0, 8)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', true)")
-      insertRange(cat, "t", 8, 16)                    // append refreshes
+      insertRange(spark, cat, "t", 8, 16)                    // append refreshes
       assert(mvRows(cat, "v") == fullRecompute(cat),
         "append must have refreshed the view inline")
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id < 3") // MOR delete too
       assert(mvRows(cat, "v") == fullRecompute(cat),
         "delete must have refreshed the view inline")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: the watermark survives MV vacuum (txn pinning); a source " +
       "vacuumed past the watermark fails the refresh loudly") {
-    val (cat, wh) = freshCatalog("mv5")
-    try {
+    Scratch.withCatalog(spark, "r16_mv5") { (cat, wh) =>
       mvFixture(cat)
-      insertRange(cat, "t", 0, 8)
+      insertRange(spark, cat, "t", 0, 8)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', false)")
-      insertRange(cat, "t", 8, 12)
+      insertRange(spark, cat, "t", 8, 12)
       spark.sql(s"CALL $cat.system.refresh_mv('v')")
       spark.sql(s"CALL $cat.system.vacuum('v', 1)")
       // ledger intact after vacuum: refresh still knows it's fresh
@@ -1215,40 +1156,31 @@ class Round16Spec extends SparkSpec {
       assert(!noop.getBoolean(4) && noop.getLong(1) == 0L)
       // expire the source's history past the NEXT refresh's range:
       // new commits, then vacuum down to the latest snapshot only
-      insertRange(cat, "t", 12, 16)
-      insertRange(cat, "t", 16, 20)
+      insertRange(spark, cat, "t", 12, 16)
+      insertRange(spark, cat, "t", 16, 20)
       spark.sql(s"CALL $cat.system.vacuum('t', 1)")
       val gone = intercept[Exception] {
         spark.sql(s"CALL $cat.system.refresh_mv('v')")
       }
       assert(gone.getMessage != null, "expired feed must fail loudly")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   private def mvRewriteFacts(df: org.apache.spark.sql.DataFrame,
-      mvPath: String): (Boolean, Boolean) = {
-    val plan = df.queryExecution.optimizedPlan
-    val scansMv = plan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2
-          .DataSourceV2ScanRelation
-          if s.scan.description.contains(mvPath) => s
-    }.nonEmpty
-    val aggregates = plan.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-    }.nonEmpty
-    (scansMv, aggregates)
+      mvPath: java.nio.file.Path): (Boolean, Boolean) = {
+    val (scans, aggregates) = Scratch.planFacts(df)
+    (scans(mvPath), aggregates)
   }
 
   test("mv rewrite: answers the declared aggregate from the view only " +
       "while FRESH; a stale ledger or a refresh restores/blocks it") {
-    val (cat, wh) = freshCatalog("mvrw1")
-    try {
+    Scratch.withCatalog(spark, "r16_mvrw1") { (cat, wh) =>
       mvFixture(cat)
-      insertRange(cat, "t", 0, 12)
+      insertRange(spark, cat, "t", 0, 12)
       // manual (auto=false) view: later source commits leave it stale
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', false)")
-      insertRange(cat, "t", 12, 20) // source moves; view stays at v1
+      insertRange(spark, cat, "t", 12, 20) // source moves; view stays at v1
       // register for rewrite discovery WITHOUT refreshing
       val root = wh.resolve("t")
       GraftTableMeta.write(root,
@@ -1258,7 +1190,7 @@ class Round16Spec extends SparkSpec {
       def run() = spark.sql(
         s"""SELECT doc_id % 5 AS k, SUM(n_words) AS s, COUNT(*) AS c
            |FROM $cat.t GROUP BY doc_id % 5""".stripMargin)
-      val mvPath = wh.resolve("v").toString
+      val mvPath = wh.resolve("v")
       val (staleScans, staleAggs) = mvRewriteFacts(run(), mvPath)
       assert(!staleScans && staleAggs,
         "a STALE view must never answer the query")
@@ -1268,24 +1200,23 @@ class Round16Spec extends SparkSpec {
       assert(freshScans && !freshAggs,
         "a fresh view must answer without an Aggregate")
       // soundness: identical rows to the real aggregate
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val real = run()
-      assert(fresh.exceptAll(real).isEmpty && real.exceptAll(fresh).isEmpty)
-      spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+      Scratch.withoutMvRewrite(spark) {
+        val real = run()
+        assert(fresh.exceptAll(real).isEmpty && real.exceptAll(fresh).isEmpty)
+      }
+    }
   }
 
   test("mv rewrite: a pushed-down filter, a different aggregate, or a " +
       "time-travel read each disqualify the substitution") {
-    val (cat, wh) = freshCatalog("mvrw2")
-    try {
+    Scratch.withCatalog(spark, "r16_mvrw2") { (cat, wh) =>
       mvFixture(cat)
-      insertRange(cat, "t", 0, 12)
+      insertRange(spark, cat, "t", 0, 12)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', true)")
       org.apache.spark.sql.GraftBridge.addOptimization(spark,
         graft.plans.MvRewriteRule(spark))
-      val mvPath = wh.resolve("v").toString
+      val mvPath = wh.resolve("v")
       val filtered = spark.sql(
         s"""SELECT doc_id % 5 AS k, SUM(n_words) AS s, COUNT(*) AS c
            |FROM $cat.t WHERE doc_id < 6 GROUP BY doc_id % 5""".stripMargin)
@@ -1331,15 +1262,14 @@ class Round16Spec extends SparkSpec {
       assert(!mvRewriteFacts(preSeed, mvPath)._1,
         "a pin with no ledgered watermark must fall back to the scan")
       assert(preSeed.count() == 0L) // v0 is the empty enable snapshot
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: a cyclic mv.dependents chain is contained by the refresh " +
       "guard — bounded, surfaced, and never failing the source commit") {
-    val (cat, wh) = freshCatalog("mv6")
-    try {
+    Scratch.withCatalog(spark, "r16_mv6") { (cat, wh) =>
       mvFixture(cat)
-      insertRange(cat, "t", 0, 4)
+      insertRange(spark, cat, "t", 0, 4)
       // hand-craft a self-cycle: t registered as its own dependent MV
       // (removed=Some(empty) keeps every file — a pure ledger commit)
       val root = wh.resolve("t")
@@ -1355,19 +1285,18 @@ class Round16Spec extends SparkSpec {
       // still bounds the recursion (this call returning at all is the
       // proof), and the swallowed error is observable.
       val before = graft.sources.GraftMv.autoRefreshFailures.get()
-      insertRange(cat, "t", 4, 8) // must NOT throw
+      insertRange(spark, cat, "t", 4, 8) // must NOT throw
       assert(graft.sources.GraftMv.autoRefreshFailures.get() > before,
         "the contained cycle must be surfaced, not silently dropped")
       val err = graft.sources.GraftMv.lastAutoRefreshError.get()
       assert(err != null && err.contains("cyclic"), String.valueOf(err))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("value-layout spec evolution: pre-evolution files degrade to a " +
       "full read under DPP; an OPTIMIZE rewrite migrates them and " +
       "restores exact pruning") {
-    val (cat, wh) = freshCatalog("vevo")
-    try {
+    Scratch.withCatalog(spark, "r16_vevo") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -1375,16 +1304,16 @@ class Round16Spec extends SparkSpec {
            |  wb BIGINT GENERATED ALWAYS AS
            |    (CAST(n_words AS BIGINT) % 6))
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(cat, "t", 0, 48)          // 1 mixed-value file
+      insertRange(spark, cat, "t", 0, 48)          // 1 mixed-value file
       spark.sql(s"ALTER TABLE $cat.t SET TBLPROPERTIES(" +
         "'layout.values'='wb')")            // metadata-only evolution
-      insertRange(cat, "t", 48, 96)         // 6 min=max value files
+      insertRange(spark, cat, "t", 48, 96)         // 6 min=max value files
       spark.sql(
         s"""CREATE TABLE $cat.d (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(cat, "d", 0, 8)
+      insertRange(spark, cat, "d", 0, 8)
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
       def emittedByFactScan(): Long = {
@@ -1425,15 +1354,14 @@ class Round16Spec extends SparkSpec {
         s"every migrated file must be single-valued: $entries")
       // fully-migrated snapshot: DPP is exact again
       assert(emittedByFactScan() == matching)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: concurrent committers and manual refreshes never tear or " +
       "double-apply the view (watermark CAS + pinned state read)") {
-    val (cat, wh) = freshCatalog("mv7")
-    try {
+    Scratch.withCatalog(spark, "r16_mv7") { (cat, wh) =>
       mvFixture(cat)
-      insertRange(cat, "t", 0, 8)
+      insertRange(spark, cat, "t", 0, 8)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', true)")
       // 4 committers × 3 single-row commits, each firing an inline
@@ -1486,6 +1414,6 @@ class Round16Spec extends SparkSpec {
         graft.sources.GraftMv.AppId).get ==
         GraftVersions.latest(wh.resolve("t")).get.version,
         "the watermark must end at the source head")
-    } finally dropCatalog(cat, wh)
+    }
   }
 }

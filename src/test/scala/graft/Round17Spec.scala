@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.GraftTableMeta
+import graft.ops.Scratch
+import graft.ops.Scratch.insertRange
 
 /** Round-17 additions: the FILTERED materialized-view rewrite's
   * soundness gates and the multi-view cost choice. The positive paths
@@ -13,29 +13,6 @@ import graft.sources.GraftTableMeta
   * be silently wrong if the gates slipped. */
 class Round17Spec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r17_$tag")
-    val cat = s"r17_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
-  private def insertRange(cat: String, lo: Int, hi: Int): Unit = {
-    spark.read.format("graft.sources.GraftDocsSource")
-      .option("rows", hi.toString).load()
-      .filter(col("doc_id") >= lo)
-      .repartition(1).sortWithinPartitions("doc_id")
-      .createOrReplaceTempView(s"${cat}_ins")
-    spark.sql(
-      s"""INSERT INTO $cat.t (doc_id, title, fp, n_words)
-         |SELECT doc_id, title, fp, n_words FROM ${cat}_ins""".stripMargin)
-    spark.catalog.dropTempView(s"${cat}_ins")
-  }
   private def mkTable(cat: String): Unit =
     spark.sql(
       s"""CREATE TABLE $cat.t (
@@ -44,19 +21,13 @@ class Round17Spec extends SparkSpec {
          |TBLPROPERTIES ('versioned' = 'true',
          |  'delete.mode' = 'merge-on-read')""".stripMargin)
   private def scansPath(df: org.apache.spark.sql.DataFrame,
-      p: java.nio.file.Path): Boolean =
-    df.queryExecution.optimizedPlan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2
-          .DataSourceV2ScanRelation
-          if s.scan.description.contains(p.toString) => s
-    }.nonEmpty
+      p: java.nio.file.Path): Boolean = Scratch.planFacts(df)._1(p)
 
   test("filtered mv rewrite: a key-only predicate answers from the " +
       "view; mixed and non-key predicates refuse") {
-    val (cat, wh) = freshCatalog("fmv1")
-    try {
+    Scratch.withCatalog(spark, "r17_fmv1") { (cat, wh) =>
       mkTable(cat)
-      insertRange(cat, 0, 20)
+      insertRange(spark, cat, "t", 0, 20)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', true)")
       org.apache.spark.sql.GraftBridge.addOptimization(spark,
@@ -69,10 +40,10 @@ class Round17Spec extends SparkSpec {
       val keyed = agg("doc_id % 5 IN (1, 3)")
       assert(scansPath(keyed, v) && !scansPath(keyed, t),
         "key-only predicate must answer from the view")
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val real = agg("doc_id % 5 IN (1, 3)")
-      assert(keyed.exceptAll(real).isEmpty && real.exceptAll(keyed).isEmpty)
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        val real = agg("doc_id % 5 IN (1, 3)")
+        assert(keyed.exceptAll(real).isEmpty && real.exceptAll(keyed).isEmpty)
+      }
       // MIXED conjunction: one key conjunct + one row conjunct — the
       // row conjunct changes group contents, the whole WHERE refuses
       val mixed = agg("doc_id % 5 = 1 AND n_words > 12")
@@ -89,15 +60,14 @@ class Round17Spec extends SparkSpec {
       val rand = agg("rand() < 0.999999")
       assert(!scansPath(rand, v),
         "a non-deterministic predicate must refuse")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv rewrite: a non-BIGINT key expression refuses both the " +
       "roll-up and the filtered substitution (type-changing nesting)") {
-    val (cat, wh) = freshCatalog("fmv2")
-    try {
+    Scratch.withCatalog(spark, "r17_fmv2") { (cat, wh) =>
       mkTable(cat)
-      insertRange(cat, 0, 20)
+      insertRange(spark, cat, "t", 0, 20)
       // n_words is INT: the resolved key expression is IntegerType,
       // so substituting the view's BIGINT doc_id into wider arithmetic
       // would change evaluation semantics — the gate must refuse
@@ -116,15 +86,14 @@ class Round17Spec extends SparkSpec {
            |WHERE n_words % 5 = 2""".stripMargin)
       assert(!scansPath(filtered, v),
         "an INT key must not substitute into a filter predicate")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv cost choice: with several satisfying views the rule picks " +
       "the fewest-row one regardless of registration order") {
-    val (cat, wh) = freshCatalog("fmv3")
-    try {
+    Scratch.withCatalog(spark, "r17_fmv3") { (cat, wh) =>
       mkTable(cat)
-      insertRange(cat, 0, 30)
+      insertRange(spark, cat, "t", 0, 30)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'fine', 't', 'doc_id', 'n_words', true)")        // 30 rows
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -144,13 +113,12 @@ class Round17Spec extends SparkSpec {
            |FROM $cat.t GROUP BY doc_id""".stripMargin)
       assert(scansPath(perDoc, wh.resolve("fine")) &&
         !scansPath(perDoc, wh.resolve("coarse")))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("min/max mv maintenance: updates recompute the touched group, " +
       "a fully-deleted group drops, and the wrong extremum refuses") {
-    val (cat, wh) = freshCatalog("fmv5")
-    try {
+    Scratch.withCatalog(spark, "r17_fmv5") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -158,7 +126,7 @@ class Round17Spec extends SparkSpec {
            |TBLPROPERTIES ('versioned' = 'true',
            |  'delete.mode' = 'merge-on-read',
            |  'update.mode' = 'merge-on-read')""".stripMargin)
-      insertRange(cat, 0, 12)      // classes 0..3 (doc_id % 4), w = i+9
+      insertRange(spark, cat, "t", 0, 12)      // classes 0..3 (doc_id % 4), w = i+9
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'vmin', 't', 'doc_id % 4', 'n_words', false, 'min')")
       // UPDATE raises class 1's minimum row (doc 1: w 10 → 99): the
@@ -194,19 +162,18 @@ class Round17Spec extends SparkSpec {
         s"""SELECT doc_id % 4 AS k, MIN(n_words) AS m
            |FROM $cat.t GROUP BY doc_id % 4""".stripMargin)
       assert(scansPath(mn, wh.resolve("vmin")))
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val real = spark.sql(
-        s"""SELECT doc_id % 4 AS k, MIN(n_words) AS m
-           |FROM $cat.t GROUP BY doc_id % 4""".stripMargin)
-      assert(mn.exceptAll(real).isEmpty && real.exceptAll(mn).isEmpty)
-      spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+      Scratch.withoutMvRewrite(spark) {
+        val real = spark.sql(
+          s"""SELECT doc_id % 4 AS k, MIN(n_words) AS m
+             |FROM $cat.t GROUP BY doc_id % 4""".stripMargin)
+        assert(mn.exceptAll(real).isEmpty && real.exceptAll(mn).isEmpty)
+      }
+    }
   }
 
   test("join-mv rewrite: only the declared equi-join matches — a " +
       "different condition, an extra WHERE, or a foreign dim refuse") {
-    val (cat, wh) = freshCatalog("fmv6")
-    try {
+    Scratch.withCatalog(spark, "r17_fmv6") { (cat, wh) =>
       mkTable(cat)
       spark.sql(
         s"""CREATE TABLE $cat.d (
@@ -218,7 +185,7 @@ class Round17Spec extends SparkSpec {
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
            |  fp BIGINT NOT NULL, n_words INT NOT NULL)
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
-      insertRange(cat, 0, 24)
+      insertRange(spark, cat, "t", 0, 24)
       Seq("d", "e").foreach { tbl =>
         spark.read.format("graft.sources.GraftDocsSource")
           .option("rows", "4").load()
@@ -238,13 +205,13 @@ class Round17Spec extends SparkSpec {
            |JOIN $cat.d d ON f.doc_id % 4 = d.doc_id
            |GROUP BY d.doc_id""".stripMargin)
       assert(scansPath(hit, vj), "the declared join-aggregate must hit")
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val real = q(
-        s"""SELECT d.doc_id AS k, SUM(f.n_words) AS s FROM $cat.t f
-           |JOIN $cat.d d ON f.doc_id % 4 = d.doc_id
-           |GROUP BY d.doc_id""".stripMargin)
-      assert(hit.exceptAll(real).isEmpty && real.exceptAll(hit).isEmpty)
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        val real = q(
+          s"""SELECT d.doc_id AS k, SUM(f.n_words) AS s FROM $cat.t f
+             |JOIN $cat.d d ON f.doc_id % 4 = d.doc_id
+             |GROUP BY d.doc_id""".stripMargin)
+        assert(hit.exceptAll(real).isEmpty && real.exceptAll(hit).isEmpty)
+      }
       // a DIFFERENT equi-join key is a different row set
       val wrongCond = q(
         s"""SELECT d.doc_id AS k, SUM(f.n_words) AS s FROM $cat.t f
@@ -275,15 +242,14 @@ class Round17Spec extends SparkSpec {
            |LEFT JOIN $cat.d d ON f.doc_id % 4 = d.doc_id
            |GROUP BY d.doc_id""".stripMargin)
       assert(!scansPath(outer, vj), "an outer join must refuse")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("filtered rewrite composes with a MIN view: key predicate over " +
       "the extremum aggregate stays view-only, rule-off parity holds") {
-    val (cat, wh) = freshCatalog("fmv7")
-    try {
+    Scratch.withCatalog(spark, "r17_fmv7") { (cat, wh) =>
       mkTable(cat)
-      insertRange(cat, 0, 20)
+      insertRange(spark, cat, "t", 0, 20)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'vmin', 't', 'doc_id % 5', 'n_words', true, 'min')")
       org.apache.spark.sql.GraftBridge.addOptimization(spark,
@@ -296,20 +262,19 @@ class Round17Spec extends SparkSpec {
       assert(scansPath(viaMv, wh.resolve("vmin")) &&
         !scansPath(viaMv, wh.resolve("t")),
         "key-filtered MIN must answer from the extremum view")
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val real = q()
-      assert(viaMv.exceptAll(real).isEmpty &&
-        real.exceptAll(viaMv).isEmpty)
-      spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+      Scratch.withoutMvRewrite(spark) {
+        val real = q()
+        assert(viaMv.exceptAll(real).isEmpty &&
+          real.exceptAll(viaMv).isEmpty)
+      }
+    }
   }
 
   test("filtered mv rewrite: historical pin + key predicate compose " +
       "(time travel answered from view history behind the filter)") {
-    val (cat, wh) = freshCatalog("fmv4")
-    try {
+    Scratch.withCatalog(spark, "r17_fmv4") { (cat, wh) =>
       mkTable(cat)
-      insertRange(cat, 0, 15)                                       // v1
+      insertRange(spark, cat, "t", 0, 15)                                       // v1
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', true)")
       val pinned = graft.sources.GraftVersions
@@ -318,13 +283,11 @@ class Round17Spec extends SparkSpec {
       org.apache.spark.sql.GraftBridge.addOptimization(spark,
         graft.plans.MvRewriteRule(spark))
       def q(on: Boolean) = {
-        if (!on) spark.conf.set("spark.graft.mv.rewrite", "false")
-        val df = spark.sql(
+        def run() = spark.sql(
           s"""SELECT doc_id % 5 AS k, SUM(n_words) AS s
              |FROM $cat.t VERSION AS OF $pinned
              |WHERE doc_id % 5 = 3 GROUP BY doc_id % 5""".stripMargin)
-        if (!on) spark.conf.unset("spark.graft.mv.rewrite")
-        df
+        if (on) run() else Scratch.withoutMvRewrite(spark)(run())
       }
       val viaMv = q(on = true)
       assert(scansPath(viaMv, wh.resolve("v")) &&
@@ -336,6 +299,6 @@ class Round17Spec extends SparkSpec {
       // the deleted doc_id 3 is IN class 3: the historical answer must
       // still include it (3 + 8 + 13 → n_words 12+17+22)
       assert(viaMv.head().getLong(1) == 51L)
-    } finally dropCatalog(cat, wh)
+    }
   }
 }

@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+import graft.ops.Scratch
+import graft.ops.Scratch.insertRange
 
 /** Round-18 additions: composite-key views, DECIMAL-sum views, the
   * dim-side auto-reseed, and HAVING over rewritten aggregates. The
@@ -11,18 +11,6 @@ import org.apache.spark.sql.functions._
   * query fixture cannot isolate. */
 class Round18Spec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r18_$tag")
-    val cat = s"r18_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
   private def mkTable(cat: String, name: String = "t"): Unit =
     spark.sql(
       s"""CREATE TABLE $cat.$name (
@@ -30,35 +18,17 @@ class Round18Spec extends SparkSpec {
          |  fp BIGINT NOT NULL, n_words INT NOT NULL)
          |TBLPROPERTIES ('versioned' = 'true',
          |  'delete.mode' = 'merge-on-read')""".stripMargin)
-  private def insertRange(cat: String, lo: Int, hi: Int,
-      table: String = "t"): Unit = {
-    spark.read.format("graft.sources.GraftDocsSource")
-      .option("rows", hi.toString).load()
-      .filter(col("doc_id") >= lo)
-      .repartition(1).sortWithinPartitions("doc_id")
-      .createOrReplaceTempView(s"${cat}_ins")
-    spark.sql(
-      s"""INSERT INTO $cat.$table (doc_id, title, fp, n_words)
-         |SELECT doc_id, title, fp, n_words FROM ${cat}_ins""".stripMargin)
-    spark.catalog.dropTempView(s"${cat}_ins")
-  }
   private def scansPath(df: org.apache.spark.sql.DataFrame,
-      p: java.nio.file.Path): Boolean =
-    df.queryExecution.optimizedPlan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2
-          .DataSourceV2ScanRelation
-          if s.scan.description.contains(p.toString) => s
-    }.nonEmpty
+      p: java.nio.file.Path): Boolean = Scratch.planFacts(df)._1(p)
   private def sameResult(a: org.apache.spark.sql.DataFrame,
       b: org.apache.spark.sql.DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
   test("composite-key view: refusals — raw-key predicate, non-key " +
       "predicate, wrong grain; COUNT(DISTINCT k1, k2) rewrites") {
-    val (cat, wh) = freshCatalog("ck1")
-    try {
+    Scratch.withCatalog(spark, "r18_ck1") { (cat, wh) =>
       mkTable(cat)
-      insertRange(cat, 0, 24)
+      insertRange(spark, cat, "t", 0, 24)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 6', 'n_words', true, 'sum', 'doc_id % 4')")
       org.apache.spark.sql.GraftBridge.addOptimization(spark,
@@ -89,21 +59,20 @@ class Round18Spec extends SparkSpec {
         s"SELECT COUNT(DISTINCT doc_id % 6) AS d FROM $cat.t")
       assert(!scansPath(distinctOne, v) && scansPath(distinctOne, t),
         "COUNT(DISTINCT one-of-two-keys) must refuse")
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val real = spark.sql(
-        s"SELECT COUNT(DISTINCT doc_id % 6, doc_id % 4) AS pairs " +
-          s"FROM $cat.t")
-      assert(sameResult(distinctPairs, real))
-      spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+      Scratch.withoutMvRewrite(spark) {
+        val real = spark.sql(
+          s"SELECT COUNT(DISTINCT doc_id % 6, doc_id % 4) AS pairs " +
+            s"FROM $cat.t")
+        assert(sameResult(distinctPairs, real))
+      }
+    }
   }
 
   test("HAVING over a rewritten aggregate survives the substitution: " +
       "the filter plans over view rows, selected or not") {
-    val (cat, wh) = freshCatalog("hav1")
-    try {
+    Scratch.withCatalog(spark, "r18_hav1") { (cat, wh) =>
       mkTable(cat)
-      insertRange(cat, 0, 30)
+      insertRange(spark, cat, "t", 0, 30)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 5', 'n_words', true)")
       org.apache.spark.sql.GraftBridge.addOptimization(spark,
@@ -134,21 +103,20 @@ class Round18Spec extends SparkSpec {
       val ru = rollup()
       assert(scansPath(ru, v) && !scansPath(ru, t),
         "HAVING over a roll-up must stay view-only")
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      assert(sameResult(sel, selected()))
-      assert(sameResult(unsel, unselected()))
-      assert(sameResult(ru, rollup()))
-      spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+      Scratch.withoutMvRewrite(spark) {
+        assert(sameResult(sel, selected()))
+        assert(sameResult(unsel, unselected()))
+        assert(sameResult(ru, rollup()))
+      }
+    }
   }
 
   test("join view dual registration: a dim DELETE reseeds inline — " +
       "no fact commit needed, the next plan is already view-only") {
-    val (cat, wh) = freshCatalog("dimreg")
-    try {
+    Scratch.withCatalog(spark, "r18_dimreg") { (cat, wh) =>
       mkTable(cat); mkTable(cat, "d")
-      insertRange(cat, 0, 24)
-      insertRange(cat, 0, 4, table = "d")
+      insertRange(spark, cat, "t", 0, 24)
+      insertRange(spark, cat, "d", 0, 4)
       spark.sql(s"CALL $cat.system.create_join_mv('vj', 't', 'd', " +
         "'f.doc_id % 4', 'd.doc_id', 'd.doc_id', 'f.n_words', true)")
       org.apache.spark.sql.GraftBridge.addOptimization(spark,
@@ -170,19 +138,18 @@ class Round18Spec extends SparkSpec {
         .select("refreshed", "recomputed_groups").head()
       assert(!rs.getBoolean(0) && rs.getLong(1) == 0L,
         "the manual refresh after an inline reseed must be a no-op")
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      assert(sameResult(after, q()))
-      spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+      Scratch.withoutMvRewrite(spark) {
+        assert(sameResult(after, q()))
+      }
+    }
   }
 
   test("decimal sums: maintenance stays exact across deletes; AVG " +
       "refuses; precision 19+ refuses at create; unscaled overflow " +
       "raises instead of wrapping") {
-    val (cat, wh) = freshCatalog("dec1")
-    try {
+    Scratch.withCatalog(spark, "r18_dec1") { (cat, wh) =>
       mkTable(cat)
-      insertRange(cat, 0, 20)
+      insertRange(spark, cat, "t", 0, 20)
       val sumExpr = "CAST(n_words AS DECIMAL(10,2)) * 1.25"
       spark.sql(s"CALL $cat.system.create_mv(" +
         s"'v', 't', 'doc_id % 4', '$sumExpr', true)")
@@ -196,10 +163,10 @@ class Round18Spec extends SparkSpec {
       val hit = q()
       assert(scansPath(hit, v) && !scansPath(hit, t),
         "the decimal SUM must answer from the view after maintenance")
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      assert(sameResult(hit, q()),
-        "the rewritten decimal sum must be bit-identical")
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        assert(sameResult(hit, q()),
+          "the rewritten decimal sum must be bit-identical")
+      }
       val avg = spark.sql(
         s"""SELECT doc_id % 4 AS k, AVG($sumExpr) AS a
            |FROM $cat.t GROUP BY doc_id % 4""".stripMargin)
@@ -224,19 +191,18 @@ class Round18Spec extends SparkSpec {
         .mkString(" | ")
       assert(chain.contains("overflow"),
         s"expected an overflow raise, got: $chain")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("chain join view: refusals — wrong condition, extra side, " +
       "subset join; deeper chains work through the Scala API") {
-    val (cat, wh) = freshCatalog("chain1")
-    try {
+    Scratch.withCatalog(spark, "r18_chain1") { (cat, wh) =>
       mkTable(cat); mkTable(cat, "c"); mkTable(cat, "n")
       mkTable(cat, "x")
-      insertRange(cat, 0, 24)
-      insertRange(cat, 0, 8, table = "c")
-      insertRange(cat, 0, 4, table = "n")
-      insertRange(cat, 0, 4, table = "x")
+      insertRange(spark, cat, "t", 0, 24)
+      insertRange(spark, cat, "c", 0, 8)
+      insertRange(spark, cat, "n", 0, 4)
+      insertRange(spark, cat, "x", 0, 4)
       spark.sql(s"CALL $cat.system.create_chain_mv('v3', 't', 'c', " +
         "'n', 'f.doc_id % 8', 'd1.doc_id', 'd1.doc_id % 4', " +
         "'d2.doc_id', 'd2.doc_id', 'f.n_words', true)")
@@ -250,14 +216,14 @@ class Round18Spec extends SparkSpec {
            |JOIN $cat.n n ON c.doc_id % 4 = n.doc_id
            |GROUP BY n.doc_id""".stripMargin)
       assert(scansPath(hit, v3), "the declared 3-way chain must hit")
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val real = q(
-        s"""SELECT n.doc_id AS k, SUM(f.n_words) AS s
-           |FROM $cat.t f JOIN $cat.c c ON f.doc_id % 8 = c.doc_id
-           |JOIN $cat.n n ON c.doc_id % 4 = n.doc_id
-           |GROUP BY n.doc_id""".stripMargin)
-      assert(sameResult(hit, real))
-      spark.conf.unset("spark.graft.mv.rewrite")
+      Scratch.withoutMvRewrite(spark) {
+        val real = q(
+          s"""SELECT n.doc_id AS k, SUM(f.n_words) AS s
+             |FROM $cat.t f JOIN $cat.c c ON f.doc_id % 8 = c.doc_id
+             |JOIN $cat.n n ON c.doc_id % 4 = n.doc_id
+             |GROUP BY n.doc_id""".stripMargin)
+        assert(sameResult(hit, real))
+      }
       // a DIFFERENT middle condition is a different row set
       val wrongCond = q(
         s"""SELECT n.doc_id AS k, SUM(f.n_words) AS s
@@ -296,7 +262,7 @@ class Round18Spec extends SparkSpec {
           _.contains("role-playing"))))
       // a 3-dim chain through the Scala API: t ⋈ c ⋈ n ⋈ x
       mkTable(cat, "y")
-      insertRange(cat, 0, 2, table = "y")
+      insertRange(spark, cat, "y", 0, 2)
       val info = graft.sources.GraftMv.createChain(spark, "t",
         wh.resolve("t"),
         Seq("c" -> wh.resolve("c"), "n" -> wh.resolve("n"),
@@ -314,28 +280,27 @@ class Round18Spec extends SparkSpec {
            |GROUP BY y.doc_id""".stripMargin)
       assert(scansPath(deep, wh.resolve("v4")),
         "a 4-table chain must hit its view")
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val deepReal = q(
-        s"""SELECT y.doc_id AS k, SUM(f.n_words) AS s
-           |FROM $cat.t f JOIN $cat.c c ON f.doc_id % 8 = c.doc_id
-           |JOIN $cat.n n ON c.doc_id % 4 = n.doc_id
-           |JOIN $cat.y y ON n.doc_id % 2 = y.doc_id
-           |GROUP BY y.doc_id""".stripMargin)
-      assert(sameResult(deep, deepReal))
-      spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+      Scratch.withoutMvRewrite(spark) {
+        val deepReal = q(
+          s"""SELECT y.doc_id AS k, SUM(f.n_words) AS s
+             |FROM $cat.t f JOIN $cat.c c ON f.doc_id % 8 = c.doc_id
+             |JOIN $cat.n n ON c.doc_id % 4 = n.doc_id
+             |JOIN $cat.y y ON n.doc_id % 2 = y.doc_id
+             |GROUP BY y.doc_id""".stripMargin)
+        assert(sameResult(deep, deepReal))
+      }
+    }
   }
 
   test("composite maintenance audit: the refresh procedure folds the " +
       "composite delta and the view's group count tracks deletes") {
-    val (cat, wh) = freshCatalog("ck2")
-    try {
+    Scratch.withCatalog(spark, "r18_ck2") { (cat, wh) =>
       mkTable(cat)
-      insertRange(cat, 0, 12)
+      insertRange(spark, cat, "t", 0, 12)
       spark.sql(s"CALL $cat.system.create_mv(" +
         "'v', 't', 'doc_id % 3', 'n_words', false, 'sum', 'doc_id % 2')")
       // 6 (k3, k2) classes over 12 docs, 2 docs each
-      insertRange(cat, 12, 18)
+      insertRange(spark, cat, "t", 12, 18)
       val r1 = spark.sql(s"CALL $cat.system.refresh_mv('v')")
         .select("applied_changes", "groups").head()
       assert(r1.getLong(0) == 6L && r1.getLong(1) == 6L)
@@ -346,6 +311,6 @@ class Round18Spec extends SparkSpec {
         .select("applied_changes", "groups").head()
       assert(r2.getLong(0) == 4L && r2.getLong(1) == 5L,
         "the emptied composite group must drop out of the view")
-    } finally dropCatalog(cat, wh)
+    }
   }
 }

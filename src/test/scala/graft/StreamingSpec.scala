@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
+import graft.ops.Scratch
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.Event
 
@@ -248,14 +249,14 @@ class StreamingSpec extends SparkSpec {
       Event(2, ts(2), 11, "view", 2.0))
     val q = StreamingOps.drainToParquet(mem.toDF(),
       s"$base/data", s"$base/ckpt")
-    q.awaitTermination(60000) // AvailableNow terminates on its own
+    Scratch.drain(q, "parquet sink")
     assert(!q.isActive)
     assert(spark.read.parquet(s"$base/data").count() == 2)
     // a second drain resumes from the checkpoint: only NEW rows land
     mem.addData(Event(3, ts(3), 12, "click", 3.0))
     val q2 = StreamingOps.drainToParquet(mem.toDF(),
       s"$base/data", s"$base/ckpt")
-    q2.awaitTermination(60000)
+    Scratch.drain(q2, "parquet sink")
     assert(spark.read.parquet(s"$base/data").count() == 3)
   }
 
@@ -281,7 +282,7 @@ class StreamingSpec extends SparkSpec {
       val q = StreamingOps.drainToParquet(
         StreamingOps.dedupStream(StreamingOps.eventCsvStream(spark, src)),
         s"$base/data", s"$base/ckpt")
-      q.awaitTermination(60000)
+      Scratch.drain(q, "parquet sink")
       assert(!q.isActive)
       spark.read.parquet(s"$base/data")
         .select($"event_id").as[Long].collect().sorted.toSeq
@@ -420,7 +421,7 @@ class StreamingSpec extends SparkSpec {
         .option("checkpointLocation", s"$base/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .outputMode(OutputMode.Append()).start()
-      q.awaitTermination(60000)
+      Scratch.drain(q, "parquet sink")
       assert(!q.isActive)
       spark.read.parquet(s"$base/data").count()
     }

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.sources.{GraftDocsSource, GraftVersions}
+import graft.ops.Scratch
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 /** Snapshot versioning + time travel on the DSv2 warehouse tables
   * (round 13): every commit — append, overwrite, TRUNCATE, and the
@@ -13,21 +15,12 @@ import graft.sources.{GraftDocsSource, GraftVersions}
   */
 class VersioningSpec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_ver_$tag")
-    val cat = s"ver_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
   private def docsRange(rows: Int) =
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", rows.toString).load()
 
   test("every commit snapshots; VERSION/TIMESTAMP AS OF read history exactly") {
-    val (cat, wh) = freshCatalog("tt")
-    try {
+    Scratch.withCatalog(spark, "ver_tt") { (cat, wh) =>
       docsRange(30).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       spark.sql(s"UPDATE $cat.t SET n_words = 0 WHERE doc_id < 5")
@@ -89,16 +82,11 @@ class VersioningSpec extends SparkSpec {
       val pinned = catImpl.loadTable(Identifier.of(Array.empty, "t"), "1")
       assert(pinned.capabilities() ==
         java.util.EnumSet.of(TableCapability.BATCH_READ))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("vacuum keeps the last N snapshots and reclaims exactly the rest") {
-    val (cat, wh) = freshCatalog("vac")
-    try {
+    Scratch.withCatalog(spark, "ver_vac") { (cat, wh) =>
       docsRange(20).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       spark.sql(s"UPDATE $cat.t SET n_words = 1 WHERE doc_id = 3")
@@ -132,16 +120,11 @@ class VersioningSpec extends SparkSpec {
         spark.sql(s"SELECT * FROM $cat.t VERSION AS OF 1").collect()
       }
       assert(gone.getMessage.contains("available"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("TRUNCATE on a versioned table is an empty snapshot, not a delete") {
-    val (cat, wh) = freshCatalog("tr")
-    try {
+    Scratch.withCatalog(spark, "ver_tr") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       spark.sql(s"TRUNCATE TABLE $cat.t")
@@ -151,16 +134,11 @@ class VersioningSpec extends SparkSpec {
       val dir = wh.resolve("t")
       assert(GraftVersions.latest(dir).exists(v =>
         v.op == "truncate" && v.files.isEmpty))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("concurrent disjoint-scope commits serialize into consecutive snapshots") {
-    val (cat, wh) = freshCatalog("cc")
-    try {
+    Scratch.withCatalog(spark, "ver_cc") { (cat, wh) =>
       docsRange(40).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       import scala.concurrent.{Await, Future}
@@ -179,17 +157,12 @@ class VersioningSpec extends SparkSpec {
       assert(live == (0L until 40L).map(i =>
         (i, if (i < 10) 11 else if (i >= 30) 22
             else GraftDocsSource.nWords(i))))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("version feed streams one commit per batch and resumes from checkpoint") {
-    val (cat, wh) = freshCatalog("sf")
-    val base = Files.createTempDirectory("graft_feed")
-    try {
+    Scratch.withCatalog(spark, "ver_sf") { (cat, wh) =>
+      val base = Scratch.dir(wh, "base")
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()        // v0 + v1
       spark.sql(s"INSERT INTO $cat.t SELECT doc_id, title, fp, n_words " +
@@ -203,7 +176,7 @@ class VersioningSpec extends SparkSpec {
           .option("checkpointLocation", s"$base/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination(120000)
+        Scratch.drain(q, "ver_sf")
         assert(!q.isActive)
       }
       drain()
@@ -218,18 +191,12 @@ class VersioningSpec extends SparkSpec {
       val ids2 = spark.read.parquet(s"$base/data")
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(ids2 == ((0L until 10L) ++ Seq(100L, 101L, 200L)))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
   }
 
   test("version feed rejects rewrite commits unless ignoreChanges is set") {
-    val (cat, wh) = freshCatalog("rw")
-    val base = Files.createTempDirectory("graft_feed_rw")
-    try {
+    Scratch.withCatalog(spark, "ver_rw") { (cat, wh) =>
+      val base = Scratch.dir(wh, "base")
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       spark.sql(s"UPDATE $cat.t SET n_words = 0 WHERE doc_id = 3") // rewrite
@@ -242,8 +209,7 @@ class VersioningSpec extends SparkSpec {
           .option("checkpointLocation", s"$base/$tag/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination(120000)
-        q.exception.foreach(throw _)
+        Scratch.drain(q, "ver_rw")
       }
       val err = intercept[Exception] { drain(ignoreChanges = false, "strict") }
       def causes(t: Throwable): Seq[String] =
@@ -260,18 +226,12 @@ class VersioningSpec extends SparkSpec {
       assert(rows.count(_._1 == 3L) == 2, "doc 3 appears pre- and post-rewrite")
       assert(rows.contains((3L, 0)))
       assert(rows.map(_._1).distinct.sorted == (0L until 10L))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
   }
 
   test("version feed: vacuum fails stale checkpoints, fresh streams snapshot") {
-    val (cat, wh) = freshCatalog("vf")
-    val base = Files.createTempDirectory("graft_feed_vac")
-    try {
+    Scratch.withCatalog(spark, "ver_vf") { (cat, wh) =>
+      val base = Scratch.dir(wh, "base")
       docsRange(6).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()        // v0, v1
       def drain(tag: String): Unit = {
@@ -281,8 +241,7 @@ class VersioningSpec extends SparkSpec {
           .option("checkpointLocation", s"$base/$tag/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination(120000)
-        q.exception.foreach(throw _)
+        Scratch.drain(q, "ver_vf")
       }
       drain("early") // consumed through v1
       spark.sql(s"INSERT INTO $cat.t SELECT 50L, 'x', 9L, 1") // v2
@@ -299,18 +258,12 @@ class VersioningSpec extends SparkSpec {
       val ids = spark.read.parquet(s"$base/fresh/data")
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(ids == ((0L until 6L) ++ Seq(50L, 51L)))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
   }
 
   test("compaction is a dataChange=false commit: fewer files, same rows, feed silent") {
-    val (cat, wh) = freshCatalog("cp")
-    val base = Files.createTempDirectory("graft_feed_cp")
-    try {
+    Scratch.withCatalog(spark, "ver_cp") { (cat, wh) =>
+      val base = Scratch.dir(wh, "base")
       docsRange(12).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()        // v0, v1
       spark.sql(s"INSERT INTO $cat.t SELECT 50L, 'x', 9L, 7") // v2
@@ -322,8 +275,7 @@ class VersioningSpec extends SparkSpec {
           .option("checkpointLocation", s"$base/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination(120000)
-        q.exception.foreach(throw _)
+        Scratch.drain(q, "ver_cp")
       }
       drain() // consume v0..v2
       val filesBefore = GraftVersions.latest(dir).get.files.length
@@ -347,17 +299,11 @@ class VersioningSpec extends SparkSpec {
       GraftVersions.vacuum(dir, keepLast = 2) // keeps v3 (compact), v4
       assert(spark.table(s"$cat.t").count() == 14)
       assert(spark.sql(s"SELECT * FROM $cat.t VERSION AS OF 3").count() == 13)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
   }
 
   test("restore rewinds the live state via a new commit, preserving history") {
-    val (cat, wh) = freshCatalog("rs")
-    try {
+    Scratch.withCatalog(spark, "ver_rs") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()        // v0, v1
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id >= 5")    // v2
@@ -380,16 +326,11 @@ class VersioningSpec extends SparkSpec {
       GraftVersions.vacuum(dir, keepLast = 2)
       val err = intercept[Exception] { GraftVersions.restore(dir, 1L) }
       assert(err.getMessage.contains("available"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("the history metadata table exposes the commit log to SQL") {
-    val (cat, wh) = freshCatalog("hi")
-    try {
+    Scratch.withCatalog(spark, "ver_hi") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id >= 8")
@@ -413,16 +354,11 @@ class VersioningSpec extends SparkSpec {
         spark.sql(s"SELECT * FROM $cat.plain.history").collect() }
       intercept[Exception] {
         spark.sql(s"SELECT * FROM $cat.t.nonsense").collect() }
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("manifest min/max stats skip files disjoint from a pushed doc_id range") {
-    val (cat, wh) = freshCatalog("fs")
-    try {
+    Scratch.withCatalog(spark, "ver_fs") { (cat, wh) =>
       // three clamped appends of 2 files each: ranges [0,5) [5,10) |
       // [10,15) [15,20) | [20,25) [25,30)
       spark.read.format("graft.sources.GraftDocsSource")
@@ -466,16 +402,11 @@ class VersioningSpec extends SparkSpec {
       assert(spark.sql(
         s"SELECT COUNT(*) FROM $cat.t VERSION AS OF 3 WHERE doc_id < 5")
         .head().getLong(0) == 5)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("unversioned tables keep the original delete-on-rewrite behavior") {
-    val (cat, wh) = freshCatalog("uv")
-    try {
+    Scratch.withCatalog(spark, "ver_uv") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t").create()
       val dir = wh.resolve("t")
       assert(!GraftVersions.isVersioned(dir))
@@ -486,16 +417,11 @@ class VersioningSpec extends SparkSpec {
         spark.sql(s"SELECT * FROM $cat.t VERSION AS OF 0").collect()
       }
       assert(err.getMessage.contains("not versioned"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("commits record multi-column stats; old doc_id-only manifests still read") {
-    val (cat, wh) = freshCatalog("mc")
-    try {
+    Scratch.withCatalog(spark, "ver_mc") { (cat, wh) =>
       docsRange(20).writeTo(s"$cat.t").tableProperty("versioned", "true")
         .create()
       val dir = wh.resolve("t")
@@ -521,16 +447,11 @@ class VersioningSpec extends SparkSpec {
       assert(parsed.entries == Seq(
         GraftVersions.FileEntry("old-file.tsv", Map("doc_id" -> (3L, 7L)))))
       Files.delete(old)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("Z-order compaction yields quadrant-pure files skippable on every axis") {
-    val (cat, wh) = freshCatalog("zo")
-    try {
+    Scratch.withCatalog(spark, "ver_zo") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       docsRange(256).repartition(8, col("fp"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -556,17 +477,12 @@ class VersioningSpec extends SparkSpec {
       assert(spark.table(s"$cat.t").count() == 256)
       assert(spark.sql(
         s"SELECT COUNT(DISTINCT doc_id) FROM $cat.t").head.getLong(0) == 256)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("streaming sink: exactly-once epochs, replay skipped, restart-stable appId") {
-    val (cat, wh) = freshCatalog("sw")
-    val cp = Files.createTempDirectory("graft_ckpt_sw")
-    try {
+    Scratch.withCatalog(spark, "ver_sw") { (cat, wh) =>
+      val cp = Scratch.dir(wh, "cp")
       import org.apache.spark.sql.functions._
       docsRange(10).writeTo(s"$cat.src").tableProperty("versioned", "true")
         .create()
@@ -577,7 +493,7 @@ class VersioningSpec extends SparkSpec {
           .writeStream.option("checkpointLocation", cp.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable(s"$cat.dst")
-        assert(q.awaitTermination(120000)); q.exception.foreach(throw _)
+        Scratch.drain(q, "ver_sw")
       }
       drain() // src v0 (enable) + v1 (create) → epochs 0, 1
       assert(spark.table(s"$cat.dst").count() == 10)
@@ -606,28 +522,17 @@ class VersioningSpec extends SparkSpec {
       assert(fresh.isDefined, "a new epoch still commits")
 
       // unversioned sink targets fail loudly at stream start
-      val plain = Files.createTempDirectory("graft_sw_plain")
-      try {
-        val q = spark.readStream.table(s"$cat.src")
-          .writeStream.format("graft.sources.GraftDocsSource")
-          .option("path", plain.toString)
-          .option("checkpointLocation", s"$cp-plain")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val err = intercept[Exception] { q.awaitTermination(120000) }
-        assert(err.getMessage.contains("versioned") ||
-          q.exception.exists(_.getMessage.contains("versioned")))
-        q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(plain.toFile)
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          Paths.get(s"$cp-plain").toFile)
-      }
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
+      val plain = Scratch.dir(wh, "plain")
+      val q = spark.readStream.table(s"$cat.src")
+        .writeStream.format("graft.sources.GraftDocsSource")
+        .option("path", plain.toString)
+        .option("checkpointLocation", s"$cp-plain")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      val err = intercept[StreamingQueryException] { Scratch.drain(q, "ver_sw") }
+      assert(err.getMessage.contains("versioned") ||
+        q.exception.exists(_.getMessage.contains("versioned")))
+      q.stop()
     }
   }
 
@@ -645,8 +550,7 @@ class VersioningSpec extends SparkSpec {
     val rt = GraftBloom.fromBase64(b.toBase64)
     assert(rt.bits.toSeq == b.bits.toSeq, "base64 roundtrip")
 
-    val (cat, wh) = freshCatalog("bl")
-    try {
+    Scratch.withCatalog(spark, "ver_bl") { (cat, wh) =>
       docsRange(256)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("bloom.columns", "fp,title").create()
@@ -675,17 +579,12 @@ class VersioningSpec extends SparkSpec {
       assert(spark.sql(
         s"SELECT * FROM $cat.t WHERE fp = ${GraftDocsSource.fp(100L)}")
         .count() == 1)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("CHECK constraints reject bad writes atomically, incl. streaming") {
-    val (cat, wh) = freshCatalog("ck")
-    val cp = Files.createTempDirectory("graft_ckpt_ck")
-    try {
+    Scratch.withCatalog(spark, "ver_ck") { (cat, wh) =>
+      val cp = Scratch.dir(wh, "cp")
       docsRange(10)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("check.words", "n_words BETWEEN 9 AND 99").create()
@@ -715,25 +614,19 @@ class VersioningSpec extends SparkSpec {
         .writeStream.option("checkpointLocation", cp.toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .toTable(s"$cat.t")
-      val e2 = intercept[Exception] { q.awaitTermination(120000) }
+      val e2 = intercept[StreamingQueryException] { Scratch.drain(q, "ver_ck") }
       assert(Iterator.iterate(e2: Throwable)(_.getCause).takeWhile(_ != null)
         .exists(t => Option(t.getMessage).exists(_.contains("CHECK constraint"))))
       q.stop()
       // epochs before the bad commit landed; the bad epoch did not
       val live = spark.table(s"$cat.t").count()
       assert(live == 15, s"good epochs in, bad epoch out: $live")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
     }
   }
 
   test("streaming sink Complete mode: each epoch replaces the live snapshot") {
-    val (cat, wh) = freshCatalog("swc")
-    val cp = Files.createTempDirectory("graft_ckpt_swc")
-    try {
+    Scratch.withCatalog(spark, "ver_swc") { (cat, wh) =>
+      val cp = Scratch.dir(wh, "cp")
       import org.apache.spark.sql.functions._
       docsRange(10).writeTo(s"$cat.src").tableProperty("versioned", "true")
         .create()
@@ -750,7 +643,7 @@ class VersioningSpec extends SparkSpec {
           .option("checkpointLocation", cp.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable(s"$cat.dst")
-        assert(q.awaitTermination(120000)); q.exception.foreach(throw _)
+        Scratch.drain(q, "ver_swc")
       }
       drain()
       def state(): (Long, Long, Long, Int) = {
@@ -772,11 +665,6 @@ class VersioningSpec extends SparkSpec {
       val dstDir = wh.resolve("dst")
       val ops = GraftVersions.listVersions(dstDir).map(_.op)
       assert(ops.count(_ == "streaming-complete") >= 2, s"ops: $ops")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
     }
   }
 }

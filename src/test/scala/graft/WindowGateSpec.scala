@@ -1,13 +1,7 @@
 package graft
 
-import org.apache.spark.GraftTestBridge
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.util.QueryExecutionListener
-
-import scala.collection.mutable
 
 /** Suite-wide WindowExec plan gate (r10 verdict task 4): walk EVERY
   * query's physical plan and assert every window operator is
@@ -19,11 +13,10 @@ import scala.collection.mutable
   * the two-level pattern and hid for 4 rounds) fails CI the day it's
   * written.
   *
-  * Coverage is plan-complete, not just the returned DataFrame: a
-  * QueryExecutionListener captures the executed plan of every INTERNAL
-  * eager action too (the driverLiteral collects inside q200/q205/q131
-  * etc.), with a synchronous listener flush per query so attribution
-  * can't race. The whitelist below is the complete inventory of
+  * Coverage is plan-complete, not just the returned DataFrame: the
+  * shared [[PlanSweep]] also holds the executed plan of every INTERNAL
+  * eager action (the driverLiteral collects inside q200/q205/q131
+  * etc.). The whitelist below is the complete inventory of
   * deliberate single-partition windows, each justified by a bounded,
   * documented input.
   */
@@ -44,57 +37,23 @@ class WindowGateSpec extends SparkSpec {
       "the |distinct scores| relation — bounded by the integer ppm " +
       "domain (≤10⁶+1 rows), the documented q155 class"))
 
-  private def windowNodes(p: SparkPlan): Seq[WindowExec] = p.collect {
-    case w: WindowExec => Seq(w)
-    case a: AdaptiveSparkPlanExec => windowNodes(a.executedPlan)
-    case s: QueryStageExec => windowNodes(s.plan)
-  }.flatten
+  private def globalWindows(p: SparkPlan): Seq[WindowExec] =
+    PlanSweep.nodes(p).collect {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }
 
   test("every WindowExec in every query's plan (incl. internal eager actions) is key-partitioned, modulo the documented whitelist") {
-    val offenders = mutable.LinkedHashMap[String, String]()
-    @volatile var current = "<init>"
-    def record(name: String, plan: SparkPlan): Unit = {
-      val bad = windowNodes(plan).filter(_.partitionSpec.isEmpty)
-      if (bad.nonEmpty && !whitelist.contains(name) &&
-          !offenders.contains(name))
-        offenders += name -> bad.head.windowExpression.mkString(",").take(120)
+    val PlanSweep.Sweep(plans, failed) = PlanSweep(sf)
+    val offenders = plans.collect {
+      case (name, ps) if !whitelist.contains(name) &&
+          ps.all.exists(globalWindows(_).nonEmpty) =>
+        name -> ps.all.flatMap(globalWindows).head
+          .windowExpression.mkString(",").take(120)
     }
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = record(current, qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val usedWhitelist = mutable.Set[String]()
-    // r11 lesson: the sweep used to die on the FIRST query that failed
-    // analysis (a regenerated events table broke 27 of them), so one
-    // broken table masked window coverage of the other ~185 queries.
-    // Record per-query failures, finish the whole sweep, report at end.
-    val failed = mutable.LinkedHashMap[String, String]()
-    try {
-      for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-        current = name
-        try {
-          val df = fn(spark, sf)
-          record(name, df.queryExecution.executedPlan)
-          // flush async listener events while `current` still names the
-          // query that triggered them
-          GraftTestBridge.flushListeners(spark.sparkContext)
-          if (whitelist.contains(name) &&
-              windowNodes(df.queryExecution.executedPlan)
-                .exists(_.partitionSpec.isEmpty))
-            usedWhitelist += name
-        } catch {
-          case e: Throwable =>
-            failed += name -> e.toString.linesIterator.next().take(160)
-        }
-        spark.catalog.clearCache()
-      }
-    } finally {
-      GraftTestBridge.flushListeners(spark.sparkContext)
-      spark.listenerManager.unregister(listener)
-    }
+    val usedWhitelist = plans.collect {
+      case (name, ps) if whitelist.contains(name) &&
+          globalWindows(ps.returned).nonEmpty => name
+    }.toSet
     assert(offenders.isEmpty,
       s"unpartitioned WindowExec outside the whitelist:\n" +
         offenders.map { case (n, w) => s"  $n: $w" }.mkString("\n"))
