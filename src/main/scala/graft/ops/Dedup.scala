@@ -4,11 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import OpsUtil._
+import Features._
 
 /** Deduplication operators for an LLM-data pipeline (builder prompt):
   * exact (hash group-by), MinHash+LSH (shingle → minhash → band →
   * bucket-join), SimHash, and n-gram Jaccard. Embedding-cosine near-dup
-  * lives in [[Similarity]] (shares the quantized-vector machinery).
+  * lives in [[Similarity]]. The shingle scan, the MinHash signature and
+  * the tokenizer are [[Features]] rules.
   *
   * Scale design: every pairwise step is *blocked* — LSH band buckets or the
   * source column — so no O(n²) cross product ever forms; candidate
@@ -17,41 +19,6 @@ import OpsUtil._
   * oracle reproduces them bit-for-bit.
   */
 object Dedup {
-
-  private def tokens(text: Column): Column =
-    filter(split(text, "\\s+"), t => length(t) > 0)
-
-  /** Rebalance the corpus BEFORE a fan-out (explode) stage: a small-file
-    * scan is one partition, and without this the entire shingle/gram
-    * explosion and its partial aggregation run in a single task (observed:
-    * 31 of 32 cores parked). The shuffle moves only the narrow pre-explode
-    * rows; at cluster scale the input is already wide and the probe below
-    * skips the shuffle.
-    *
-    * The probe reads the optimizer's SIZE ESTIMATE instead of
-    * `df.rdd.getNumPartitions` (r19-verdict item 6): the RDD probe
-    * physical-plans the input a second time and — when the input sits
-    * behind a shuffle, as in q121's deduped corpus — AQE *executes* the
-    * upstream stages just to learn a partition count. The logical stat
-    * costs nothing (file-index bytes for scans, propagated estimates
-    * elsewhere) and decides the same way: a file scan only splits into
-    * ≥ defaultParallelism partitions when it carries at least
-    * defaultParallelism × openCostInBytes of input (Spark sizes splits
-    * as min(maxPartitionBytes, max(openCostInBytes, bytes/parallelism))),
-    * so below that bound the fan-out would under-parallelize and the
-    * narrow-row rebalance pays for itself; above it the input is already
-    * wide enough that no rebalance is needed. */
-  private[ops] def fanoutReady(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    val np = sess.sparkContext.defaultParallelism
-    val openCost = sess.sessionState.conf.filesOpenCostInBytes
-    val wideEnough = df.queryExecution.optimizedPlan.stats.sizeInBytes >=
-      BigInt(np.toLong) * openCost
-    if (wideEnough) df else df.repartition(np)
-  }
-
-  private[ops] val tokensSql =
-    "list_filter(string_split_regex(text, '\\s+'), t -> length(t) > 0)"
 
   /** Exact dedup over a corpus with deliberately injected duplicates
     * (every 7th doc re-appears under a shifted id — the test corpus has no
@@ -82,29 +49,10 @@ object Dedup {
     // cached: consumed 4× downstream (signatures, sizes, both sides of the
     // verification join) — the reference's own missed-cache lesson
     // (SURVEY.md §2.12 C1) applied.
-    // Shingles come from DistinctWordGrams — per-document dedup happens
-    // DURING the scan, so the corpus-wide (doc, shingle) `.distinct()`
-    // exchange (formerly this query's most expensive stage) does not
-    // exist in the plan; one interpreted call per document replaces a
-    // per-position expression chain. Byte-split tokenization equals the
-    // `\s+` form on this single-space corpus (property-tested; q167
-    // precedent), and the 3-SF oracle gate pins the equivalence on every
+    // The 3-SF oracle gate pins the byte-split shingle scan on every
     // composed dependent (q79/q186/q190/q193/q194/q196/q198/q205/q207).
-    val shingles = fanoutReady(Tables.documents(spark, dir))
-      .select($"doc_id",
-        explode(graft.functions.TextExprs
-          .distinctWordGrams($"text", 3)).as("s"))
-      .cache()
-    // 8 independent 32-bit hashes from TWO md5 computations (4 hex-chunks
-    // each) instead of 8 salted md5s: hashing is the per-row hot loop at
-    // corpus scale, and a 32-bit space is collision-safe for min-hashing
-    // shingle sets of ~10^3.
-    val minCols = (0 until 8).map { j =>
-      val salted = md5(concat(lit(s"${j / 4}:"), $"s"))
-      min(conv(substring(salted, 1 + 8 * (j % 4), 8), 16, 10).cast("long"))
-        .as(s"h$j")
-    }
-    val sig = shingles.groupBy($"doc_id").agg(minCols.head, minCols.tail: _*)
+    val shingles = Features.shingles(Tables.documents(spark, dir)).cache()
+    val sig = minhash(shingles)
     // cached: the self-join would otherwise evaluate the whole
     // shingle→signature aggregation once per side (no exchange reuse under
     // AQE here), doubling the most expensive stage for a 4-rows-per-doc
@@ -183,20 +131,8 @@ object Dedup {
     * matching the oracle's md5-string keys pair-for-pair. */
   val q186BandingSweep: Q = (spark, dir) => {
     import spark.implicits._
-    // DistinctWordGrams shingles — same rewrite as q41 (per-doc dedup in
-    // the scan, no corpus-wide distinct exchange)
-    val shingles = fanoutReady(Tables.documents(spark, dir))
-      .select($"doc_id",
-        explode(graft.functions.TextExprs
-          .distinctWordGrams($"text", 3)).as("s"))
-      .cache()
-    val minCols = (0 until 8).map { j =>
-      val salted = md5(concat(lit(s"${j / 4}:"), $"s"))
-      min(conv(substring(salted, 1 + 8 * (j % 4), 8), 16, 10).cast("long"))
-        .as(s"h$j")
-    }
-    val sig = shingles.groupBy($"doc_id").agg(minCols.head, minCols.tail: _*)
-      .cache()
+    val shingles = Features.shingles(Tables.documents(spark, dir)).cache()
+    val sig = minhash(shingles).cache()
     // The configs NEST (an all-4-hashes band match implies both 2-hash
     // bands match implies each 1-hash band matches — spec-pinned), so
     // the ONLY band self-join needed is the loosest config's (8x1,
@@ -275,7 +211,7 @@ object Dedup {
   private def simhashDf(spark: org.apache.spark.sql.SparkSession, dir: String) = {
     import spark.implicits._
     val tok = fanoutReady(Tables.documents(spark, dir))
-      .select($"doc_id", explode(tokens($"text")).as("token"))
+      .select($"doc_id", explode(wsTokens($"text")).as("token"))
       .withColumn("v", conv(substring(md5($"token"), 1, 4), 16, 10).cast("int"))
     val bitCols = (0 until 16).map(i =>
       sum(when(shiftright($"v", i).bitwiseAND(1) === 1, 1).otherwise(-1))
@@ -383,10 +319,6 @@ object Dedup {
     "q186_banding_sweep" -> q186BandingSweep,
   )
 
-  private[ops] val minhashMins = (0 until 8).map { j =>
-    val pos = 1 + 8 * (j % 4)
-    s"    min(CAST(('0x' || substr(md5('${j / 4}:' || s), $pos, 8)) AS BIGINT)) AS h$j"
-  }.mkString(",\n")
   private def bandListFor(groups: Seq[Seq[Int]]): String =
     groups.zipWithIndex.map { case (ms, b) =>
       s"md5($b${ms.map(m => s" || '_' || h$m").mkString})"
@@ -417,7 +349,7 @@ object Dedup {
         |FROM groups""".stripMargin,
     "q41_minhash_lsh" ->
       s"""WITH toks AS (
-         |  SELECT doc_id, $tokensSql AS t FROM documents
+         |  SELECT doc_id, $wsTokensSql AS t FROM documents
          |), sh AS (
          |  SELECT DISTINCT doc_id,
          |    unnest(list_transform(range(0, length(t) - 2),
@@ -425,7 +357,7 @@ object Dedup {
          |  FROM toks WHERE length(t) >= 3
          |), sig AS (
          |  SELECT doc_id,
-         |$minhashMins
+         |$minhashSql
          |  FROM sh GROUP BY 1
          |), bands AS (
          |  SELECT doc_id, unnest([$bandList]) AS band FROM sig
@@ -450,7 +382,7 @@ object Dedup {
          |ORDER BY doc_a, doc_b""".stripMargin,
     "q186_banding_sweep" ->
       s"""WITH toks AS (
-         |  SELECT doc_id, $tokensSql AS t FROM documents
+         |  SELECT doc_id, $wsTokensSql AS t FROM documents
          |), sh AS (
          |  SELECT DISTINCT doc_id,
          |    unnest(list_transform(range(0, length(t) - 2),
@@ -458,7 +390,7 @@ object Dedup {
          |  FROM toks WHERE length(t) >= 3
          |), sig AS (
          |  SELECT doc_id,
-         |$minhashMins
+         |$minhashSql
          |  FROM sh GROUP BY 1
          |), bands AS (
          |  SELECT '2x4' AS cfg, 2 AS nb, 4 AS rpb, doc_id,
@@ -505,7 +437,7 @@ object Dedup {
       s"""WITH tok AS (
          |  SELECT doc_id,
          |    CAST(('0x' || substr(md5(token), 1, 4)) AS INT) AS v
-         |  FROM (SELECT doc_id, unnest($tokensSql) AS token FROM documents)
+         |  FROM (SELECT doc_id, unnest($wsTokensSql) AS token FROM documents)
          |), bits AS (
          |  SELECT doc_id,
          |$simhashBits
@@ -517,7 +449,7 @@ object Dedup {
       s"""WITH tok AS (
          |  SELECT doc_id,
          |    CAST(('0x' || substr(md5(token), 1, 4)) AS INT) AS v
-         |  FROM (SELECT doc_id, unnest($tokensSql) AS token FROM documents)
+         |  FROM (SELECT doc_id, unnest($wsTokensSql) AS token FROM documents)
          |), bits AS (
          |  SELECT doc_id,
          |$simhashBits

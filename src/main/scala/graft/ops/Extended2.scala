@@ -248,8 +248,7 @@ object Extended2 {
     val stop = array(stopwords.map(lit): _*)
     Tables.documents(spark, dir)
       .select($"source",
-        array_distinct(filter(split(lower($"text"), "\\s+"),
-          t => length(t) > 0)).as("toks"))
+        array_distinct(Features.wsTokens(lower($"text"))).as("toks"))
       .select($"source",
         size($"toks").as("n_tok"),
         size(array_intersect($"toks", stop)).as("n_stop"),

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.immutable.ArraySeq
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -63,25 +64,47 @@ object OpsUtil {
     * dir, so two collects are scale-safe, while a distributed
     * multiset test (`a.exceptAll(b)` and `b.exceptAll(a)`, each
     * shuffling both inputs) paid ~6 query-stage jobs of pure
-    * scheduling per audit at bench SF (guide §1.2). Row.equals handles
-    * NaN and compares decimals by value, matching exceptAll's
-    * null-safe semantics for these schemas; both sides share a schema
-    * at identical types, so map-key hashing is consistent. A
-    * comparison whose inputs scale with the corpus must use exceptAll
-    * instead. */
+    * scheduling per audit at bench SF (guide §1.2). Rows are counted
+    * under their [[canonicalRow]] key, so the verdict is exceptAll's
+    * for any schema. A comparison whose inputs scale with the corpus
+    * must use exceptAll instead. */
   def sameRowsLocal(a: DataFrame, b: DataFrame): Boolean = {
     val ca = a.collect(); val cb = b.collect()
     ca.length == cb.length && {
-      val counts = scala.collection.mutable.HashMap
-        .empty[org.apache.spark.sql.Row, Int]
-      ca.foreach(r => counts.update(r, counts.getOrElse(r, 0) + 1))
+      val counts = scala.collection.mutable.HashMap.empty[Row, Int]
+      ca.foreach { r =>
+        val k = canonicalRow(r); counts.update(k, counts.getOrElse(k, 0) + 1)
+      }
       cb.forall { r =>
-        counts.get(r) match {
-          case Some(n) if n > 0 => counts.update(r, n - 1); true
+        val k = canonicalRow(r)
+        counts.get(k) match {
+          case Some(n) if n > 0 => counts.update(k, n - 1); true
           case _ => false
         }
       }
     }
+  }
+
+  /** `r` as a hash key whose equality is exceptAll's row equality.
+    * Row.equals compares binary by content and decimals by value, but
+    * Row.hashCode hashes a byte array by identity and a decimal by its
+    * scale, so equal rows could land in different buckets: binary
+    * becomes an ArraySeq, decimals drop trailing zeros, and -0.0
+    * becomes 0.0 (exceptAll normalizes it), nested values included.
+    * NaN needs nothing: Row.equals and `##` already treat NaNs alike. */
+  private def canonicalRow(r: Row): Row =
+    Row.fromSeq(r.toSeq.map(canonical))
+
+  private def canonical(v: Any): Any = v match {
+    case r: Row => canonicalRow(r)
+    case b: Array[Byte] => ArraySeq.unsafeWrapArray(b)
+    case d: java.math.BigDecimal => d.stripTrailingZeros
+    case d: Double if d == 0.0 => 0.0
+    case f: Float if f == 0.0f => 0.0f
+    case s: scala.collection.Seq[_] => s.map(canonical)
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => canonical(k) -> canonical(x) }
+    case x => x
   }
 
   /** Materialize a SMALL (≤ a few hundred rows — profile/audit-sized)

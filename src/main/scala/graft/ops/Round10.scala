@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import OpsUtil.Q
 
 /** Round-10 operators: the curation-pipeline audits that sit between a
   * raw corpus and a training run — n-gram eval decontamination (the
@@ -16,8 +17,6 @@ import graft.Tables
   * relational shapes.
   */
 object Round10 {
-  type Q = (org.apache.spark.sql.SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------------
   // q167: n-gram eval decontamination audit
   // ---------------------------------------------------------------------
@@ -44,7 +43,7 @@ object Round10 {
     * pairs. */
   val q167NgramDecontam: Q = (spark, dir) => {
     import spark.implicits._
-    val docs = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val docs = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"doc_id",
         (conv(substring(md5($"text"), 1, 8), 16, 10).cast("long") % 10)
           .as("bucket"),
@@ -88,7 +87,7 @@ object Round10 {
     import spark.implicits._
     val per = Tables.documents(spark, dir)
       .select($"source",
-        size(filter(split($"text", " "), t => length(t) > 0)).cast("long")
+        size(Features.words($"text")).cast("long")
           .as("toks"))
       .groupBy($"source").agg(sum($"toks").as("tokens"))
       .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
@@ -272,7 +271,7 @@ object Round10 {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
       .select($"doc_id",
-        size(filter(split($"text", " "), t => length(t) > 0)).cast("long")
+        size(Features.words($"text")).cast("long")
           .as("toks"),
         md5($"text").as("p"))
       .filter($"toks" > 0)
@@ -322,7 +321,7 @@ object Round10 {
     * tiny next to the corpus), never a corpus join. */
   val q172BooleanRetrieval: Q = (spark, dir) => {
     import spark.implicits._
-    val tf = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val tf = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"doc_id", explode(split($"text", " ")).as("tok"))
       .filter(length($"tok") > 0)
       .groupBy($"tok", $"doc_id").agg(count(lit(1)).as("tf"))
@@ -396,7 +395,7 @@ object Round10 {
     * nothing pairwise. */
   val q174SourceNovelty: Q = (spark, dir) => {
     import spark.implicits._
-    val grams = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val grams = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"source",
         explode(graft.functions.TextExprs.distinctWordGrams($"text", 5))
           .as("g"))
@@ -488,9 +487,9 @@ object Round10 {
     import spark.implicits._
     val scored = Tables.documents(spark, dir)
       .select($"lang",
-        filter(split($"text", " "), t => length(t) > 0).as("w"))
+        Features.words($"text").as("w"))
       .select($"lang",
-        expr("size(array_distinct(w)) * 1000000 div size(w)").as("score"))
+        Features.uniqueWordRatio.as("score"))
       .groupBy($"score")
       .agg(count(when($"lang" === "en", 1)).as("pos_at"),
         count(when($"lang" =!= "en", 1)).as("neg_at"))
@@ -564,7 +563,7 @@ object Round10 {
     * pivot; the |vocab|-sized table joins nothing corpus-sized. */
   val q178SourceDivergence: Q = (spark, dir) => {
     import spark.implicits._
-    val toks = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val toks = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"source", explode(split($"text", " ")).as("tok"))
       .filter(length($"tok") > 0)
     val cell = toks.groupBy($"source", $"tok").agg(count(lit(1)).as("n"))
@@ -677,7 +676,7 @@ object Round10 {
     import spark.implicits._
     val maxId = Tables.documents(spark, dir)
       .agg(max($"doc_id")).head().getLong(0)
-    val grams = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val grams = Features.fanoutReady(Tables.documents(spark, dir))
       .select(expr(s"least(9L, doc_id * 10 div ${maxId + 1}L)").as("slice"),
         explode(graft.functions.TextExprs.distinctWordGrams($"text", 5))
           .as("g"))
@@ -722,11 +721,10 @@ object Round10 {
     import spark.implicits._
     val flags = Tables.documents(spark, dir)
       .select($"n_chars",
-        filter(split($"text", " "), t => length(t) > 0).as("w"))
+        Features.words($"text").as("w"))
       .select(
         ($"n_chars" >= 200).as("f_len"),
-        (expr("size(array_distinct(w)) * 1000000 div size(w)") >= 300000L)
-          .as("f_div"),
+        (Features.uniqueWordRatio >= 300000L).as("f_div"),
         expr("aggregate(w, 0L, (a, x) -> a + length(x)) div size(w)")
           .between(3L, 12L).as("f_word"))
     val r = flags.agg(count(lit(1)).as("n"),
@@ -757,26 +755,16 @@ object Round10 {
     * integers (f1 = 2·P·R div (P+R) on the ppm values — one integer
     * formula both engines replay; classes the model never predicts get
     * an honest NULL precision, not an ε). Same marker-word predictor as
-    * q32 (`Text.scala:81` — en wins ties, then de/fr/es/zh, unknown
-    * when all scores are 0); one corpus pass into a |langs|²-bounded
-    * matrix aggregate, metrics derived from matrix marginals. */
+    * q32 ([[Features.langMarkers]] — en wins ties, then de/fr/es/zh,
+    * unknown when all scores are 0); one corpus pass into a
+    * |langs|²-bounded matrix aggregate, metrics derived from matrix
+    * marginals. */
   val q183ClassifierMetrics: Q = (spark, dir) => {
     import spark.implicits._
-    val markers: Seq[(String, Seq[String])] = Seq(
-      "en" -> Seq("the", "and", "of", "to", "a", "is", "in"),
-      "de" -> Seq("der", "die", "das", "und", "ist", "ein"),
-      "fr" -> Seq("le", "la", "les", "et", "est", "un"),
-      "es" -> Seq("el", "los", "las", "y", "es", "un"),
-      "zh" -> Seq("的", "是", "在", "了", "和"))
-    val toks = filter(split(lower($"text"), "\\s+"), t => length(t) > 0)
-    val withScores = markers.foldLeft(
-      Tables.documents(spark, dir).withColumn("toks", toks)) {
-      case (df, (l, words)) =>
-        df.withColumn(s"s_$l", size(filter($"toks", t => t.isin(words: _*))))
-    }
-    val best = markers.map { case (l, _) => col(s"s_$l") }
+    val withScores = Features.langScores(Tables.documents(spark, dir))
+    val best = Features.langMarkers.map { case (l, _) => col(s"s_$l") }
       .reduce((a, b) => greatest(a, b))
-    val predicted = markers.foldRight(lit("unknown"): Column) {
+    val predicted = Features.langMarkers.foldRight(lit("unknown"): Column) {
       case ((l, _), alt) =>
         when(col(s"s_$l") === best && best > 0, l).otherwise(alt)
     }
@@ -821,9 +809,9 @@ object Round10 {
     * broadcast. */
   val q185Cooccurrence: Q = (spark, dir) => {
     import spark.implicits._
-    val docToks = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val docToks = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"doc_id",
-        array_distinct(filter(split($"text", " "), t => length(t) > 0))
+        array_distinct(Features.words($"text"))
           .as("ts"))
       .cache()
     val nDocs = docToks.count()
@@ -868,9 +856,9 @@ object Round10 {
     val pairs = Dedup.verifiedPairs(spark, dir).select($"doc_a", $"doc_b")
     val scored = Tables.documents(spark, dir)
       .select($"doc_id",
-        filter(split($"text", " "), t => length(t) > 0).as("w"))
+        Features.words($"text").as("w"))
       .select($"doc_id",
-        expr("size(array_distinct(w)) * 1000000 div size(w)").as("score"))
+        Features.uniqueWordRatio.as("score"))
     pairs
       .join(scored.select($"doc_id".as("doc_a"), $"score".as("sa")),
         Seq("doc_a"))
@@ -955,9 +943,8 @@ object Round10 {
       .withColumn("norm", graft.functions.TextExprs.nfcNormalize(
         regexp_replace(lower($"text"), " +", " ")))
       .select(
-        expr("size(array_distinct(filter(split(text, ' '), " +
-          "t -> length(t) > 0))) * 1000000 div " +
-          "size(filter(split(text, ' '), t -> length(t) > 0))").as("s_raw"),
+        expr(s"size(array_distinct(${Features.wordsExpr})) * 1000000 " +
+          s"div size(${Features.wordsExpr})").as("s_raw"),
         expr("size(array_distinct(filter(split(norm, ' '), " +
           "t -> length(t) > 0))) * 1000000 div " +
           "size(filter(split(norm, ' '), t -> length(t) > 0))").as("s_norm"))
@@ -1022,26 +1009,16 @@ object Round10 {
     * marker hits are reported separately as unsignaled, not silently
     * pure). Code-switched or mistagged documents score low purity and
     * a multilingual pipeline filters or splits them before training.
-    * Same marker vocabulary as q32 (`Text.scala:81`); one corpus pass
-    * into a |langs|-sized profile: per language, doc count, unsignaled
-    * count, fully-pure count, and mean purity over signaled docs. */
+    * Same marker vocabulary as q32 ([[Features.langMarkers]]); one
+    * corpus pass into a |langs|-sized profile: per language, doc count,
+    * unsignaled count, fully-pure count, and mean purity over signaled
+    * docs. */
   val q191LanguagePurity: Q = (spark, dir) => {
     import spark.implicits._
-    val markers: Seq[(String, Seq[String])] = Seq(
-      "en" -> Seq("the", "and", "of", "to", "a", "is", "in"),
-      "de" -> Seq("der", "die", "das", "und", "ist", "ein"),
-      "fr" -> Seq("le", "la", "les", "et", "est", "un"),
-      "es" -> Seq("el", "los", "las", "y", "es", "un"),
-      "zh" -> Seq("的", "是", "在", "了", "和"))
-    val toks = filter(split(lower($"text"), "\\s+"), t => length(t) > 0)
-    val withScores = markers.foldLeft(
-      Tables.documents(spark, dir).withColumn("toks", toks)) {
-      case (df, (l, words)) =>
-        df.withColumn(s"s_$l", size(filter($"toks", t => t.isin(words: _*))))
-    }
-    val total = markers.map { case (l, _) => col(s"s_$l") }
+    val withScores = Features.langScores(Tables.documents(spark, dir))
+    val total = Features.langMarkers.map { case (l, _) => col(s"s_$l") }
       .reduce(_ + _)
-    val own = markers.foldRight(lit(0): Column) {
+    val own = Features.langMarkers.foldRight(lit(0): Column) {
       case ((l, _), alt) => when($"lang" === l, col(s"s_$l")).otherwise(alt)
     }
     withScores
@@ -1079,7 +1056,7 @@ object Round10 {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
       .select($"lang",
-        size(filter(split($"text", " "), t => length(t) > 0)).cast("long")
+        size(Features.words($"text")).cast("long")
           .as("toks"))
       .filter($"toks" > 0)
       .withColumn("bucket", length(bin($"toks")).cast("long"))
@@ -1181,9 +1158,9 @@ object Round10 {
       .select(
         (conv(substring(md5($"text"), 1, 8), 16, 10).cast("long") % 10)
           .as("bucket"),
-        filter(split($"text", " "), t => length(t) > 0).as("w"))
+        Features.words($"text").as("w"))
       .select(($"bucket" < 8).as("is_train"),
-        expr("size(array_distinct(w)) * 1000000 div size(w)").as("score"))
+        Features.uniqueWordRatio.as("score"))
     val perScore = scored.groupBy($"score")
       .agg(count(when($"is_train", 1)).as("n_tr"),
         count(when(!$"is_train", 1)).as("n_ev"))
@@ -1226,14 +1203,14 @@ object Round10 {
       .partitionBy(md5($"text")).orderBy($"doc_id")
     val flagged = Tables.documents(spark, dir)
       .select($"doc_id", $"n_chars", $"text",
-        filter(split($"text", " "), t => length(t) > 0).as("w"))
+        Features.words($"text").as("w"))
       .withColumn("toks", size($"w").cast("long"))
       .withColumn("exact_keep", row_number().over(firstByText) === 1)
       .join(dropB, Seq("doc_id"), "left")
       .withColumn("near_keep", $"near_dup".isNull)
       .withColumn("quality_keep",
         $"n_chars" >= 200
-          && expr("size(array_distinct(w)) * 1000000 div size(w)") >= 300000L
+          && Features.uniqueWordRatio >= 300000L
           && expr("aggregate(w, 0L, (a, x) -> a + length(x)) div size(w)")
             .between(3L, 12L))
       .select($"doc_id", $"toks", $"exact_keep", $"near_keep",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import OpsUtil.Q
 
 /** Round-11 operators: corpus-hygiene and robust-statistics audits a
   * 100 TB curation deployment runs continuously — canonicalization
@@ -17,8 +18,6 @@ import graft.Tables
   * relational shapes.
   */
 object Round11 {
-  type Q = (org.apache.spark.sql.SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------------
   // q197: canonicalization sensitivity of exact dedup
   // ---------------------------------------------------------------------
@@ -193,9 +192,8 @@ object Round11 {
     * q147 precedent). */
   val q200TokenGini: Q = (spark, dir) => {
     import spark.implicits._
-    val freq = Dedup.fanoutReady(Tables.documents(spark, dir))
-      .select(explode(filter(split($"text", " "), t => length(t) > 0))
-        .as("t"))
+    val freq = Features.fanoutReady(Tables.documents(spark, dir))
+      .select(explode(Features.words($"text")).as("t"))
       .groupBy($"t").agg(count(lit(1)).as("f"))
       .withColumn("blk", length(bin($"f")))
       .cache()
@@ -285,7 +283,7 @@ object Round11 {
     val u = conv(substring(md5(concat($"doc_id".cast("string"), lit("#"),
       $"b".cast("string"))), 1, 8), 16, 10).cast("long") % 1000000L
     val w = poissonW(u)
-    val reps = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val reps = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"doc_id", $"source", $"n_chars")
       .withColumn("b", explode(sequence(lit(0), lit(63))))
       .select($"source", $"b", w.as("w"), $"n_chars")
@@ -343,9 +341,8 @@ object Round11 {
   val q203EmbeddingMoments: Q = (spark, dir) => {
     import spark.implicits._
     val d = 8
-    val e = transform(col("embedding"),
-      x => floor(x.cast("double") * 1000).cast("long"))
-    val base = Tables.embeddings(spark, dir).select(e.as("e"))
+    val base = Tables.embeddings(spark, dir)
+      .select(Features.quantize(col("embedding"), 0).as("e"))
     val sumCols =
       (for (i <- 0 until d)
         yield sum(element_at($"e", i + 1)).as(s"sx$i")) ++
@@ -392,7 +389,7 @@ object Round11 {
     // without the cache it can re-execute up to 3x (the q41/q186
     // missed-cache lesson). Output is 20 rows, so driverLiteral lets
     // the cache be dropped before returning (q131 self-containment).
-    val sfp = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val sfp = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"source",
         explode(graft.functions.TextExprs
           .winnowedFingerprints($"text", 5, 8)).as("wm"))
@@ -432,9 +429,9 @@ object Round11 {
     import spark.implicits._
     val scored = Tables.documents(spark, dir)
       .select($"doc_id",
-        filter(split($"text", " "), t => length(t) > 0).as("w"))
+        Features.words($"text").as("w"))
       .select($"doc_id",
-        expr("size(array_distinct(w)) * 1000000 div size(w)").as("score"))
+        Features.uniqueWordRatio.as("score"))
       .cache()
     val n = scored.count()
     val stats = scored.agg(min($"score"), max($"score")).head()
@@ -570,8 +567,7 @@ object Round11 {
     val total = Tables.documents(spark, dir).count()
     Tables.documents(spark, dir)
       .select($"doc_id", $"source",
-        concat_ws(" ", slice(filter(split($"text", " "),
-          t => length(t) > 0), 1, 5)).as("prefix"))
+        concat_ws(" ", slice(Features.words($"text"), 1, 5)).as("prefix"))
       .groupBy($"prefix")
       .agg(count(lit(1)).as("n_docs"),
         countDistinct($"source").as("n_sources"),
@@ -651,7 +647,7 @@ object Round11 {
   val q210WinnowDensity: Q = (spark, dir) => {
     import spark.implicits._
     val k = 5; val w = 8
-    val per = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val per = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"source", length($"text").as("len"),
         size(graft.functions.TextExprs
           .winnowedFingerprints($"text", k, w)).cast("long").as("nfp"))
@@ -678,21 +674,12 @@ object Round11 {
     * resolution argument for (or against) shipping 8 hashes — the same
     * question q186 answers for banding, asked of the estimator itself.
     *
-    * Scale shape: signatures are the q41 aggregate (4 rows per doc
+    * Scale shape: signatures are [[Features.minhash]] (4 rows per doc
     * collapse map-side); the calibration join touches only verified
     * pairs. Estimates and truths are exact integers cross-engine. */
   val q211MinhashCalibration: Q = (spark, dir) => {
     import spark.implicits._
-    val shingles = Dedup.fanoutReady(Tables.documents(spark, dir))
-      .select($"doc_id",
-        explode(graft.functions.TextExprs
-          .distinctWordGrams($"text", 3)).as("s"))
-    val minCols = (0 until 8).map { j =>
-      val salted = md5(concat(lit(s"${j / 4}:"), $"s"))
-      min(conv(substring(salted, 1 + 8 * (j % 4), 8), 16, 10).cast("long"))
-        .as(s"h$j")
-    }
-    val sig = shingles.groupBy($"doc_id").agg(minCols.head, minCols.tail: _*)
+    val sig = Features.minhash(Features.shingles(Tables.documents(spark, dir)))
     val sa = sig.toDF("doc_a" +: (0 until 8).map(j => s"a$j"): _*)
     val sb = sig.toDF("doc_b" +: (0 until 8).map(j => s"b$j"): _*)
     val m = (0 until 8)
@@ -739,9 +726,8 @@ object Round11 {
     val s = OpsUtil.bottomKByHash(
         Tables.documents(spark, dir), Seq($"doc_id", $"text"), $"doc_id", 512)
       .select($"doc_id", $"n_chars".as("x"),
-        expr("""size(array_distinct(filter(split(text, ' '),
-                t -> length(t) > 0))) * 1000000
-                div size(filter(split(text, ' '), t -> length(t) > 0))""")
+        expr(s"size(array_distinct(${Features.wordsExpr})) * 1000000 " +
+          s"div size(${Features.wordsExpr})")
           .as("y"))
     val a = s.toDF("ida", "xa", "ya")
     val b = s.toDF("idb", "xb", "yb")
@@ -1114,7 +1100,7 @@ object Round11 {
       s"""WITH q41 AS (
          |${Dedup.oracle("q41_minhash_lsh")}
          |), toks AS (
-         |  SELECT doc_id, ${Dedup.tokensSql} AS t FROM documents
+         |  SELECT doc_id, ${Features.wsTokensSql} AS t FROM documents
          |), sh AS (
          |  SELECT DISTINCT doc_id,
          |    unnest(list_transform(range(0, length(t) - 2),
@@ -1122,7 +1108,7 @@ object Round11 {
          |  FROM toks WHERE length(t) >= 3
          |), sig AS (
          |  SELECT doc_id,
-         |${Dedup.minhashMins}
+         |${Features.minhashSql}
          |  FROM sh GROUP BY 1
          |), scored AS (
          |  SELECT CAST(floor(q41.jaccard * 1000000) AS BIGINT) AS j_ppm,

@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
+import OpsUtil.Q
 
 /** Round-12 operators: the model-SHIPPING side of the quality pipeline.
   *
@@ -18,8 +18,6 @@ import graft.Tables
   * this is the operation its pipeline would need at scale.
   */
 object Round12 {
-  type Q = (org.apache.spark.sql.SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------------
   // q213: broadcast-model batch scoring (inference at scale)
   // ---------------------------------------------------------------------
@@ -55,11 +53,10 @@ object Round12 {
     import spark.implicits._
     val feats = Tables.documents(spark, dir)
       .select($"source", $"lang", $"n_chars",
-        expr("size(filter(split(text, ' '), t -> length(t) > 0))")
+        expr(s"size(${Features.wordsExpr})")
           .as("n_tok"),
-        expr("""size(array_distinct(filter(split(text, ' '),
-                t -> length(t) > 0))) * 1000000
-                div size(filter(split(text, ' '), t -> length(t) > 0))""")
+        expr(s"size(array_distinct(${Features.wordsExpr})) * 1000000 " +
+          s"div size(${Features.wordsExpr})")
           .as("div_ppm"))
     feats
       .withColumn("logit",

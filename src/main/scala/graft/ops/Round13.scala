@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{GraftTableMeta, GraftVersions}
+import OpsUtil.Q
 
 /** Round-13 operators: the snapshot-versioning face of the warehouse
   * connector as verified queries — time travel, version-diff CDC, and
@@ -27,8 +28,6 @@ import graft.sources.{GraftTableMeta, GraftVersions}
   * [[OpsUtil.driverLiteral]] (the q214 lifecycle pattern).
   */
 object Round13 {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Build the round's shared version history as `$cat.t`: v0 empty
     * (CREATE versioned), v1 = rows [0,30) (CTAS append), v2 = UPDATE
     * (n_words=0 where doc_id<5), v3 = DELETE (doc_id>=20), v4 = INSERT

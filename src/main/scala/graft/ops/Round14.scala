@@ -2,9 +2,10 @@ package graft.ops
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.GraftVersions
+import OpsUtil.Q
 
 /** Round-14 operators: schema evolution on the versioned warehouse
   * (q238) and the further lakehouse capabilities of this round.
@@ -20,8 +21,6 @@ import graft.sources.GraftVersions
   * pre-evolution shape, Delta/Iceberg-style.
   */
 object Round14 {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------------
   // q238: ADD COLUMN schema evolution, audited through time travel
   // ---------------------------------------------------------------------

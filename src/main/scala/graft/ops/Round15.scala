@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.GraftVersions
+import OpsUtil.Q
 
 /** Round-15 operators: generated columns and identity columns on the
   * versioned warehouse — Spark 4's
@@ -30,8 +30,6 @@ import graft.sources.GraftVersions
   * point).
   */
 object Round15 {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------------
   // q261: generated columns — declared derivation, write-path enforced
   // ---------------------------------------------------------------------

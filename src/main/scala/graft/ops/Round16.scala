@@ -2,9 +2,10 @@ package graft.ops
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import Scratch.{insertRange, planFacts}
+import OpsUtil.Q
 
 /** Round-16 operators: the self-maintaining-table quartet on the
   * versioned warehouse —
@@ -39,8 +40,6 @@ import Scratch.{insertRange, planFacts}
   * table to maintain it.
   */
 object Round16 {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------------
   // q265: auto-compaction — compact.threshold keeps file counts bounded
   // ---------------------------------------------------------------------

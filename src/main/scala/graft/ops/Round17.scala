@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import Scratch.{insertRange, planFacts}
+import OpsUtil.Q
 
 /** Round-17 operators: widening the materialized-view OPTIMIZER
   * family —
@@ -27,8 +28,6 @@ import Scratch.{insertRange, planFacts}
   * corpus pass). At 100 TB the win is the full scan that never runs.
   */
 object Round17 {
-  type Q = (SparkSession, String) => DataFrame
-
   private def requireSameResult(a: DataFrame, b: DataFrame, what: String)
       : Unit =
     // view-grain aggregates: ≤ group-count rows at any scale, so the

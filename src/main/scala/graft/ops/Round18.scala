@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import Scratch.{insertRange, planFacts}
+import OpsUtil.Q
 
 /** Round-18 operators: closing the materialized-view optimizer's
   * highest-traffic gaps —
@@ -30,8 +31,6 @@ import Scratch.{insertRange, planFacts}
   * `l_extendedprice` shape) are exactly the ones dashboards sum.
   */
 object Round18 {
-  type Q = (SparkSession, String) => DataFrame
-
   private def requireSameResult(a: DataFrame, b: DataFrame, what: String)
       : Unit =
     // view-grain aggregates: ≤ group-count rows at any scale, so the

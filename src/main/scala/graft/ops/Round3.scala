@@ -141,15 +141,13 @@ object Round3 {
     * follows bucket occupancy (n/256 · 9), never n². */
   val q75AnnLsh: Q = (spark, dir) => {
     import spark.implicits._
-    def quant(e: org.apache.spark.sql.Column) =
-      transform(e, x => floor(x.cast("double") * 1000).cast("long"))
     def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       graft.functions.VectorExprs.dotLong(a, b)
     val sig = (0 until 8).map { h =>
       when(dot($"e", typedLit(lshPlanes(h))) >= 0, 1L << h).otherwise(0L)
     }.reduce(_ + _)
     val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", quant($"embedding").as("e"))
+      .select($"vec_id", Features.quantize($"embedding", 0).as("e"))
       .withColumn("bucket", sig)
       .cache() // corpus side + query side of the bucket probe
     val probes = emb.filter($"vec_id" === 2)
@@ -178,7 +176,7 @@ object Round3 {
     // 6 — this was 4.7 s of this query's 4.7 s at local[32]). tf is
     // cached because BOTH the df aggregation and the score join consume
     // it; uncached it would recompute the explode+aggregate twice.
-    val terms = Dedup.fanoutReady(docs)
+    val terms = Features.fanoutReady(docs)
       .select($"doc_id", explode(split($"text", " ")).as("term"))
       .filter(length($"term") > 0)
     val tf = terms.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
@@ -350,7 +348,7 @@ object Round3 {
     // this plan at all; only deduped fingerprints exit the scan.
     // Equivalence to the composed form is property-tested
     // (PropertiesSpec) and the oracle is unchanged.
-    val fps = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val fps = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"doc_id", $"source",
         explode(graft.functions.TextExprs
           .winnowedFingerprints($"text", 5, 8)).as("wm"))
@@ -392,12 +390,7 @@ object Round3 {
          |WHERE o_orderdate = (SELECT max(o_orderdate) FROM orders)
          |GROUP BY 1 ORDER BY 1""".stripMargin,
     "q75_ann_lsh" -> {
-      def dotSql(a: String, b: String) =
-        s"list_reduce(list_transform($a, (x, i) -> x * $b[i]), (p, q) -> p + q)"
-      def cosSql(a: String, b: String) =
-        s"""CAST(${dotSql(a, b)} AS DOUBLE)
-           |    / (sqrt(CAST(${dotSql(a, a)} AS DOUBLE))
-           |       * sqrt(CAST(${dotSql(b, b)} AS DOUBLE)))""".stripMargin
+      import Features.{cosineSql, dotSql}
       s"""WITH v AS (
          |  SELECT vec_id,
          |    list_transform(embedding,
@@ -425,7 +418,7 @@ object Round3 {
          |  FROM q
          |)
          |SELECT s.vec_id,
-         |  ${cosSql("s.e", "p.qe")} AS cos_sim
+         |  ${cosineSql("s.e", "p.qe")} AS cos_sim
          |FROM sigs s JOIN probes p ON s.bucket = p.bucket
          |WHERE s.vec_id <> 2
          |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin

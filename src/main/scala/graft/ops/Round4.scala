@@ -28,7 +28,7 @@ object Round4 {
   val q82Chunking: Q = (spark, dir) => {
     import spark.implicits._
     val size = 200; val stride = 150
-    val docs = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val docs = Features.fanoutReady(Tables.documents(spark, dir))
     docs
       .select($"source", $"text",
         explode(sequence(lit(0),

@@ -206,10 +206,8 @@ object Round5 {
     // integer division then never sees a negative numerator — Spark's
     // `div` truncates while DuckDB's `//` floors, and they only agree on
     // non-negatives (the q91 rule, extended to signed data).
-    def quant(e: org.apache.spark.sql.Column) =
-      transform(e, x => floor(x.cast("double") * 1000).cast("long") + 1000L)
     val vecs = Tables.embeddings(spark, dir)
-      .select($"vec_id", quant($"embedding").as("e"))
+      .select($"vec_id", Features.quantize($"embedding", 1000).as("e"))
       .withColumn("xx", graft.functions.VectorExprs.dotLong($"e", $"e"))
       .cache()
     // init: the quantized coordinates of vec_id 0..3, in id order

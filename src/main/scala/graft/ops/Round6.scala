@@ -23,7 +23,7 @@ object Round6 {
     * fan-out rules. */
   private def wordGrams(df: DataFrame, n: Int): DataFrame = {
     import df.sparkSession.implicits._
-    Dedup.fanoutReady(df)
+    Features.fanoutReady(df)
       .select($"doc_id", split($"text", " ").as("w"))
       .filter(size($"w") >= n)
       .select($"doc_id", $"w",
@@ -85,7 +85,7 @@ object Round6 {
     * division — every emitted value is bit-stable cross-engine. */
   val q100UnigramSurprise: Q = (spark, dir) => {
     import spark.implicits._
-    val toks = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val toks = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"doc_id", explode(split($"text", " ")).as("tok"))
       .filter(length($"tok") > 0)
       .cache()
@@ -295,7 +295,7 @@ object Round6 {
     // former distinct was a full extra exchange + aggregate over the
     // fan-out for nothing (guide §2.4: a distinct on already-unique
     // data is an accidental shuffle).
-    val fps = Dedup.fanoutReady(corpus)
+    val fps = Features.fanoutReady(corpus)
       .select($"doc_id",
         explode(graft.functions.TextExprs
           .winnowedFingerprints($"text", k, w)).as("wm"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import OpsUtil._
+import Features.{cosineSql, dotSql, quantizeSql}
 
 /** Round-7 additions — the data-SELECTION stages of a training pipeline
   * (what to keep, not just what to dedup): SemDeDup semantic pruning,
@@ -18,26 +19,11 @@ import OpsUtil._
   */
 object Round7 {
 
-  /** float[] → exact integer vector (thousandths) — the Similarity rule. */
-  private def quantize(e: Column): Column =
-    transform(e, x => floor(x.cast("double") * 1000).cast("long"))
-
-  private val quantizeSql =
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform($a, (x, i) -> x * $b[i]), (p, q) -> p + q)"
-
-  private def cosineSql(a: String, b: String): String =
-    s"""CAST(${dotSql(a, b)} AS DOUBLE)
-       |    / (sqrt(CAST(${dotSql(a, a)} AS DOUBLE))
-       |       * sqrt(CAST(${dotSql(b, b)} AS DOUBLE)))""".stripMargin
-
   /** (doc_id, lang, tok) fan-out shared by the text-selection queries —
     * the q100 shape (pre-explode rebalance, codegen'd split, no HOFs). */
   private def toks(df: DataFrame): DataFrame = {
     import df.sparkSession.implicits._
-    Dedup.fanoutReady(df)
+    Features.fanoutReady(df)
       .select($"doc_id", $"lang", explode(split($"text", " ")).as("tok"))
       .filter(length($"tok") > 0)
   }
@@ -74,7 +60,7 @@ object Round7 {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
       .select($"vec_id", $"label",
-        transform(quantize($"embedding"), x => x + 1000L).as("e"))
+        transform(Features.quantize($"embedding", 0), x => x + 1000L).as("e"))
       .cache()
     val cent = emb.select($"label", posexplode($"e").as(Seq("pos", "v")))
       .groupBy($"label", $"pos")
@@ -470,7 +456,7 @@ object Round7 {
     * (the q100 rule; ln-ulp boundary risk documented in PLANS.md). */
   val q117BigramLm: Q = (spark, dir) => {
     import spark.implicits._
-    val grams = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val grams = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"doc_id", split($"text", " ").as("w"))
       .filter(size($"w") >= 2)
       .select($"doc_id",
@@ -641,14 +627,13 @@ object Round7 {
     // directly. Same kept docs: n_words/n_stop here are exactly the old
     // aggregate's counts (split on single space, empty tokens dropped).
     val ruled = dedup
-      .withColumn("toks",
-        filter(split($"text", " "), t => length(t) > 0))
+      .withColumn("toks", Features.words($"text"))
       .withColumn("n_words", size($"toks"))
       .withColumn("n_stop",
         size(filter($"toks", t => t === "the" || t === "a")))
       .filter($"n_words" >= 30 && $"n_words" <= 2000 && $"n_stop" >= 2)
     val rules = ruled.select($"doc_id", $"lang").cache()
-    val rtok = Dedup.fanoutReady(ruled.select($"doc_id", $"lang", $"toks"))
+    val rtok = Features.fanoutReady(ruled.select($"doc_id", $"lang", $"toks"))
       .select($"doc_id", $"lang", explode($"toks").as("tok"))
       .cache()
     val vocab = rtok.groupBy($"tok").agg(count(lit(1)).as("cnt"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import OpsUtil._
+import Features.{dotSql, quantizeSql}
 
 /** Round-8 additions — the remaining corpus-maintenance stages of a
   * training pipeline plus the analytics shapes they lean on: passage-level
@@ -24,16 +25,6 @@ import OpsUtil._
   * group-merge) mirror /root/reference/Assignment-python.py:214-420.
   */
 object Round8 {
-
-  /** float[] → exact integer vector (thousandths) — the Similarity rule. */
-  private def quantize(e: Column): Column =
-    transform(e, x => floor(x.cast("double") * 1000).cast("long"))
-
-  private val quantizeSql =
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform($a, (x, i) -> x * $b[i]), (p, q) -> p + q)"
 
   /** Exact decimal cents for a double money column — the q122 recipe. */
   private def cents(c: String): Column =
@@ -59,7 +50,7 @@ object Round8 {
     * per-lang re-aggregations that are map-side combined. No joins. */
   val q123PassageDedup: Q = (spark, dir) => {
     import spark.implicits._
-    val segs = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val segs = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"doc_id", $"lang", split($"text", " ").as("w"))
       .select($"doc_id", $"lang", expr(
         """explode(transform(sequence(0, (size(w) - 1) div 8),
@@ -157,7 +148,7 @@ object Round8 {
     * vocabulary. */
   val q125HeavyHitters: Q = (spark, dir) => {
     import spark.implicits._
-    val toks = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val toks = Features.fanoutReady(Tables.documents(spark, dir))
       .select(explode(split($"text", " ")).as("tok"))
       .filter(length($"tok") > 0)
       .cache()
@@ -231,7 +222,7 @@ object Round8 {
     * pair join carries ≤3 rows per src instead of every scored pair
     * (same (cos DESC, dst ASC) order law, A/B'd hash-identical); the
     * mutuality check is a self-join of the already k-bounded edge list
-    * (≤ 3n rows). Quantized-integer cosine per the Similarity rules.
+    * (≤ 3n rows). Quantized-integer cosine per [[Features.quantize]].
     *
     * Candidate generation is GATED on measured clusterability (see
     * [[lshBandAgreePpm]]): on this corpus the blocks are isotropic
@@ -291,7 +282,7 @@ object Round8 {
     val dot = graft.functions.VectorExprs.dotLong _
     val top3 = udaf(new graft.functions.TopKByValue(3))
     val emb = embIn
-      .select($"vec_id", $"label", quantize($"embedding").as("e"))
+      .select($"vec_id", $"label", Features.quantize($"embedding", 0).as("e"))
       .withColumn("n2", dot($"e", $"e"))
       .cache()
     val sigBits = (0 until 24).map { h =>
@@ -480,7 +471,7 @@ object Round8 {
     import spark.implicits._
     val dot = graft.functions.VectorExprs.dotLong _
     val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", quantize($"embedding").as("e"))
+      .select($"vec_id", Features.quantize($"embedding", 0).as("e"))
       .withColumn("n2", dot($"e", $"e"))
       .cache()
     val seed = emb.orderBy($"vec_id").limit(1)
@@ -637,7 +628,7 @@ object Round8 {
   val q135QuantizationAudit: Q = (spark, dir) => {
     import spark.implicits._
     val comps = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"label", posexplode(quantize($"embedding"))
+      .select($"vec_id", $"label", posexplode(Features.quantize($"embedding", 0))
         .as(Seq("pos", "v")))
       .cache()
     val scales = comps.groupBy($"pos")

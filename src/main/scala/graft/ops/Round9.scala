@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import OpsUtil._
+import Features.{dotSql, quantizeSql}
 
 /** Round-9 additions: the honest ANN-pruning audit the r7 verdict asked
   * for, plus further scale-surface operators.
@@ -14,18 +15,6 @@ import OpsUtil._
   * relational shapes).
   */
 object Round9 {
-  type Q = (org.apache.spark.sql.SparkSession, String) => DataFrame
-
-  /** float[] → exact integer vector (thousandths) — the Similarity rule. */
-  private def quantize(e: Column): Column =
-    transform(e, x => floor(x.cast("double") * 1000).cast("long"))
-
-  private val quantizeSql =
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform($a, (x, i) -> x * $b[i]), (p, q) -> p + q)"
-
   /** 24 deterministic ±1 hyperplanes (the q75 md5 construction, widened
     * from 8 to 24 so the signature can band), reproduced bit-for-bit by
     * the DuckDB oracle. */
@@ -74,7 +63,7 @@ object Round9 {
     import spark.implicits._
     val dot = graft.functions.VectorExprs.dotLong _
     val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"label", quantize($"embedding").as("e"))
+      .select($"vec_id", $"label", Features.quantize($"embedding", 0).as("e"))
       .withColumn("n2", dot($"e", $"e"))
     val sigBits = (0 until 24).map { h =>
       when(dot($"e", typedLit(lshPlanes24(h))) >= 0, 1L << h).otherwise(0L)
@@ -196,7 +185,7 @@ object Round9 {
   val q142InvertedIndex: Q = (spark, dir) => {
     import spark.implicits._
     val low5 = udaf(new graft.functions.TopKByValue(5))
-    val tf = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val tf = Features.fanoutReady(Tables.documents(spark, dir))
       .select($"doc_id", explode(split($"text", " ")).as("tok"))
       .filter(length($"tok") > 0)
       .groupBy($"tok", $"doc_id").agg(count(lit(1)).as("tf"))
@@ -226,9 +215,9 @@ object Round9 {
     import spark.implicits._
     val scored = Tables.documents(spark, dir)
       .select($"doc_id", $"n_chars",
-        filter(split($"text", " "), t => length(t) > 0).as("w"))
+        Features.words($"text").as("w"))
       .select($"doc_id", $"n_chars",
-        expr("size(array_distinct(w)) * 1000000 div size(w)").as("score"))
+        Features.uniqueWordRatio.as("score"))
       .cache()
     val n = scored.count()
     val stats = scored.agg(min($"score"), max($"score")).head()
@@ -429,9 +418,9 @@ object Round9 {
     import spark.implicits._
     val scored = Tables.documents(spark, dir)
       .select($"doc_id",
-        filter(split($"text", " "), t => length(t) > 0).as("w"))
+        Features.words($"text").as("w"))
       .select($"doc_id",
-        expr("size(array_distinct(w)) * 1000000 div size(w)").as("score"))
+        Features.uniqueWordRatio.as("score"))
       .withColumn("batch", when($"doc_id" % 2 === 0, "ref").otherwise("cur"))
       .cache()
     val r = scored.agg(min($"score").as("lo"), max($"score").as("hi")).head()
@@ -521,7 +510,7 @@ object Round9 {
     // the q167 rewrite applied here): the interpreted per-position HOF
     // lambda and the corpus-wide (doc, gram) `.distinct()` exchange —
     // formerly this query's biggest shuffle — no longer exist.
-    val grams = Dedup.fanoutReady(corpus)
+    val grams = Features.fanoutReady(corpus)
       .select($"doc_id",
         explode(graft.functions.TextExprs
           .distinctWordGrams($"text", 5)).as("gram"))
@@ -601,7 +590,7 @@ object Round9 {
     * emitted. */
   val q153VocabCoverage: Q = (spark, dir) => {
     import spark.implicits._
-    val vocab = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val vocab = Features.fanoutReady(Tables.documents(spark, dir))
       .select(explode(split($"text", " ")).as("tok"))
       .filter(length($"tok") > 0)
       .groupBy($"tok").agg(count(lit(1)).as("cnt"))
@@ -680,9 +669,9 @@ object Round9 {
     import spark.implicits._
     val scored = Tables.documents(spark, dir)
       .select($"doc_id",
-        filter(split($"text", " "), t => length(t) > 0).as("w"))
+        Features.words($"text").as("w"))
       .select($"doc_id",
-        expr("size(array_distinct(w)) * 1000000 div size(w)").as("score"))
+        Features.uniqueWordRatio.as("score"))
       .withColumn("is_ref", $"doc_id" % 2 === 0)
     val perScore = scored.groupBy($"score")
       .agg(count(when($"is_ref", 1)).as("n_ref"),
@@ -724,7 +713,7 @@ object Round9 {
     def bucket(r: Column, tok: Column): Column =
       pmod(conv(substring(md5(concat(r.cast("string"), lit(":"), tok)),
         1, 8), 16, 10).cast("long"), lit(32L))
-    val toks = Dedup.fanoutReady(Tables.documents(spark, dir))
+    val toks = Features.fanoutReady(Tables.documents(spark, dir))
       .select(explode(split($"text", " ")).as("tok"))
       .filter(length($"tok") > 0)
       .cache()
@@ -797,35 +786,8 @@ object Round9 {
     * the number a PQ deployment watches. */
   val q158PqAudit: Q = (spark, dir) => {
     import spark.implicits._
-    def quant(e: Column) =
-      transform(e, x => floor(x.cast("double") * 1000).cast("long") + 1000L)
-    val subs = Tables.embeddings(spark, dir)
-      .select($"vec_id", quant($"embedding").as("e"))
-      .select($"vec_id", explode(expr("sequence(0, 7)")).as("m"), $"e")
-      .select($"vec_id", $"m", expr("slice(e, m * 8 + 1, 8)").as("sub"))
-      .cache()
-    val dist = expr(
-      "aggregate(zip_with(sub, c, (x, y) -> (x - y) * (x - y)), " +
-        "0L, (a, b) -> a + b)")
-    def assign(cb: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"vec_id", $"m").orderBy($"dist", $"j")
-      subs.join(broadcast(cb), Seq("m"))
-        .withColumn("dist", dist)
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
-        .select($"vec_id", $"m", $"sub", $"j".as("code"), $"dist")
-    }
-    val cb0 = subs.filter($"vec_id" < 4)
-      .select($"m", $"vec_id".cast("int").as("j"), $"sub".as("c"))
-    val cb1 = assign(cb0)
-      .select($"m", $"code".as("j"), posexplode($"sub").as(Seq("dim", "x")))
-      .groupBy($"m", $"j", $"dim")
-      .agg(expr("sum(x) div count(1)").as("cd"))
-      .groupBy($"m", $"j")
-      .agg(expr("transform(array_sort(collect_list(struct(dim, cd)))," +
-        " s -> s.cd)").as("c"))
-    assign(cb1)
+    val (_, cb1, encoded) = pqEncode(spark, dir)
+    encoded
       .groupBy($"m")
       .agg(count(lit(1)).as("n_vecs"),
         sum($"code").as("code_sum"),
@@ -837,40 +799,54 @@ object Round9 {
       .orderBy($"m")
   }
 
-  /** Shared with [[q159PqAdc]]: subvector fan-out, trained codebooks,
-    * and the final code assignment of the q158 PQ pipeline. */
+  /** Shared by [[q158PqAudit]] and [[q159PqAdc]]: subvector fan-out,
+    * trained codebooks, and the final code assignment of the PQ
+    * pipeline. */
   private def pqEncode(spark: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    def quant(e: Column) =
-      transform(e, x => floor(x.cast("double") * 1000).cast("long") + 1000L)
     val subs = Tables.embeddings(spark, dir)
-      .select($"vec_id", quant($"embedding").as("e"))
+      .select($"vec_id", Features.quantize($"embedding", 1000).as("e"))
       .select($"vec_id", explode(expr("sequence(0, 7)")).as("m"), $"e")
       .select($"vec_id", $"m", expr("slice(e, m * 8 + 1, 8)").as("sub"))
       .cache()
+    val (cb1, encoded) = pqTrain(subs,
+      Seq($"vec_id", $"m", $"sub", $"j".as("code"), $"dist"))
+    (subs, cb1, encoded)
+  }
+
+  /** The PQ training step over a (vec_id, m, sub, …) subvector frame:
+    * init codebooks = the subvectors of vec_id 0..3, ONE integer-exact
+    * Lloyd round (`sum div count` on non-negative coordinates), then the
+    * final assignment of every subvector to its nearest code (ties →
+    * lowest code). Codebooks are a (8×4)-row relation that broadcasts
+    * into both assignment passes. Returns (codebooks (m, j, c), the
+    * final assignment projected to `out`). */
+  private def pqTrain(subs: DataFrame, out: Seq[Column])
+      : (DataFrame, DataFrame) = {
     val dist = expr(
       "aggregate(zip_with(sub, c, (x, y) -> (x - y) * (x - y)), " +
         "0L, (a, b) -> a + b)")
     def assign(cb: DataFrame): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"vec_id", $"m").orderBy($"dist", $"j")
+        .partitionBy(col("vec_id"), col("m")).orderBy(col("dist"), col("j"))
       subs.join(broadcast(cb), Seq("m"))
         .withColumn("dist", dist)
         .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
-        .select($"vec_id", $"m", $"sub", $"j".as("code"), $"dist")
+        .filter(col("rn") === 1)
+        .select(out: _*)
     }
-    val cb0 = subs.filter($"vec_id" < 4)
-      .select($"m", $"vec_id".cast("int").as("j"), $"sub".as("c"))
+    val cb0 = subs.filter(col("vec_id") < 4)
+      .select(col("m"), col("vec_id").cast("int").as("j"), col("sub").as("c"))
     val cb1 = assign(cb0)
-      .select($"m", $"code".as("j"), posexplode($"sub").as(Seq("dim", "x")))
-      .groupBy($"m", $"j", $"dim")
+      .select(col("m"), col("code").as("j"),
+        posexplode(col("sub")).as(Seq("dim", "x")))
+      .groupBy(col("m"), col("j"), col("dim"))
       .agg(expr("sum(x) div count(1)").as("cd"))
-      .groupBy($"m", $"j")
+      .groupBy(col("m"), col("j"))
       .agg(expr("transform(array_sort(collect_list(struct(dim, cd)))," +
         " s -> s.cd)").as("c"))
-    (subs, cb1, assign(cb1))
+    (cb1, assign(cb1))
   }
 
   // ---------------------------------------------------------------------
@@ -935,16 +911,7 @@ object Round9 {
     * recall of the probabilistic path against the exact one. */
   val q160ExactSimJoin: Q = (spark, dir) => {
     import spark.implicits._
-    // DistinctWordGrams shingles — the q41/q186 rewrite applied here
-    // too: per-document dedup happens DURING the scan, so the
-    // corpus-wide (doc, shingle) `.distinct()` exchange (formerly this
-    // query's largest shuffle) and the interpreted per-position HOF
-    // chain no longer exist (guide §2.4 remove shuffles outright).
-    val sh = Dedup.fanoutReady(Tables.documents(spark, dir))
-      .select($"doc_id",
-        explode(graft.functions.TextExprs
-          .distinctWordGrams($"text", 3)).as("s"))
-      .cache()
+    val sh = Features.shingles(Tables.documents(spark, dir)).cache()
     val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("nsh"))
     // Intersections come from ONE co-shingle self-join: every pair's
     // shared-shingle count materializes directly from grouping the
@@ -973,12 +940,7 @@ object Round9 {
         expr("inter * 1000000 div (na + nb - inter)"))
     // q41's banding, reproduced on raw signature equality (band identity
     // is internal — no hash function needs to match across engines)
-    val minCols = (0 until 8).map { j =>
-      val salted = md5(concat(lit(s"${j / 4}:"), $"s"))
-      min(conv(substring(salted, 1 + 8 * (j % 4), 8), 16, 10).cast("long"))
-        .as(s"h$j")
-    }
-    val sig = sh.groupBy($"doc_id").agg(minCols.head, minCols.tail: _*)
+    val sig = Features.minhash(sh)
     // ONE band self-join on an exact (band#, h_lo, h_hi) struct key
     // instead of four separate signature self-joins + union: same
     // candidate set (struct equality is exact — no hash to match
@@ -1021,10 +983,9 @@ object Round9 {
     *     membership — recall stays a checked output. */
   val q161IvfPq: Q = (spark, dir) => {
     import spark.implicits._
-    def quant(e: Column) =
-      transform(e, x => floor(x.cast("double") * 1000).cast("long") + 1000L)
     val vecs = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"label", quant($"embedding").as("e"))
+      .select($"vec_id", $"label",
+        Features.quantize($"embedding", 1000).as("e"))
       .cache()
     // 1. coarse centroids: exact integer means per label (the q51 form)
     val cents = vecs
@@ -1045,28 +1006,8 @@ object Round9 {
       .select($"vec_id", $"label", $"m",
         expr("slice(r, m * 8 + 1, 8)").as("sub"))
       .cache()
-    val dist = expr(
-      "aggregate(zip_with(sub, c, (x, y) -> (x - y) * (x - y)), " +
-        "0L, (a, b) -> a + b)")
-    def assign(cb: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"vec_id", $"m").orderBy($"dist", $"j")
-      subs.join(broadcast(cb), Seq("m"))
-        .withColumn("dist", dist)
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
-        .select($"vec_id", $"label", $"m", $"sub", $"j".as("code"))
-    }
-    val cb0 = subs.filter($"vec_id" < 4)
-      .select($"m", $"vec_id".cast("int").as("j"), $"sub".as("c"))
-    val cb1 = assign(cb0)
-      .select($"m", $"code".as("j"), posexplode($"sub").as(Seq("dim", "x")))
-      .groupBy($"m", $"j", $"dim")
-      .agg(expr("sum(x) div count(1)").as("cd"))
-      .groupBy($"m", $"j")
-      .agg(expr("transform(array_sort(collect_list(struct(dim, cd)))," +
-        " s -> s.cd)").as("c"))
-    val encoded = assign(cb1)
+    val (cb1, encoded) = pqTrain(subs,
+      Seq($"vec_id", $"label", $"m", $"sub", $"j".as("code")))
     // 3. probe: the query's 2 nearest cells by centroid distance
     val qvec = vecs.filter($"vec_id" === 0).select($"e".as("qe"))
     val probes = cents.join(broadcast(qvec))
@@ -1126,7 +1067,7 @@ object Round9 {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
       .select($"doc_id", $"lang",
-        size(filter(split($"text", " "), t => length(t) > 0)).cast("long")
+        size(Features.words($"text")).cast("long")
           .as("toks"),
         md5($"text").as("p"))
       .withColumn("blk", conv(substring($"p", 1, 2), 16, 10).cast("long"))
@@ -1176,7 +1117,7 @@ object Round9 {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
       .select($"doc_id", $"lang",
-        size(filter(split($"text", " "), t => length(t) > 0)).cast("long")
+        size(Features.words($"text")).cast("long")
           .as("toks"),
         md5($"text").as("p"))
       .cache()
@@ -1270,9 +1211,9 @@ object Round9 {
     import spark.implicits._
     val scored = Tables.documents(spark, dir)
       .select($"source",
-        filter(split($"text", " "), t => length(t) > 0).as("w"))
+        Features.words($"text").as("w"))
       .select($"source",
-        expr("size(array_distinct(w)) * 1000000 div size(w)").as("score"))
+        Features.uniqueWordRatio.as("score"))
     val per = scored.groupBy($"source")
       .agg(count(lit(1)).as("n_docs"), sum($"score").as("ssum"))
       .withColumn("mean_score", expr("ssum div n_docs"))
@@ -1386,11 +1327,6 @@ object Round9 {
       |          ORDER BY dist, j) AS rn FROM d2)
       |  WHERE rn = 1
       |)""".stripMargin
-
-  private val q160MinhashMins = (0 until 8).map { j =>
-    val pos = 1 + 8 * (j % 4)
-    s"    min(CAST(('0x' || substr(md5('${j / 4}:' || s), $pos, 8)) AS BIGINT)) AS h$j"
-  }.mkString(",\n")
 
   val oracle: Map[String, String] = Map(
     "q165_source_lift" ->
@@ -1648,7 +1584,7 @@ object Round9 {
          |  WHERE i.inter * 3 >= za.nsh + zb.nsh - i.inter
          |), sig AS MATERIALIZED (
          |  SELECT doc_id,
-         |$q160MinhashMins
+         |${Features.minhashSql}
          |  FROM sh GROUP BY 1
          |), lsh AS MATERIALIZED (
          |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b

@@ -147,9 +147,9 @@ object Scalars {
          |        value FROM events)
          |GROUP BY 1 ORDER BY 1""".stripMargin,
     "q23_array_hof" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT source,
-        |    list_filter(string_split(text, ' '), t -> length(t) > 0) AS tokens
+        |    ${Features.wordsSql} AS tokens
         |  FROM documents
         |)
         |SELECT source, COUNT(*) AS n_docs,

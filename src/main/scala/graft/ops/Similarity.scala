@@ -4,17 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import OpsUtil._
+import Features._
 
 /** Similarity search over the embeddings table (builder prompt: brute-force
   * cosine top-k baseline + a blocked/IVF-style scale path + embedding-cosine
   * near-dup).
   *
   * Cross-engine determinism: float embeddings are floor-quantized to
-  * thousandths (`floor(x*1000)` on the widened double — floor of an
-  * identical double is identical everywhere, unlike round), giving integer
-  * vectors whose dot products and norms are EXACT 64-bit sums; the final
-  * cosine is a single IEEE division+sqrt on identical inputs, so even the
-  * double column hash-matches DuckDB bit-for-bit.
+  * thousandths ([[Features.quantize]]), giving integer vectors whose dot
+  * products and norms are EXACT 64-bit sums; the final cosine is a single
+  * IEEE division+sqrt on identical inputs, so even the double column
+  * hash-matches DuckDB bit-for-bit.
   *
   * Scale notes: top-k versus one query is a broadcast of the query row and
   * a TakeOrderedAndProject — no shuffle of the corpus. The near-dup pair
@@ -24,22 +24,12 @@ import OpsUtil._
   */
 object Similarity {
 
-  /** float[] → exact integer vector (thousandths). */
-  private def quantize(e: Column): Column =
-    transform(e, x => floor(x.cast("double") * 1000).cast("long"))
-
-  private val quantizeSql =
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-
   /** Exact integer dot product of two quantized vectors — a custom codegen
     * Expression ([[graft.functions.VectorExprs.dotLong]]); semantically
     * identical to aggregate(zip_with(a,b,_*_), 0L, _+_) but a tight
     * generated loop instead of interpreted HOF lambdas. */
   private def dot(a: Column, b: Column): Column =
     graft.functions.VectorExprs.dotLong(a, b)
-
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform($a, (x, i) -> x * $b[i]), (p, q) -> p + q)"
 
   /** Fused single-pass cosine ([[graft.functions.CosineSimLong]]): one
     * generated loop for dot + both norms; bit-identical to the composed
@@ -48,17 +38,12 @@ object Similarity {
   private def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExprs.cosineLong(a, b)
 
-  private def cosineSql(a: String, b: String): String =
-    s"""CAST(${dotSql(a, b)} AS DOUBLE)
-       |    / (sqrt(CAST(${dotSql(a, a)} AS DOUBLE))
-       |       * sqrt(CAST(${dotSql(b, b)} AS DOUBLE)))""".stripMargin
-
   /** Brute-force cosine top-k against one query vector (vec_id 0):
     * broadcast the query, scan the corpus once, TakeOrderedAndProject. */
   val q50CosineTopk: Q = (spark, dir) => {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", quantize($"embedding").as("e"))
+      .select($"vec_id", quantize($"embedding", 0).as("e"))
     val query = emb.filter($"vec_id" === 0)
       .select($"e".as("qe"))
     emb.filter($"vec_id" =!= 0)
@@ -76,7 +61,7 @@ object Similarity {
   val q44EmbeddingNeardup: Q = (spark, dir) => {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"label", quantize($"embedding").as("e"))
+      .select($"vec_id", $"label", quantize($"embedding", 0).as("e"))
       .withColumn("n2", dot($"e", $"e"))
       .cache()
     emb.as("va").join(emb.as("vb"),
@@ -96,7 +81,7 @@ object Similarity {
   val q51AnnIvf: Q = (spark, dir) => {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"label", quantize($"embedding").as("e"))
+      .select($"vec_id", $"label", quantize($"embedding", 0).as("e"))
     val comps = emb.select($"label", posexplode($"e").as(Seq("pos", "v")))
     val centroids = comps.groupBy($"label", $"pos")
       .agg((sum($"v").cast("double") / count(lit(1))).as("c"))
@@ -136,7 +121,7 @@ object Similarity {
   val q184ProbeSweep: Q = (spark, dir) => {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"label", quantize($"embedding").as("e"))
+      .select($"vec_id", $"label", quantize($"embedding", 0).as("e"))
       .cache()
     val comps = emb.select($"label", posexplode($"e").as(Seq("pos", "v")))
     val centroids = comps.groupBy($"label", $"pos")

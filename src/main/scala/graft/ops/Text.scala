@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.Tables
 import OpsUtil._
+import Features._
 
 /** Text-analysis operators for an LLM-data pipeline (builder prompt:
   * language-ID, quality scoring, token counting, document fingerprinting),
@@ -16,21 +17,12 @@ import OpsUtil._
   */
 object Text {
 
-  /** Whitespace tokens with empties dropped (split is regex-based — the
-    * BPE-ish tokenizer boundary is `\s+` here; empties filtered so the
-    * leading-separator case matches DuckDB's string_split_regex). */
-  private def tokens(text: Column): Column =
-    filter(split(text, "\\s+"), t => length(t) > 0)
-
-  private val tokensSql =
-    "list_filter(string_split_regex(text, '\\s+'), t -> length(t) > 0)"
-
   /** Token counting per language: doc counts, token totals, distinct
     * vocabulary size, and mean token length (exact-int division). */
   val q30TokenStats: Q = (spark, dir) => {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
-      .withColumn("toks", tokens($"text"))
+      .withColumn("toks", wsTokens($"text"))
       .withColumn("n_tokens", size($"toks"))
       .withColumn("char_len",
         aggregate($"toks", lit(0), (acc, t) => acc + length(t)))
@@ -55,7 +47,7 @@ object Text {
     import spark.implicits._
     val stop = Seq("the", "a", "of", "and", "to", "in", "is")
     val scored = Tables.documents(spark, dir)
-      .withColumn("toks", tokens($"text"))
+      .withColumn("toks", wsTokens($"text"))
       .withColumn("n_tokens", size($"toks"))
       .withColumn("n_stop",
         size(filter($"toks", t => t.isin(stop: _*))))
@@ -80,20 +72,10 @@ object Text {
     * labeled lang column. */
   val q32LangId: Q = (spark, dir) => {
     import spark.implicits._
-    val markers: Seq[(String, Seq[String])] = Seq(
-      "en" -> Seq("the", "and", "of", "to", "a", "is", "in"),
-      "de" -> Seq("der", "die", "das", "und", "ist", "ein"),
-      "fr" -> Seq("le", "la", "les", "et", "est", "un"),
-      "es" -> Seq("el", "los", "las", "y", "es", "un"),
-      "zh" -> Seq("的", "是", "在", "了", "和"))
-    val withScores = markers.foldLeft(
-      Tables.documents(spark, dir).withColumn("toks", tokens(lower($"text")))) {
-      case (df, (l, words)) =>
-        df.withColumn(s"s_$l", size(filter($"toks", t => t.isin(words: _*))))
-    }
-    val best = markers.map { case (l, _) => col(s"s_$l") }
+    val withScores = langScores(Tables.documents(spark, dir))
+    val best = langMarkers.map { case (l, _) => col(s"s_$l") }
       .reduce((a, b) => greatest(a, b))
-    val predicted = markers.foldRight(lit("unknown"): Column) {
+    val predicted = langMarkers.foldRight(lit("unknown"): Column) {
       case ((l, _), alt) => when(col(s"s_$l") === best && best > 0, l).otherwise(alt)
     }
     withScores
@@ -173,7 +155,7 @@ object Text {
   val oracle: Map[String, String] = Map(
     "q30_token_stats" ->
       s"""WITH docs AS (
-         |  SELECT lang, $tokensSql AS toks FROM documents
+         |  SELECT lang, $wsTokensSql AS toks FROM documents
          |), base AS (
          |  SELECT lang, length(toks) AS n_tokens,
          |    CAST(list_reduce(list_prepend(0, list_transform(toks,
@@ -199,7 +181,7 @@ object Text {
          |      t -> t IN ('the','a','of','and','to','in','is'))) AS n_stop,
          |    length(text) - length(regexp_replace(text, '[.!?,;]', '', 'g'))
          |      AS n_punct
-         |  FROM (SELECT source, text, $tokensSql AS toks FROM documents)
+         |  FROM (SELECT source, text, $wsTokensSql AS toks FROM documents)
          |)
          |SELECT source,
          |  CASE WHEN n_tokens < 10 THEN 'too_short'

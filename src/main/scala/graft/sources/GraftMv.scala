@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -233,34 +233,16 @@ object GraftMv {
       : DataFrame =
     finalizeRows(name, composite, summed(deltas, composite, decimalSum))
 
-  /** Materialize `rows` as data files INSIDE `root` (not yet
-    * committed): written through a VERSIONED scratch dir (with the
-    * MV's quality properties mirrored in) so per-file stats/blooms
-    * ride into the final manifest — same pattern as the OPTIMIZE
-    * rewrite. Files a failed commit leaves behind are unreferenced
-    * and vacuum reclaims them — exactly the compact crash story. */
+  /** Materialize `rows` as data files INSIDE `root`, not yet
+    * committed — the OPTIMIZE rewrite's landing step
+    * ([[GraftVersions.land]]). */
   private def stageRows(root: Path, rows: DataFrame)
-      : Seq[GraftVersions.FileEntry] = {
-    val tmp = Files.createTempDirectory(root, "_mv")
-    try {
-      GraftVersions.enable(tmp)
-      GraftTableMeta.write(tmp, GraftTableMeta.read(root))
+      : Seq[GraftVersions.FileEntry] =
+    GraftVersions.land(root, "_mv") { tmp =>
       rows.coalesce(1).sortWithinPartitions("doc_id")
         .write.format("graft.sources.GraftDocsSource")
         .option("path", tmp.toString).mode("append").save()
-      val staged = GraftVersions.latest(tmp).map(_.entries).getOrElse(Nil)
-      val tag = java.util.UUID.randomUUID.toString.replace("-", "")
-      staged.zipWithIndex.map { case (e, i) =>
-        val name = f"part-$i%05d-$tag.tsv"
-        Files.move(tmp.resolve(e.name), root.resolve(name),
-          StandardCopyOption.ATOMIC_MOVE)
-        e.copy(name = name)
-      }
-    } finally {
-      try org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      catch { case _: java.io.IOException => () }
-    }
-  }
+    }(identity)
 
   /** Land `rows` as the MV's new live snapshot in ONE commit tagged
     * with the source watermark; returns the commit plus the landed

@@ -962,14 +962,7 @@ object GraftVersions {
         (df.repartition(n, fileId).sortWithinPartitions(z),
           Map("zorderFanout" -> fan.encode))
     }
-    val tmp = Files.createTempDirectory(root, "_compact")
-    try {
-      // the rewrite lands in a VERSIONED scratch dir so its commit
-      // records per-file min/max stats; those stats (and blooms — the
-      // table's quality properties are mirrored into the scratch dir)
-      // ride along into the compact manifest under the final names
-      enable(tmp)
-      GraftTableMeta.write(tmp, GraftTableMeta.read(root))
+    land(root, "_compact") { tmp =>
       live.write.format("graft.sources.GraftDocsSource")
         .option("path", tmp.toString).options(writeOpts)
         // rewrite semantics: identity cells pass through, generated
@@ -977,20 +970,7 @@ object GraftVersions {
         // rows must not trip the explicit-values guard
         .option("graftRewrite", "true")
         .mode("append").save()
-      val staged = latest(tmp).map(_.entries).getOrElse(Nil)
-      // land beside the originals under collision-free names
-      val tag = java.util.UUID.randomUUID.toString.replace("-", "")
-      val landed = staged.zipWithIndex.map { case (e, i) =>
-        val name = f"part-$i%05d-$tag.tsv"
-        Files.move(tmp.resolve(e.name), root.resolve(name),
-          StandardCopyOption.ATOMIC_MOVE)
-        // copy() carries EVERY per-file fact (stats, bloom, rows,
-        // bytes) — a field-list here silently drops the next fact we
-        // add (the bloom-drop regression of wave 5, pinned in
-        // VersioningSpec). dv is structurally absent: the rewrite read
-        // only live rows, so the masks are materialized away.
-        e.copy(name = name)
-      }
+    } { landed =>
       try advance(root, "compact", removed = None, added = landed,
         dataChange = false, readVersion = Some(readVersion))
       catch {
@@ -1000,6 +980,38 @@ object GraftVersions {
           // (vacuum reclaims them); re-run against the new live state.
           compact(spark, root, targetFiles, maxAttempts - 1, clusterBy)
       }
+    }
+  }
+
+  /** Land a rewrite inside `root` (not yet committed): `write` appends
+    * the rows into a VERSIONED scratch dir, so its commit records
+    * per-file min/max stats; those stats (and blooms — the table's
+    * quality properties are mirrored into the scratch dir) ride along
+    * as the staged entries move beside the originals under
+    * collision-free `part-%05d-<uuid>.tsv` names. `commit` receives the
+    * landed entries; the scratch dir is deleted however it exits. Files
+    * a failed commit leaves behind are unreferenced, and vacuum reclaims
+    * them — a crash mid-rewrite never corrupts a snapshot. */
+  private[sources] def land[T](root: Path, scratchPrefix: String)(
+      write: Path => Unit)(commit: Seq[FileEntry] => T): T = {
+    val tmp = Files.createTempDirectory(root, scratchPrefix)
+    try {
+      enable(tmp)
+      GraftTableMeta.write(tmp, GraftTableMeta.read(root))
+      write(tmp)
+      val staged = latest(tmp).map(_.entries).getOrElse(Nil)
+      val tag = java.util.UUID.randomUUID.toString.replace("-", "")
+      commit(staged.zipWithIndex.map { case (e, i) =>
+        val name = f"part-$i%05d-$tag.tsv"
+        Files.move(tmp.resolve(e.name), root.resolve(name),
+          StandardCopyOption.ATOMIC_MOVE)
+        // copy() carries EVERY per-file fact (stats, bloom, rows,
+        // bytes) — a field-list here silently drops the next fact we
+        // add (the bloom-drop regression of wave 5, pinned in
+        // VersioningSpec). dv is structurally absent: the rewrite read
+        // only live rows, so the masks are materialized away.
+        e.copy(name = name)
+      })
     } finally {
       try org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
       catch { case _: java.io.IOException => () }
@@ -1052,24 +1064,14 @@ object GraftVersions {
         names.map(n => GraftFiles.baseName(n)): _*))
       .drop("_file")
       .coalesce(math.max(1, names.size))
-    val tmp = Files.createTempDirectory(root, "_eqmat")
-    try {
-      enable(tmp)
-      GraftTableMeta.write(tmp, GraftTableMeta.read(root))
+    land(root, "_eqmat") { tmp =>
       live.write.format("graft.sources.GraftDocsSource")
         .option("path", tmp.toString)
         // rewrite semantics (see compact): existing identity values
         // pass through rather than tripping the GENERATED ALWAYS guard
         .option("graftRewrite", "true")
         .mode("append").save()
-      val staged = latest(tmp).map(_.entries).getOrElse(Nil)
-      val tag = java.util.UUID.randomUUID.toString.replace("-", "")
-      val landed = staged.zipWithIndex.map { case (e, i) =>
-        val name = f"part-$i%05d-$tag.tsv"
-        Files.move(tmp.resolve(e.name), root.resolve(name),
-          StandardCopyOption.ATOMIC_MOVE)
-        e.copy(name = name)
-      }
+    } { landed =>
       try Some(advance(root, "eq-materialize", removed = Some(names.toSet),
         added = landed, dataChange = false,
         readVersion = Some(snap.version)))
@@ -1080,9 +1082,6 @@ object GraftVersions {
           // the new live state
           materializeEqMasks(spark, root, maxAttempts - 1)
       }
-    } finally {
-      try org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      catch { case _: java.io.IOException => () }
     }
   }
 
@@ -1137,22 +1136,12 @@ object GraftVersions {
     val scoped = live.select(live.col("*"), col("_file"))
       .filter(col("_file").isin(names: _*)).drop("_file")
       .coalesce(math.max(targetFiles, 1))
-    val tmp = Files.createTempDirectory(root, "_compact")
-    try {
-      GraftVersions.enable(tmp)
-      GraftTableMeta.write(tmp, GraftTableMeta.read(root))
+    land(root, "_compact") { tmp =>
       scoped.write.format("graft.sources.GraftDocsSource")
         .option("path", tmp.toString)
         .option("graftRewrite", "true")
         .mode("append").save()
-      val staged = latest(tmp).map(_.entries).getOrElse(Nil)
-      val tag = java.util.UUID.randomUUID.toString.replace("-", "")
-      val landed = staged.zipWithIndex.map { case (e, i) =>
-        val name = f"part-$i%05d-$tag.tsv"
-        Files.move(tmp.resolve(e.name), root.resolve(name),
-          StandardCopyOption.ATOMIC_MOVE)
-        e.copy(name = name)
-      }
+    } { landed =>
       try advance(root, "compact", removed = Some(members.map(_.name).toSet),
         added = landed, dataChange = false,
         readVersion = Some(snap.version))
@@ -1161,9 +1150,6 @@ object GraftVersions {
           compactScoped(spark, root, column, value, targetFiles,
             maxAttempts - 1)
       }
-    } finally {
-      try org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      catch { case _: java.io.IOException => () }
     }
   }
 

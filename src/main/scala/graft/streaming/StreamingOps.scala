@@ -536,7 +536,7 @@ object StreamingOps {
         val spark = batch.sparkSession
         val flagged = batch.select(col("doc_id"), col("n_chars"),
             md5(col("text")).as("h"),
-            filter(split(col("text"), " "), t => length(t) > 0).as("w"))
+            graft.ops.Features.words(col("text")).as("w"))
           .withColumn("toks", size(col("w")).cast("long"))
           // in-batch keep-first, by arrival id within the micro-batch
           .withColumn("first_local", row_number().over(
@@ -544,7 +544,7 @@ object StreamingOps {
               .partitionBy(col("h")).orderBy(col("doc_id"))) === 1)
           .withColumn("quality_keep",
             col("n_chars") >= 200
-              && expr("size(array_distinct(w)) * 1000000 div size(w)") >= 300000L
+              && graft.ops.Features.uniqueWordRatio >= 300000L
               && expr("aggregate(w, 0L, (a, x) -> a + length(x)) div size(w)")
                 .between(3L, 12L))
         val seenPath = s"$stateDir/seen"

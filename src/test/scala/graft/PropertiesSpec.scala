@@ -251,3 +251,121 @@ object OperatorProperties extends Properties("graft") {
         uniform && scaleInv && rkf1 == rkf2
     }
 }
+
+/** Properties of the shared feature rules ([[ops.Features]]) and of the
+  * driver-side multiset test, evaluated through Spark against plain
+  * Scala reference implementations. Each sample is one small local
+  * frame, so a property costs one or two tiny jobs per sample. */
+object FeatureProperties extends Properties("features") {
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.functions.col
+  import org.apache.spark.sql.types._
+
+  override def overrideParameters(p: org.scalacheck.Test.Parameters) =
+    p.withMinSuccessfulTests(25)
+
+  private def spark = SparkSpec.session
+
+  private def frame(schema: StructType, rows: Seq[Row]) =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  private val sep = Gen.oneOf(" ", "  ", "\t", "\n", " \t ", "\r\n")
+  private val word = Gen.oneOf("the", "π∂", "naïve", "的是", "a", "b1", "x.y")
+  private val text: Gen[String] = for {
+    lead <- Gen.oneOf("", " ", "\t", "\n ")
+    ws <- Gen.listOf(Gen.zip(word, sep))
+    trail <- Gen.oneOf("", " ", "  ", "\n")
+  } yield lead + ws.map { case (w, s) => w + s }.mkString + trail
+
+  property("words and wsTokens == split(\" \") and split(\"\\\\s+\") without empties") =
+    forAll(Gen.listOf(text)) { texts =>
+      val got = frame(StructType(Seq(StructField("text", StringType))),
+          texts.map(Row(_)))
+        .select(ops.Features.words(col("text")),
+          ops.Features.wsTokens(col("text")))
+        .collect().map(r => (r.getSeq[String](0), r.getSeq[String](1)))
+        .toSeq
+      got == texts.map(t => (t.split(" ").filter(_.nonEmpty).toSeq,
+        t.split("\\s+").filter(_.nonEmpty).toSeq))
+    }
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+
+  property("minhash == driver-side md5 salt-and-chunk signature") =
+    forAll(Gen.nonEmptyListOf(Gen.nonEmptyListOf(
+        Gen.listOfN(3, word).map(_.mkString(" "))))) { docs =>
+      val sets = docs.map(_.distinct)
+      val shingles = frame(
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("s", StringType))),
+        for ((ss, d) <- sets.zipWithIndex; s <- ss) yield Row(d.toLong, s))
+      val got = ops.Features.minhash(shingles).collect()
+        .map(r => r.getLong(0) -> (1 to 8).map(r.getLong)).toMap
+      val ref = sets.zipWithIndex.map { case (ss, d) =>
+        d.toLong -> (0 until 8).map { j =>
+          ss.map(s => java.lang.Long.parseLong(
+            md5Hex(s"${j / 4}:$s").substring(8 * (j % 4), 8 * (j % 4) + 8),
+            16)).min
+        }
+      }.toMap
+      got == ref
+    }
+
+  private val coord: Gen[Float] = Gen.frequency(
+    6 -> Gen.choose(-2.0f, 2.0f), 1 -> Gen.const(-0.0f),
+    1 -> Gen.const(0.0f), 1 -> Gen.choose(-1, 1).map(_ / 1000.0f))
+
+  property("quantize == floor(x * 1000) + offset, negatives and -0.0 included") =
+    forAll(Gen.listOf(Gen.listOf(coord))) { vecs =>
+      val got = frame(
+        StructType(Seq(StructField("e", ArrayType(FloatType, false)))),
+        vecs.map(v => Row(v)))
+        .select(ops.Features.quantize(col("e"), 0),
+          ops.Features.quantize(col("e"), 1000))
+        .collect().map(r => (r.getSeq[Long](0), r.getSeq[Long](1))).toSeq
+      got == vecs.map(v => (v.map(x => math.floor(x.toDouble * 1000).toLong),
+        v.map(x => math.floor(x.toDouble * 1000).toLong + 1000)))
+    }
+
+  /** Rows over binary, decimal and double columns drawn from tiny
+    * domains, so duplicates, -0.0 vs 0.0 and NaN all occur. */
+  private val row: Gen[Row] = for {
+    bin <- Gen.option(Gen.listOfN(2, Gen.choose(0, 2).map(_.toByte)))
+    dec <- Gen.option(Gen.choose(-3, 3).map(i => new java.math.BigDecimal(i)
+      .movePointLeft(1)))
+    dbl <- Gen.option(Gen.oneOf(0.0, -0.0, 1.5, Double.NaN))
+  } yield Row(bin.map(_.toArray).orNull, dec.orNull,
+    dbl.map(Double.box).orNull)
+
+  private val rowSchema = StructType(Seq(
+    StructField("bin", BinaryType), StructField("dec", DecimalType(10, 2)),
+    StructField("dbl", DoubleType)))
+
+  /** `b` is a permutation of `a`, -0.0 flipped to 0.0 and back, and
+    * half the time one row replaced — equal and unequal multisets both
+    * occur often. */
+  private val framePair: Gen[(Seq[Row], Seq[Row])] = for {
+    a <- Gen.listOf(row)
+    keys <- Gen.listOfN(a.size, Gen.choose(0, Int.MaxValue))
+    edit <- Gen.option(Gen.zip(Gen.choose(0, 1000), row))
+  } yield {
+    val shuffled = a.zip(keys).sortBy(_._2).map(_._1)
+    val flipped = shuffled.map(r => Row.fromSeq(r.toSeq.map {
+      case d: Double if d == 0.0 => -d
+      case v => v
+    })).toSeq
+    a -> (edit match {
+      case Some((i, r)) if a.nonEmpty => flipped.updated(i % a.size, r)
+      case _ => flipped
+    })
+  }
+
+  property("sameRowsLocal == two-way exceptAll on binary/decimal/double frames") =
+    forAll(framePair) { case (ra, rb) =>
+      val a = frame(rowSchema, ra); val b = frame(rowSchema, rb)
+      ops.OpsUtil.sameRowsLocal(a, b) ==
+        (a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    }
+}
